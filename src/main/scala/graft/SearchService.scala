@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.functions.{gf, VectorKernels}
 import graft.index.IvfIndex
 import graft.sources.ParquetStore
@@ -42,38 +43,44 @@ object SearchService {
     * centroid_id); `documents` carries (document_id, payload columns).
     * Returns count rows from `offset` in (similarity DESC, document_id
     * ASC) order: per-document best-chunk similarity (A6), paginated
-    * top-k (T2/T3), payload backfill join (J5). */
+    * top-k (T2/T3), payload backfill (J5) with left-join semantics — a
+    * hit whose document is missing keeps null payload columns, and a
+    * document id stored twice fans its hit out.
+    *
+    * Cost: a serving probe (nprobe ≤ 8) runs two Spark jobs, the page
+    * and the backfill point read. The result is a driver-held local
+    * frame, so collecting it runs none. */
   def search(spark: SparkSession, indexed: DataFrame, documents: DataFrame,
       model: IvfIndex.Model, req: SearchRequest,
       vecCol: String = "embedding", dim: Int = 64): DataFrame = {
     val p = clamp(req, model.k)
     val page = pageGraph(indexed, model, p, req.text, vecCol, dim)
+    val hits = Jobs.step(spark, "search/page")(page.collect())
     // J5 backfill, reference-shaped (database.go WHERE id IN (...)): the
-    // page is ≤ count rows by construction, so collect the hit list and
-    // push an IN-list filter down to the doc store scan instead of
-    // building a broadcast of the whole documents table per query.
-    val hits = page.collect()
-    if (hits.isEmpty) {
-      page.join(documents, Seq("document_id"), "left")
-    } else {
-      val ids = hits.map(_.getLong(0)).toSeq
-      // LocalRelation, NOT sc.parallelize: the parallelize-backed frame
-      // schedules its own task round just to re-emit ≤count driver-held
-      // rows, which profiled as the single largest slice of per-query
-      // latency (ServeProbe: backfill 182 ms of 286 ms at sf0.1). Local
-      // rows broadcast straight from the driver, so the backfill is one
-      // stage over the IN-pushed documents point-read.
-      val hitDf = spark.createDataFrame(
-        java.util.Arrays.asList(hits: _*), page.schema)
-      // coalesce(1)+sortWithinPartitions, NOT orderBy: a global sort
-      // range-partitions, and RangePartitioning runs a SAMPLING job over
-      // the input first — two extra job rounds to order ≤count rows.
-      // One partition sorted locally is the same total order.
-      hitDf.join(documents.filter(col("document_id").isin(ids: _*)),
-        Seq("document_id"), "left")
-        .coalesce(1)
-        .sortWithinPartitions(col("similarity").desc, col("document_id").asc)
+    // page is ≤ count rows by construction, so push its ids as an IN-list
+    // filter down to the doc store scan, collect the matching rows, and
+    // merge them onto the page on the driver. A cluster-side join would
+    // cost two more jobs per query: a broadcast of the filtered
+    // documents, then a one-task stage to order ≤ count rows.
+    val payloadCols = documents.columns.filterNot(_ == "document_id")
+    val payload =
+      if (hits.isEmpty) Map.empty[Long, Array[Row]]
+      else Jobs.step(spark, "search/backfill") {
+        documents.filter(col("document_id").isin(hits.map(_.getLong(0)).toSeq: _*))
+          .select(col("document_id").cast("long") +: payloadCols.map(col): _*)
+          .collect()
+      }.groupBy(_.getLong(0))
+    val missing = Seq.fill(payloadCols.length)(null)
+    val rows = hits.toSeq.flatMap { h =>
+      payload.get(h.getLong(0)) match {
+        case Some(docs) => docs.toSeq.map(d => Row.fromSeq(h.toSeq ++ d.toSeq.tail))
+        case None => Seq(Row.fromSeq(h.toSeq ++ missing))
+      }
     }
+    val schema = StructType(page.schema.fields ++ payloadCols.map(c =>
+      documents.schema(c).copy(nullable = true)))
+    // LocalRelation: the rows are already on the driver in page order
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** Request-level TTL cache + singleflight in front of the read path —
@@ -123,21 +130,18 @@ object SearchService {
       .offset(p.offset) // T3: native offset — no window pass
   }
 
-  /** Low-latency single-query shape: identical semantics to [[search]],
-    * built as ONE execution — the ≤count page joins a BROADCAST of the
-    * documents side, so there is no collect-then-replan round trip.
+  /** Single-query shape with [[search]]'s semantics, built as ONE
+    * execution: the ≤count page joins a BROADCAST of the documents side
+    * inside the plan, with no collect-then-replan round trip.
     *
-    * When to use which (measured, local[32] sf0.1, ServeProbe): Spark's
-    * per-query floor is one physical-planning pass (~35 ms) plus one
-    * job round (~60 ms) regardless of data size. [[search]] pays both
-    * TWICE (page job, then IN-pushdown backfill job) → ~185 ms/query;
-    * this fused shape pays them once → ~135 ms/query. The price is the
-    * backfill scan shape: the documents side broadcasts WHOLE, with no
-    * IN-list pushdown, so it is only right when the serving payload
-    * projection is dimension-sized (persist it hot). Against a 100 TB
-    * document table keep [[search]] — its backfill is a pushed-down
-    * point read that never scans — or better, amortize the floor across
-    * a request queue with [[searchBatch]] (~24 ms/query at batch 32). */
+    * Cost: collecting the result runs two Spark jobs, the broadcast of
+    * the documents side and the page with its join — as many as
+    * [[search]]. Unlike [[search]], the documents side broadcasts WHOLE,
+    * with no IN-list pushdown, so it is only right when the payload
+    * projection is small and persisted hot. Against a large document
+    * table keep [[search]], whose backfill is a pushed-down point read,
+    * or amortize the per-query planning and job floor across a request
+    * queue with [[searchBatch]]. */
   def searchHot(spark: SparkSession, indexed: DataFrame, documents: DataFrame,
       model: IvfIndex.Model, req: SearchRequest,
       vecCol: String = "embedding", dim: Int = 64): DataFrame = {
@@ -309,11 +313,19 @@ object SearchService {
     // distributed delete: victims flow to their list's rewrite task via
     // a centroid-keyed join — a document with a million chunks never
     // lands its chunk ids on the driver (ADVICE r4)
-    val removed = graft.sources.IvfBinarySource.delete(spark, indexPath, victims)
-    val doomed = docIds.toSeq.toDF(docStore.keyCol).localCheckpoint(true)
-    docStore.deleteKeys(doomed)
-    chunkStore.deleteKeys(doomed)
+    val removed = Jobs.step(spark, "delete/index")(
+      graft.sources.IvfBinarySource.delete(spark, indexPath, victims))
+    val doomed = Jobs.step(spark, "delete/victims")(
+      docIds.toSeq.toDF(docStore.keyCol).localCheckpoint(true))
+    deleteRows(spark, docStore, chunkStore, doomed)
     removed
+  }
+
+  /** The relational half of the cascade, each store's rewrite named. */
+  private def deleteRows(spark: SparkSession, docStore: ParquetStore,
+      chunkStore: ParquetStore, doomed: DataFrame): Unit = {
+    Jobs.step(spark, "delete/doc-store")(docStore.deleteKeys(doomed))
+    Jobs.step(spark, "delete/chunk-store")(chunkStore.deleteKeys(doomed))
   }
 
   /** [[deleteDocuments]] with the doomed doc ids as a DataFrame — the
@@ -330,14 +342,16 @@ object SearchService {
       broadcastRowLimit: Long = graft.operators.DedupOps.BroadcastRowLimit)
       : Long = {
     import graft.operators.DedupOps
-    val doomed = doomedDocs
+    def victimStep[A](body: => A): A = Jobs.step(spark, "delete/victims")(body)
+    val doomed = victimStep(doomedDocs
       .select(col(doomedDocs.columns.head).cast("long").as("document_id"))
-      .distinct().localCheckpoint(true)
+      .distinct().localCheckpoint(true))
     try {
-      val bounds = doomed.agg(min("document_id"), max("document_id")).collect()(0)
+      val bounds = victimStep(
+        doomed.agg(min("document_id"), max("document_id")).collect()(0))
       if (bounds.isNullAt(0)) return 0L
       val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val nDoomed = doomed.count() // free once pinned
+      val nDoomed = victimStep(doomed.count()) // cheap once pinned
       val base = graft.streaming.Streams.ChunkVecIdBase
       val victims = spark.read
         .format(graft.sources.IvfBinarySource.FORMAT).load(indexPath)
@@ -345,10 +359,9 @@ object SearchService {
         .filter(col("vec_id").between(lo * base, hi * base + (base - 1)))
         .join(DedupOps.gateKnown(doomed, nDoomed, broadcastRowLimit),
           expr(s"vec_id div $base") === col("document_id"), "left_semi")
-      val removed =
-        graft.sources.IvfBinarySource.delete(spark, indexPath, victims)
-      docStore.deleteKeys(doomed)
-      chunkStore.deleteKeys(doomed)
+      val removed = Jobs.step(spark, "delete/index")(
+        graft.sources.IvfBinarySource.delete(spark, indexPath, victims))
+      deleteRows(spark, docStore, chunkStore, doomed)
       removed
     } finally DedupOps.releaseCheckpoint(doomed)
   }

@@ -12,7 +12,8 @@ import graft.index.IvfIndex
   *   1. graph+plan   — DataFrame construction through executedPlan
   *                     (analysis, optimization, physical planning)
   *   2. page job     — probe + pruned scan + per-doc max + top-k collect
-  *   3. backfill job — IN-list documents join for the ≤count hit page
+  *   3. backfill job — IN-list documents point read for the ≤count hit
+  *                     page (search merges it onto the page on the driver)
   *
   * plus end-to-end wall per variant (AQE on/off). The reference serves
   * a query in ~10 ms because it is one warm process touching one mmap'd
@@ -78,13 +79,7 @@ object ServeProbe {
       val hits = page.collect()
       pageMs += ms(t0)
       t0 = System.nanoTime()
-      val ids = hits.map(_.getLong(0)).toSeq
-      val hitDf = spark.createDataFrame(
-        java.util.Arrays.asList(hits: _*), page.schema)
-      val back = hitDf.join(docs.filter(col("document_id").isin(ids: _*)),
-          Seq("document_id"), "left")
-        .coalesce(1)
-        .sortWithinPartitions(col("similarity").desc, col("document_id").asc)
+      val back = docs.filter(col("document_id").isin(hits.map(_.getLong(0)).toSeq: _*))
       back.queryExecution.executedPlan
       backPlanMs += ms(t0)
       t0 = System.nanoTime()

@@ -3,6 +3,7 @@ package graft.server
 import java.io.{ByteArrayOutputStream, InputStream, OutputStream}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
@@ -13,8 +14,9 @@ import com.github.luben.zstd.{ZstdInputStream, ZstdOutputStream}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.SearchService
+import graft.{Jobs, SearchService}
 import graft.functions.{gf, EmbedProvider, GenerateProvider, NoopGenerateProvider}
 import graft.index.IvfIndex
 import graft.sources.{IvfBinarySource, ParquetStore}
@@ -47,9 +49,16 @@ import graft.streaming.Streams
   *
   * Scale notes: this is a THIN shell — every data decision stays in the
   * facades (nprobe-pruned scans, IN-pushed backfills, bucketed upserts,
-  * distributed delete victims). The server itself holds only the IVF
-  * model (centroid matrix, persisted under dataDir/model so restarts
-  * serve the lists the writes landed in) and a doc-id counter. Tenant
+  * distributed delete victims). The server itself holds the IVF model
+  * (centroid matrix, persisted under dataDir/model so restarts serve the
+  * lists the writes landed in), a doc-id counter, and a read view: the
+  * resolved documents frame and the decoded index frame, which every read
+  * reuses until a write drops it. The view holds plans and a file
+  * listing, never data. Rebuilding it after a write reads the doc store
+  * with the schema captured on its first resolve, so a plain search
+  * costs two Spark jobs (page, backfill) instead of also re-merging every
+  * parquet footer per request. Each Spark action a handler runs is named
+  * `"<route>/<step>"` ([[graft.Jobs]]). Tenant
   * scoping is size-gated, not driver-bounded: owner/category search
   * filters ride a gateKnown semi join (broadcast only when the scope is
   * small), and owner/category deletes keep their victim set a DataFrame
@@ -69,12 +78,41 @@ final class RestServer(spark: SparkSession, dataDir: String,
   private val docStore = ParquetStore(s"$dataDir/documents", "document_id", nBuckets = 16)
   private val chunkStore = ParquetStore(s"$dataDir/chunks", "doc_id", nBuckets = 16)
 
-  // the one piece of server-held state beyond config: the centroid
-  // matrix (driver-side, nLists × dim floats) and the id counter. Both
-  // rebuild from storage on restart.
+  // server-held state beyond config: the centroid matrix (driver-side,
+  // nLists × dim floats) and the id counter, both rebuilt from storage on
+  // restart, and the read view.
   @volatile private var model: Option[IvfIndex.Model] = None
   private val nextId = new AtomicLong(1L)
   private val writeLock = new Object
+
+  @volatile private var view: Option[RestServer.ReadView] = None
+  // bumped by every write, so a view resolved while a write ran is not
+  // installed over the write's result; guarded by viewLock
+  private var viewGen = 0L
+  private val viewLock = new Object
+  // the doc store's columns, captured on the first resolve: the server is
+  // the store's only writer and always writes the same columns, so a
+  // later resolve skips the footer-merging schema job
+  @volatile private var docSchema: Option[StructType] = None
+
+  private def readView(): RestServer.ReadView = view.getOrElse {
+    val gen = viewLock.synchronized(viewGen)
+    val docs = Jobs.step(spark, "view/doc-schema")(docStore.read(spark, docSchema))
+    docSchema = Some(docs.schema)
+    val v = RestServer.ReadView(docs, spark.read.format(IvfBinarySource.FORMAT).load(indexDir)
+      .select(col("vec_id"),
+        expr(s"vec_id div ${Streams.ChunkVecIdBase}").as("document_id"),
+        gf.dequantize_vec(col("qvec")).as("embedding"), col("centroid_id")))
+    viewLock.synchronized { if (viewGen == gen) view = Some(v) }
+    v
+  }
+
+  /** Runs a store mutation under the write lock and drops the read view
+    * afterwards, also when the write fails part-way. */
+  private def write[A](body: => A): A = writeLock.synchronized {
+    try body
+    finally viewLock.synchronized { viewGen += 1; view = None }
+  }
 
   private def nonEmptyDir(d: String): Boolean = {
     val f = new java.io.File(d)
@@ -83,16 +121,17 @@ final class RestServer(spark: SparkSession, dataDir: String,
   private def hasIndex: Boolean = nonEmptyDir(indexDir)
 
   private def bootstrapFromStorage(): Unit = if (hasIndex) {
-    val docs = docStore.read(spark)
-    nextId.set(docs.agg(max("document_id")).collect()(0).getLong(0) + 1)
+    nextId.set(Jobs.step(spark, "bootstrap/id-counter")(
+      readView().docs.agg(max("document_id")).collect()(0).getLong(0) + 1))
     // serve the SAME model the corpus was indexed under: upload persists
     // the trained centroids (the reference's DB keeps centroid rows for
     // exactly this — restarts don't re-derive the index, dnc.go /
     // database.go persistence path), so a restart probes the lists the
     // writes landed in.
     model =
-      if (nonEmptyDir(modelDir)) Some(IvfIndex.loadModel(spark, modelDir))
-      else {
+      if (nonEmptyDir(modelDir))
+        Some(Jobs.step(spark, "bootstrap/model")(IvfIndex.loadModel(spark, modelDir)))
+      else Jobs.step(spark, "bootstrap/model") {
         // pre-model-file layout fallback: quantized member means, keyed
         // by centroid_id (a delete-emptied list must not shift the rows
         // above it — the matrix row IS the stored centroid_id)
@@ -118,10 +157,12 @@ final class RestServer(spark: SparkSession, dataDir: String,
   server.createContext("/api/delete/owner", json(handleDeleteOwner))
   server.createContext("/api/delete/category", json(handleDeleteCategory))
   server.createContext("/api/categories", json(handleCategories))
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
+  // held so stop() can end its (non-daemon) threads
+  private val workers = Executors.newFixedThreadPool(8)
+  server.setExecutor(workers)
 
   def start(): Int = { server.start(); server.getAddress.getPort }
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = { server.stop(0); workers.shutdown() }
   def port: Int = server.getAddress.getPort
 
   // ---------- middleware (main.go:129-166) ----------
@@ -226,10 +267,14 @@ final class RestServer(spark: SparkSession, dataDir: String,
 
   // ---------- /api/upload (server/upload.go) ----------
 
-  private def handleUpload(req: JsonNode): (Int, String) = writeLock.synchronized {
+  private def handleUpload(req: JsonNode): (Int, String) = {
     val docsNode = req.get("documents")
     if (docsNode == null || !docsNode.isArray || docsNode.isEmpty)
-      return (400, """{"error":"no documents provided"}""")
+      (400, """{"error":"no documents provided"}""")
+    else write(upload(req, docsNode))
+  }
+
+  private def upload(req: JsonNode, docsNode: JsonNode): (Int, String) = {
     val owner = textOr(req, "owner", "")
     val category = textOr(req, "category", "")
     // reference upload.go:121-123: prefix joins the section text before
@@ -249,33 +294,37 @@ final class RestServer(spark: SparkSession, dataDir: String,
     // pin the embedded batch: the index write, the chunk append, and (on
     // cold bootstrap) IvfIndex.build each run an action over this frame,
     // and re-deriving it would re-invoke the embed provider per action
-    val emb = Streams.chunkEmbed(df, ctxNum, dim, embedProvider,
-      chunkPrefix = "search_document: " + prefix).localCheckpoint(true)
+    val emb = Jobs.step(spark, "upload/embed")(Streams.chunkEmbed(df, ctxNum, dim,
+      embedProvider, chunkPrefix = "search_document: " + prefix).localCheckpoint(true))
     val assigned = model match {
       case Some(m) => IvfIndex.assign(emb, "embedding", m)
       case None =>
         // cold bootstrap: the first batch trains the model it is
         // assigned against (the reference boots with RefreshCentroids),
         // and the model persists so a restart serves the same lists
-        val (a, m) = IvfIndex.build(emb, "embedding", indexParams)
-        IvfIndex.saveModel(spark, m, modelDir)
+        val (a, m) = Jobs.step(spark, "upload/model-build") {
+          val built = IvfIndex.build(emb, "embedding", indexParams)
+          IvfIndex.saveModel(spark, built._2, modelDir)
+          built
+        }
         model = Some(m)
         a
     }
-    assigned
+    Jobs.step(spark, "upload/index-write")(assigned
       .select((col("doc_id") * Streams.ChunkVecIdBase + col("chunk_id"))
           .cast("long").as("vec_id"),
         col("qvec"), col("centroid_id").cast("int").as("centroid_id"))
-      .write.format(IvfBinarySource.FORMAT).mode("append").save(indexDir)
-    docStore.upsertOrCreate(
+      .write.format(IvfBinarySource.FORMAT).mode("append").save(indexDir))
+    Jobs.step(spark, "upload/doc-store")(docStore.upsertOrCreate(
       items.map { case (id, ext, js) => (id, ext, owner, category, js) }
-        .toDF("document_id", "external_id", "owner", "category", "doc_json"))
+        .toDF("document_id", "external_id", "owner", "category", "doc_json")))
     // chunk store is doc-id keyed for the delete cascade (deleteKeys
     // drops every chunk row of a doomed doc), so multi-chunk docs must
     // APPEND (S6), never upsert — upsert's merge keeps one row per key
     val chunks = assigned.select("doc_id", "chunk_id", "chunk")
-    if (chunkStore.isInitialized) chunkStore.append(chunks)
-    else chunkStore.create(chunks)
+    Jobs.step(spark, "upload/chunk-store")(
+      if (chunkStore.isInitialized) chunkStore.append(chunks)
+      else chunkStore.create(chunks))
     val ids = items.map(_._1).mkString("[", ",", "]")
     (200, s"""{"document_ids":$ids}""")
   }
@@ -297,27 +346,24 @@ final class RestServer(spark: SparkSession, dataDir: String,
       count = intOr(req, "count", 10),
       offset = intOr(req, "offset", 0),
       centroids = intOr(req, "centroids", 1))
-    val docs = docStore.read(spark)
+    val v = readView()
     val scoped = Seq(
       Option(owner).filter(_.nonEmpty).map(o => col("owner") === o),
       Option(category).filter(_.nonEmpty).map(c => col("category") === c)
-    ).flatten.foldLeft(docs)((d, p) => d.filter(p))
+    ).flatten.foldLeft(v.docs)((d, p) => d.filter(p))
     // tenant scope: size-gated semi filter — broadcast only when the
     // scope is small (DedupOps.gateKnown), sort-merge for a large owner;
     // a tenant whose corpus outgrows the broadcast limit must not OOM
     // the driver (the reference's WHERE owner_id=? has no such bound)
     val scopeIds =
       if (owner.isEmpty && category.isEmpty) None
-      else Some(scoped.select("document_id").localCheckpoint(true))
+      else Some(Jobs.step(spark, "search/scope")(
+        scoped.select("document_id").localCheckpoint(true)))
     val rows = try {
-      val base = spark.read.format(IvfBinarySource.FORMAT).load(indexDir)
-        .select(col("vec_id"),
-          expr(s"vec_id div ${Streams.ChunkVecIdBase}").as("document_id"),
-          gf.dequantize_vec(col("qvec")).as("embedding"), col("centroid_id"))
       val indexed = scopeIds match {
-        case None => base
-        case Some(ids) =>
-          RestServer.scopedIndex(base, ids, ids.count(), broadcastRowLimit)
+        case None => v.index
+        case Some(ids) => RestServer.scopedIndex(v.index, ids,
+          Jobs.step(spark, "search/scope")(ids.count()), broadcastRowLimit)
       }
       SearchService.search(spark, indexed,
         scoped.select("document_id", "external_id", "doc_json"),
@@ -352,16 +398,17 @@ final class RestServer(spark: SparkSession, dataDir: String,
     val docs =
       if (ids.isEmpty) spark.emptyDataFrame
         .withColumn("document_id", lit(0L)).withColumn("doc_json", lit(""))
-      else docStore.read(spark).select("document_id", "doc_json")
+      else readView().docs.select("document_id", "doc_json")
     val creq = SearchService.ChatRequest(text = text,
       prefix = textOr(req, "prefix", ""), history = history,
       documentIds = ids, documents = inline)
-    (200, SearchService.chatStream(spark, docs, creq, generateProvider))
+    (200, Jobs.step(spark, "chat/fetch")(
+      SearchService.chatStream(spark, docs, creq, generateProvider)))
   }
 
   // ---------- /api/delete/* (server/delete.go) ----------
 
-  private def deleteIds(ids: Set[Long]): (Int, String) = writeLock.synchronized {
+  private def deleteIds(ids: Set[Long]): (Int, String) = write {
     if (ids.nonEmpty)
       SearchService.deleteDocuments(spark, docStore, chunkStore, indexDir, ids)
     (200, "{}") // delete.go:79 responds `{}`
@@ -379,10 +426,10 @@ final class RestServer(spark: SparkSession, dataDir: String,
     * large tenant's id set never collects to the driver (the engine's
     * answer to delete.go's `DELETE WHERE owner_id=?`). */
   private def deleteWhere(pred: org.apache.spark.sql.Column): (Int, String) =
-    writeLock.synchronized {
+    write {
       if (docStore.isInitialized)
         SearchService.deleteDocuments(spark, docStore, chunkStore, indexDir,
-          docStore.read(spark).filter(pred).select("document_id"),
+          readView().docs.filter(pred).select("document_id"),
           broadcastRowLimit)
       (200, "{}")
     }
@@ -404,10 +451,10 @@ final class RestServer(spark: SparkSession, dataDir: String,
   private def handleCategories(req: JsonNode): (Int, String) = {
     if (!docStore.isInitialized) return (200, """{"category_names":[]}""")
     val owner = textOr(req, "owner", "")
-    val base = docStore.read(spark)
+    val base = readView().docs
     val scoped = if (owner.isEmpty) base else base.filter(col("owner") === owner)
-    val names = scoped.select("category").distinct()
-      .collect().map(_.getString(0)).sorted
+    val names = Jobs.step(spark, "categories/distinct")(scoped.select("category")
+      .distinct().collect()).map(_.getString(0)).sorted
     (200, s"""{"category_names":${names.map(quote).mkString("[", ",", "]")}}""")
   }
 
@@ -423,6 +470,10 @@ final class RestServer(spark: SparkSession, dataDir: String,
 }
 
 object RestServer {
+  /** What every read resolves from storage: the documents frame and the
+    * decoded index frame. */
+  private final case class ReadView(docs: DataFrame, index: DataFrame)
+
   /** Index rows semi-filtered to a tenant scope, size-gated
     * ([[graft.operators.DedupOps.gateKnown]]): broadcast only when the
     * scope is known-small; above the gate, a merge-hinted shuffled semi

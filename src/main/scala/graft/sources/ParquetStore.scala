@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
 
 /** Keyed mutable table on plain parquet — the engine's S6/S7/S8 sinks
   * (reference server/upload.go:286-313 bulk insert, dnc/dnc.go:223-247
@@ -42,10 +43,17 @@ final case class ParquetStore(path: String, keyCol: String, nBuckets: Int = 64) 
   def create(df: DataFrame): Unit =
     withBucket(df).write.mode("overwrite").option("compression", "zstd").partitionBy("_bucket").parquet(path)
 
-  def read(spark: SparkSession): DataFrame =
-    // mergeSchema: buckets written before a column was added still read
-    // (missing columns are null) — upserts may evolve the schema
-    spark.read.option("mergeSchema", "true").parquet(path).drop("_bucket")
+  /** The stored rows, without the bucket column. With no `schema`, the
+    * read merges every part file's footer (one Spark job) so buckets
+    * written before a column was added still read, missing columns as
+    * null. A caller that already knows the columns — say, from an earlier
+    * read of a store only it writes — passes them as `schema` and the
+    * read costs only a file listing. */
+  def read(spark: SparkSession, schema: Option[StructType] = None): DataFrame =
+    (schema match {
+      case Some(s) => spark.read.schema(s)
+      case None => spark.read.option("mergeSchema", "true")
+    }).parquet(path).drop("_bucket")
 
   /** S6 insert sink: append — new files land in their key's bucket dirs,
     * no existing file is touched. */

@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Integration gate for the REST serving tier: the reference's
@@ -290,6 +290,117 @@ class RestServerSpec extends AnyFunSuite {
       val cats = json(post2("/api/categories", "{}"))
       assert(cats.get("category_names").size() == 1)
     } finally s.stop()
+  }
+
+  /** A fresh server on its own data directory, with a POST helper that
+    * returns the parsed JSON body. */
+  private def withServer(name: String)(body: ((String, String) => JsonNode) => Unit): Unit = {
+    val s = new graft.server.RestServer(spark,
+      java.nio.file.Files.createTempDirectory(name).toString)
+    s.start()
+    def call(path: String, req: String) = {
+      val r = client.send(
+        HttpRequest.newBuilder(URI.create(s"http://localhost:${s.port}$path"))
+          .POST(HttpRequest.BodyPublishers.ofString(req)).build(),
+        HttpResponse.BodyHandlers.ofByteArray())
+      assert(r.statusCode() == 200, s"$path $req -> ${r.statusCode()}")
+      json(r)
+    }
+    try body(call) finally s.stop()
+  }
+
+  /** Descriptions of the Spark jobs `body` submits. */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        names.add(Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse("<unnamed>"))
+    }
+    org.apache.spark.graftsync.ListenerSync.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graftsync.ListenerSync.waitUntilEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    names.asScala.toSeq
+  }
+
+  test("a plain search runs two named Spark jobs, also right after a write") {
+    withServer("rest-jobs") { call =>
+      val docs = (1 to 30).map(i => s"""{"document":"job count doc $i"}""")
+        .mkString("[", ",", "]")
+      call("/api/upload", s"""{"owner":"o","documents":$docs}""")
+      val search = """{"text":"job count doc 7","count":10,"centroids":1}"""
+      call("/api/search", search) // first resolve of the read view
+      val warm = jobsOf(call("/api/search", search))
+      assert(warm == Seq("search/page", "search/backfill"),
+        s"a plain search must run the page and the backfill only: $warm")
+      // a write drops the view; the rebuild reads the doc store with the
+      // schema it already knows, so it adds no footer-merging job
+      call("/api/upload", """{"documents":[{"document":"one more doc"}]}""")
+      val rebuilt = jobsOf(call("/api/search", search))
+      assert(rebuilt == Seq("search/page", "search/backfill"),
+        s"the first search after a write must run the same two jobs: $rebuilt")
+    }
+  }
+
+  test("every write is visible to the next search, and scopes hold after a rebuild") {
+    withServer("rest-fresh") { call =>
+      def upload(owner: String, category: String, texts: String*) =
+        call("/api/upload", s"""{"owner":"$owner","category":"$category","documents":""" +
+          texts.map(t => s"""{"document":"$t"}""").mkString("[", ",", "]}"))
+          .get("document_ids").elements().asScala.map(_.asLong()).toSeq
+      // centroids -1 probes every list, so what a search sees does not
+      // depend on the model
+      def search(scope: String = "") = call("/api/search",
+        s"""{"text":"fresh view probe","count":20,"centroids":-1,"no_documents":true$scope}""")
+        .get("documents").elements().asScala.map(_.get("document_id").asLong()).toSet
+      def categories = call("/api/categories", "{}").get("category_names")
+        .elements().asScala.map(_.asText()).toSet
+      val a = upload("oa", "ca", "alpha one", "alpha two", "alpha three")
+      val b = upload("ob", "cb", "beta one", "beta two")
+      val c = upload("oc", "cc", "gamma one")
+      assert(search() == (a ++ b ++ c).toSet)
+      val d = upload("od", "cd", "delta one", "delta two")
+      assert(search() == (a ++ b ++ c ++ d).toSet, "upload not visible")
+      assert(categories == Set("ca", "cb", "cc", "cd"))
+      call("/api/delete/document", s"""{"document_id":${a.head}}""")
+      assert(search() == (a.tail ++ b ++ c ++ d).toSet, "delete/document not visible")
+      call("/api/delete/owner", """{"owner":"ob"}""")
+      assert(search() == (a.tail ++ c ++ d).toSet, "delete/owner not visible")
+      call("/api/delete/category", """{"category":"cc"}""")
+      assert(search() == (a.tail ++ d).toSet, "delete/category not visible")
+      assert(categories == Set("ca", "cd"), "categories read a stale view")
+      // owner and category scopes over the rebuilt view
+      assert(search(""","owner":"oa"""") == a.tail.toSet)
+      assert(search(""","category":"cd"""") == d.toSet)
+      assert(search(""","owner":"oa","category":"cd"""").isEmpty)
+      assert(search(""","owner":"ob"""").isEmpty)
+    }
+  }
+
+  test("stop() ends the request pool's threads") {
+    def running = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && !t.isDaemon).toSet
+    val before = running
+    val s = new graft.server.RestServer(spark,
+      java.nio.file.Files.createTempDirectory("rest-stop").toString)
+    s.start()
+    // requests that fail validation reach a pool thread but run no Spark work
+    (1 to 3).foreach { _ =>
+      client.send(HttpRequest.newBuilder(URI.create(s"http://localhost:${s.port}/api/search"))
+        .POST(HttpRequest.BodyPublishers.ofString("{}")).build(),
+        HttpResponse.BodyHandlers.ofByteArray())
+    }
+    val spawned = running -- before
+    assert(spawned.nonEmpty, "serving a request started no thread")
+    s.stop()
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (spawned.exists(_.isAlive) && System.nanoTime() < deadline) Thread.sleep(20)
+    val left = spawned.filter(_.isAlive).map(_.getName)
+    assert(left.isEmpty, s"threads still running after stop(): $left")
   }
 
   test("invalid method and malformed body map to the reference's statuses") {

@@ -104,6 +104,68 @@ class SearchServiceSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastHashJoin"), plan.take(400))
   }
 
+  test("search keeps left-join backfill semantics: missing ids null, duplicate ids fan out") {
+    val (indexed, model) = built
+    val docs = Tables.load(spark, SparkSuite.sf0001, "documents")
+      .select(col("doc_id").as("document_id"), col("lang"))
+    val req = SearchRequest("backfill gaps", count = 5, centroids = -1)
+    val full = SearchService.search(spark, indexed, docs, model, req).collect()
+    assert(full.length == 5 && full.forall(!_.isNullAt(2)))
+    val (gone, twice) = (full(1).getLong(0), full(3).getLong(0))
+    val holey = docs.filter(col("document_id") =!= gone)
+      .unionByName(docs.filter(col("document_id") === twice))
+    val got = SearchService.search(spark, indexed, holey, model, req)
+    assert(got.schema.fieldNames.toSeq == Seq("document_id", "similarity", "lang"))
+    assert(got.schema("lang").nullable)
+    val rows = got.collect()
+    // page order is kept; the duplicated id repeats in its place
+    assert(rows.map(_.getLong(0)).toSeq ==
+      full.map(_.getLong(0)).toSeq.flatMap(id => if (id == twice) Seq(id, id) else Seq(id)))
+    assert(rows.filter(_.getLong(0) == gone).forall(_.isNullAt(2)),
+      "a hit without its document must keep null payload columns")
+    val lang = full.map(r => r.getLong(0) -> r.getString(2)).toMap
+    assert(rows.filter(_.getLong(0) != gone).forall(r => r.getString(2) == lang(r.getLong(0))))
+    // an empty page returns an empty frame of the same schema
+    val empty = SearchService.search(spark, indexed.filter(lit(false)), docs, model, req)
+    assert(empty.schema == got.schema)
+    assert(empty.collect().isEmpty)
+  }
+
+  test("search runs the page and the backfill jobs; collecting its result runs none") {
+    val (indexed, model) = built
+    val docs = Tables.load(spark, SparkSuite.sf0001, "documents")
+      .select(col("doc_id").as("document_id"), col("lang"))
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf[A](body: => A): (A, Int) = {
+      org.apache.spark.graftsync.ListenerSync.waitUntilEmpty(sc)
+      jobs.set(0)
+      val a = body
+      org.apache.spark.graftsync.ListenerSync.waitUntilEmpty(sc)
+      (a, jobs.get())
+    }
+    sc.addSparkListener(listener)
+    try {
+      // a serving probe (nprobe ≤ 8) pages in one exchange-free job; an
+      // all-list probe pages through a shuffle, so only its collect counts
+      Seq(SearchRequest("job probe", count = 5, centroids = 1),
+          SearchRequest("job probe", count = 5, centroids = -1)).foreach { req =>
+        val (df, built) = jobsOf(SearchService.search(spark, indexed, docs, model, req))
+        if (req.centroids == 1) assert(built == 2, s"search submitted $built jobs for $req")
+        val (rows, collected) = jobsOf(df.collect())
+        assert(rows.length == 5)
+        assert(collected == 0, s"collecting the search result submitted $collected jobs")
+      }
+      val (empty, _) = jobsOf(SearchService.search(spark, indexed.filter(lit(false)),
+        docs, model, SearchRequest("job probe")))
+      assert(jobsOf(empty.collect())._2 == 0)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("search with nprobe=all equals a brute-force per-document ranking") {
     val (indexed, model) = built
     val docs = Tables.load(spark, SparkSuite.sf0001, "documents")
