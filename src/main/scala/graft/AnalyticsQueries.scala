@@ -85,8 +85,8 @@ object AnalyticsQueries {
     * making one window partition corpus-scale — single-task buffered
     * sort, no map-side combine, no AQE skew split; the aggregate
     * STREAMS the hot key instead.
-    * SpanRankScaleProbe measures both shapes on a
-    * planted viral chunk; PlanRegressionSpec's window-key allowlist
+    * BASELINE.md's round-14 span/rank table measures both shapes on
+    * a planted viral chunk; PlanRegressionSpec's window-key allowlist
     * bans the window form registry-wide. Removal verdicts come back as
     * per-doc int arrays over a doc_id shuffle, and the cleaned text is
     * rebuilt ROW-LOCALLY from a second colocated scan of the doc
@@ -126,10 +126,8 @@ object AnalyticsQueries {
     * idx) corpus order. The window-free shape (min-struct aggregate +
     * merge join-back — see q82's scaladoc for the mega-key rationale);
     * `c` is non-null by construction (array_join output), so the
-    * equi-join drops nothing. Exposed private[graft] so
-    * SpanRankScaleProbe can A/B it against the banned window form on a
-    * planted viral-chunk corpus. */
-  private[graft] def spanRemovals(exploded: DataFrame): DataFrame = {
+    * equi-join drops nothing. */
+  private def spanRemovals(exploded: DataFrame): DataFrame = {
     // ONE exchange for the whole verdict, three tricks stacked:
     //   1. key on the chunk's 16-byte md5 fingerprint, not the ~60-byte
     //      chunk string — at crawl scale the key bytes ARE the shuffle
@@ -359,8 +357,8 @@ object AnalyticsQueries {
     * `WindowFunctionFrame` cannot RETRACT rows, so every frame move
     * re-aggregates the whole frame — Σ|frame| work per partition,
     * O(n·f) for a user with f events per 24h. A bot user turns one
-    * task effectively quadratic: EventSkewProbe measures the sliding
-    * form at ~7× this shape at a 2% bot / ~6.6k-per-frame density
+    * task effectively quadratic: BASELINE.md's round-14 bot-user table
+    * measures the sliding form at ~7× this shape at a 2% bot / ~6.6k-per-frame density
     * (38.8 vs 5.6 s at 10M events), growing unboundedly with frame
     * density — a denser corpus read 280+ s, and a 10%-bot run passed
     * 34 CPU-minutes in ONE task before being killed — where this
@@ -474,9 +472,9 @@ object AnalyticsQueries {
     * curriculum or balanced-sampling pass uses.
     *
     * NOT `ntile(10).over(Window.partitionBy(lang))`: lang is the
-    * repo's canonical mega-key (PackScaleProbe's 90%-English regime —
-    * one language = one window partition = one task sorting 90% of
-    * the corpus). [[graft.operators.RankOps.distributionRanksPer]]
+    * repo's canonical mega-key (BASELINE.md's round-10 packing corpus
+    * is 90% English — one language = one window partition = one task
+    * sorting 90% of the corpus). [[graft.operators.RankOps.distributionRanksPer]]
     * computes all three functions arithmetically from one range
     * exchange + broadcast per-lang counts (the q93 recipe); the
     * doc_id tie-break makes the order total, which is exactly the

@@ -198,9 +198,11 @@ object CurationRun {
     * mega-cluster's bucket. Below the threshold, exactness is free and
     * preferred (the same adaptive convention as DedupOps'
     * driver/distributed and broadcast/merge gates). 1M docs is where
-    * DedupScaleProbe's curves cross on the benign df-flat corpus;
+    * the 10M dedup curves in BASELINE.md cross on the benign df-flat
+    * corpus;
     * boilerplate-heavy corpora cross far earlier, and the star path is
-    * the only safe default past the threshold (StarScaleProbe: a
+    * the only safe default past the threshold (BASELINE.md's
+    * round-13 star-pairing table: a
     * planted 100k-member cluster costs q124b ~2×10¹⁰ candidate rows,
     * q134 ~n×BANDS).
     *

@@ -76,7 +76,7 @@ object DedupQueries {
     * whose groupBy and join both cluster on this key, so neither adds
     * an exchange) all reuse it, and the minhash kernel runs once in
     * its map stage with no materialization job. */
-  private[graft] def minhashFastBands(s: SparkSession, dir: String): DataFrame =
+  private def minhashFastBands(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents")
       .select(col("doc_id"), gf.minhash_fast(col("text"), N, K).as("sig"))
       .select(col("doc_id"),
@@ -132,9 +132,9 @@ object DedupQueries {
   /** Star-mode LSH candidate pairs over q21b's double-hash banding —
     * the crawl-scale pair generator ([[starPairsFromBands]] for the
     * why and the equivalence argument). Feeds [[q134DedupVerdictStar]]
-    * and [[graft.CurationRun]]'s above-threshold path; StarScaleProbe
-    * measures it at 10M docs with a planted 100k-member near-identical
-    * cluster, where the all-pairs form's candidate volume is ~2×10¹⁰
+    * and [[graft.CurationRun]]'s above-threshold path; BASELINE.md's
+    * round-13 star-pairing table measures it at 10M docs with a planted
+    * 100k-member near-identical cluster, where the all-pairs form's candidate volume is ~2×10¹⁰
     * rows (computed, not materialized) vs this form's ~n×BANDS. */
   def q133MinhashStar(s: SparkSession, dir: String): DataFrame =
     starPairsFromBands(minhashFastBands(s, dir))
@@ -875,7 +875,7 @@ object DedupQueries {
     *
     * r18 note: [[containmentVerify]] replaced this shape with a
     * member-filtered gated-broadcast two-join and the SAME rewrite was
-    * A/B'd here (OptProbe ab:verify) — at q126's 140k candidates the
+    * A/B'd here (round 18, interleaved) — at q126's 140k candidates the
     * broadcast form wins ~1.5 s, but at q106's 13.7k LSH candidates the
     * melt wins ~0.5 s (the gate's pin+count+broadcast-build latency
     * outweighs the small pair-key regroup). The LSH pair generators
@@ -962,10 +962,8 @@ object DedupQueries {
   def q118Containment(s: SparkSession, dir: String): DataFrame =
     containmentExact(cappedShingles(s, dir))
 
-  /** q118's body over an injected capped shingle frame (the probe's
-    * strategy-isolation seam: all three containment plans share the
-    * shingle pass, so comparing them means timing from here down). */
-  private[graft] def containmentExact(sh: DataFrame): DataFrame =
+  /** q118's body over an injected capped shingle frame. */
+  private def containmentExact(sh: DataFrame): DataFrame =
     containmentPairsFrom(sh)
       .select(
         when(col("na") <= col("nb"), col("da")).otherwise(col("db")).as("doc_small"),
@@ -1057,11 +1055,10 @@ object DedupQueries {
 
   /** [[containmentShingles]] over a testdata dir, pinned — the shared
     * q118/q121/q123 input (shingle kernel + df pass once per query).
-    * `private[graft]` for OptProbe's stage ledger (r18). r19: rides the
-    * pin-free [[cappedShinglesOf]] pipeline — the bytes estimate exists
-    * for a dir-backed corpus, so the scaffolding pin + count jobs are
-    * gone and the one job left is this result pin. */
-  private[graft] def cappedShingles(s: SparkSession, dir: String): DataFrame =
+    * r19: rides the pin-free [[cappedShinglesOf]] pipeline — the bytes
+    * estimate exists for a dir-backed corpus, so the scaffolding pin +
+    * count jobs are gone and the one job left is this result pin. */
+  private def cappedShingles(s: SparkSession, dir: String): DataFrame =
     estShingleRows(s, dir) match {
       case est @ Some(_) =>
         cappedShinglesOf(t(s, dir, "documents"), est)
@@ -1091,7 +1088,7 @@ object DedupQueries {
 
   /** [[containmentPairs]] over an injected df-capped shingle frame (the
     * [[shingleBase]] sharing seam for fused consumers like q124). */
-  private[graft] def containmentPairsFrom(sh: DataFrame): DataFrame = {
+  private def containmentPairsFrom(sh: DataFrame): DataFrame = {
     sh.as("a")
       .join(sh.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
@@ -1196,7 +1193,7 @@ object DedupQueries {
     * verify input (sf0.1: 86,030 → 778 candidates for 256 true pairs,
     * every true pair provably retained — ContainmentSpec pins equality
     * with q118 row for row). */
-  private[graft] def containmentPrefix(sh: DataFrame): DataFrame = {
+  private def containmentPrefix(sh: DataFrame): DataFrame = {
     val pref = sh
       .withColumn("r", row_number().over(
         Window.partitionBy("doc_id").orderBy(col("df").asc, col("s").asc)))
@@ -1226,14 +1223,14 @@ object DedupQueries {
     * re-shuffled 2·|cands| array-bearing rows through a pair-key
     * regroup (`attachPairArrays`). Measured at sf0.1 (q126's 140k
     * candidates for 256 true pairs): isolated verify tail 3.6→2.5 s,
-    * interleaved full-query A/B q126 6.7→5.9 s min-of-3 (OptProbe
-    * ab:verify; q118b ±noise — its 86k candidate set is smaller). At
+    * interleaved full-query A/B q126 6.7→5.9 s min-of-3 (round 18;
+    * q118b ±noise — its 86k candidate set is smaller). At
     * scale the gate demotes a pathological (majority-candidate) corpus
     * to the deterministic sort-merge fallback instead of a corpus-scale
     * broadcast. Both hinted sides read the same "size-gated" pin —
     * registered per query in PlanRegressionSpec (pinBoundAllowed /
     * boundPinSideCounts). */
-  private[graft] def containmentVerify(cands: DataFrame, sh: DataFrame): DataFrame = {
+  private def containmentVerify(cands: DataFrame, sh: DataFrame): DataFrame = {
     // r19: back to the q100 MELT shape (r17's), because the pigeonhole
     // hit threshold collapsed the candidate volume ~100× (sf0.1:
     // 140,782 → 1,267) — exactly the small-candidate regime where r18's
@@ -1290,7 +1287,7 @@ object DedupQueries {
     *    shingles may miss the other doc, so any (⌊n/10⌋+1)-subset hits
     *    it; hash order is just a different subset choice), so the exact
     *    verify returns precisely q118's rows.
-    *  - `k > 0` (the scale knob, measured in ContainScaleProbe): fixed
+    *  - `k > 0` (the scale knob, measured in BASELINE.md): fixed
     *    bottom-k sketch, pairs kept when ≥ minHits DISTINCT shingles hit
     *    through either side's sketch — if C >= 0.9, each of the small
     *    side's k sketch shingles hits the big doc with prob ~0.9, so
@@ -1300,12 +1297,12 @@ object DedupQueries {
     containmentSketchPairs(cappedShingles(s, dir), k = 0, minHits = 1)
 
   /** [[containmentSketchPairs]] over a testdata dir at an arbitrary
-    * (k, minHits) — the probe's entry to the fast regime. */
+    * (k, minHits) — ContainmentSpec's entry to the fast regime. */
   private[graft] def containmentSketchFor(s: SparkSession, dir: String,
       k: Int, minHits: Int, rareFirst: Boolean = false): DataFrame =
     containmentSketchPairs(cappedShingles(s, dir), k, minHits, rareFirst)
 
-  private[graft] def containmentSketchPairs(sh: DataFrame, k: Int,
+  private def containmentSketchPairs(sh: DataFrame, k: Int,
       minHits: Int, rareFirst: Boolean = false): DataFrame = {
     // k <= 0 (the registered lossless regime): DOUBLED adaptive sketch,
     // 2·⌊n/10⌋+1 rows, with the pigeonhole hit threshold ⌊n_small/10⌋+1
@@ -1313,8 +1310,9 @@ object DedupQueries {
     // hash order is just a different subset choice, the same bound
     // holds for ANY subset of that size). sf0.1: candidates 140,782 →
     // 1,267 for 256 true pairs, ~100× less verify input for ~2× probe
-    // fan-in. The k > 0 probe regime (ContainScaleProbe's measured
-    // estimator) is untouched: fixed bottom-k sketch, caller's minHits.
+    // fan-in. The k > 0 probe regime (the estimator BASELINE.md's
+    // dedup tables measure) is untouched: fixed bottom-k sketch,
+    // caller's minHits.
     val kCol = if (k <= 0) expr("2 * (n div 10)") + lit(1) else lit(k)
     // rareFirst: probe with the k globally-RAREST shingles (q118b's
     // order, k-capped) — cold join keys; plain bottom-k (hash order) is
@@ -1325,7 +1323,7 @@ object DedupQueries {
     // full sets). In the k > 0 regime the bottom-k sketch is LOSSY and
     // a different hash family selects different per-doc subsets, so
     // outputs are statistically equivalent but NOT row-identical across
-    // the md5→xxhash64 swap — k > 0 probe baselines (ContainScaleProbe)
+    // the md5→xxhash64 swap — k > 0 probe baselines in BASELINE.md
     // from before r18 must be regenerated, not compared. The cheap
     // codegen'd 64-bit hash replaces a 128-bit digest in the
     // per-shingle hot path (r18).
@@ -1443,8 +1441,8 @@ object DedupQueries {
     * planner picks the LARGEST minHits whose recall at C = 0.9 still
     * clears 0.995 — the tightest filter that keeps essentially every
     * true pair — and reports the near-miss pass rate at C = 0.6 (the
-    * quote regime ContainScaleProbe plants): the fraction of C≈0.6
-    * candidates that still reach the exact melt verify, i.e. the wasted
+    * planted quote regime of BASELINE.md's dedup tables): the fraction
+    * of C≈0.6 candidates that still reach the exact melt verify, i.e. the wasted
     * verify work the sketch failed to kill. The registered q126 fast
     * config (k=16, minHits=11) is exactly this table's k=16 row —
     * recall 0.9967 analytic (1.0 measured on the quote corpus,
@@ -1539,9 +1537,9 @@ object DedupQueries {
     * (98-99% at J≈0.8-0.9; EXACT duplicates collide with probability 1 —
     * identical texts give identical signatures — so J=1 clusters are
     * never split). On corpora whose true pairs are exact copies the two
-    * verdicts are row-identical (`DedupBandedSpec`); DedupScaleProbe
-    * times both at 10M docs. Shares one exploded-shingle scan between
-    * the verify arrays and the containment victims' df-capped view. */
+    * verdicts are row-identical (`DedupBandedSpec`); BASELINE.md's
+    * 10M fused-verdict table times both. Shares one exploded-shingle
+    * scan between the verify arrays and the containment victims' df-capped view. */
   def q124bDedupVerdictBanded(s: SparkSession, dir: String): DataFrame =
     q124bDedupVerdictBanded(s, dir, graft.operators.DedupOps.BroadcastRowLimit)
 
@@ -1564,8 +1562,9 @@ object DedupQueries {
     * coincide wherever the star edges spanning a true cluster pass the
     * exact-Jaccard verify — DedupStarSpec pins row-identity against
     * q124b on a skewed fixture with a planted near-identical
-    * mega-cluster; StarScaleProbe measures 10M docs with a 100k-member
-    * cluster, where the all-pairs form degenerates. */
+    * mega-cluster; BASELINE.md's round-13 star-pairing table measures
+    * 10M docs with a 100k-member cluster, where the all-pairs form
+    * degenerates. */
   def q134DedupVerdictStar(s: SparkSession, dir: String): DataFrame =
     q134DedupVerdictStar(s, dir, graft.operators.DedupOps.BroadcastRowLimit)
 

@@ -62,7 +62,7 @@ final case class OwnershipStore(root: String) {
     // answers "any misses?" and IS the result, reading each dimension
     // store once. The general path below re-reads the stores per stage
     // (anti-join, max-id, write, final resolve — ~8 jobs); replay was
-    // paying all of it to write nothing (JobProbe: q74 at 22 jobs,
+    // paying all of it to write nothing (per-job ledger: q74 at 22 jobs,
     // ~1 s of planning gaps on a 0.6 s query).
     if (owners.isInitialized && categories.isInitialized) {
       val resolved = dp

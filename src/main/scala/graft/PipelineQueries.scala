@@ -76,7 +76,8 @@ object PipelineQueries {
     * (events ts is nanos in parquet; both sides truncate ns → us).
     * Mega-key disposition: lag is frame-less O(1) and the session
     * counter is a MONOTONE running sum (incremental) — a bot user
-    * costs one linear task (EventSkewProbe: hot ≈ flat). */
+    * costs one linear task (BASELINE.md's round-14 bot-user table:
+    * hot ≈ flat). */
   def q29Sessionize(s: SparkSession, dir: String): DataFrame = {
     val order = Seq(col("us").asc, col("event_id").asc)
     val w = Window.partitionBy(col("user_id")).orderBy(order: _*)

@@ -158,7 +158,7 @@ object Plans {
         "and the join probe REUSE (the explode kernel runs once — " +
         "look for ReusedExchange below), and a count>=2 filter so the " +
         "keeper build side is dup-cluster-sized (AQE broadcasts it on " +
-        "clean corpora). SpanRankScaleProbe measures the trade in " +
+        "clean corpora). BASELINE.md (round 14) records the trade in " +
         "both regimes. Corpus text crosses the wire once; reassembly " +
         "is row-local.",
       AnalyticsQueries.q82SpanRewrite(spark, dir))
@@ -182,7 +182,7 @@ object Plans {
         "probe rows at us+60 s, one monotone range-cumulative pass) " +
         "counts the strict-forward neighbors, a tiny per-(user, ts) " +
         "aggregate adds the tie pairs. Linear everywhere; " +
-        "EventSkewProbe carries the A/B.",
+        "BASELINE.md (round 14) carries the A/B.",
       Queries.q48RangeJoin(spark, dir))
 
     section("q135_bounded_history — keep-last-N per user as a bounded-heap aggregate",
@@ -191,7 +191,7 @@ object Plans {
         "combine, so a bot user's history is pruned to k per " +
         "partition BEFORE the shuffle and no task ever holds more " +
         "than k*partitions rows of one user. The window twin is " +
-        "FASTER single-node (linear per-user sort, EventSkewProbe " +
+        "FASTER single-node (linear per-user sort, BASELINE.md r15 " +
         "A/B) - this shape is the bounded-task guarantee for the " +
         "crawl-scale bot that cannot sort in one task, the callable " +
         "form of the q40/q29 disposition.",
@@ -284,7 +284,7 @@ object Plans {
         "merge-hinted — never min().over(Window.partitionBy(fp)), " +
         "which would funnel a viral byte-identical cluster through one " +
         "task (PlanRegressionSpec bans the fp window here as of r13; " +
-        "SpineScaleProbe measures the trade). The " +
+        "BASELINE.md round 13 records the trade). The " +
         "cluster-member and subsumption verdicts are EXCEPTION SETS " +
         "(dup-cluster / pair-graph-sized) that LEFT-join the spine " +
         "broadcast — size-gated on counts their producers already know " +
@@ -381,7 +381,7 @@ object Plans {
         "AQE-skew-splittable. Output distinct keeps its partial step. " +
         "Candidate volume is O(n x bands) regardless of the largest " +
         "near-identical cluster, where the all-pairs q21b form is " +
-        "Theta(m^2) in it (StarScaleProbe: 1.8e10 rows avoided at 10M).",
+        "Theta(m^2) in it (BASELINE.md r13: 1.8e10 rows avoided at 10M).",
       DedupQueries.q133MinhashStar(spark, dir))
 
     section("q29_sessionize — keyed windows share one exchange",
@@ -398,7 +398,7 @@ object Plans {
         "Offsets join back to the tokenized corpus on doc_id — the only " +
         "time text crosses the wire — and assembly groups on " +
         "sequence-sized (lang, seq_id) keys, map-side combined. " +
-        "PackScaleProbe: 2.2x over the window form at 10M docs / 90% " +
+        "BASELINE.md r10: 2.2x over the window form at 10M docs / 90% " +
         "one language, widening with scale.",
       CurationQueries.packSequences(
         Tables.load(spark, dir, "documents"), 2048L))

@@ -125,8 +125,8 @@ object Queries {
     * events-table instance of the viral-fingerprint mega-key class the
     * r13 spine rewrite killed). The aggregate buffers ONE row per user
     * per task and combines map-side, so the hot user costs a streaming
-    * max per task instead of a single-task sort (EventSkewProbe
-    * measures both shapes on a planted bot user). Ordering value desc,
+    * max per task instead of a single-task sort (BASELINE.md's
+    * round-14 bot-user table measures both shapes). Ordering value desc,
     * event_id asc ≡ argmax of the (value, -event_id) struct — the
     * q66/q117 max_by precedent. */
   def q09WindowDedup(s: SparkSession, dir: String): DataFrame =
@@ -286,7 +286,8 @@ object Queries {
     * Mega-key disposition: the frame is MONOTONE (grows forward, never
     * retracts), which Spark evaluates incrementally — a bot user costs
     * one LINEAR task, not the sliding-frame quadratic q64 had to
-    * design out (EventSkewProbe: hot ≈ flat at a 200k-event bot). */
+    * design out (BASELINE.md's round-14 bot-user table: hot ≈ flat at
+    * a 200k-event bot). */
   def q40AsofWindow(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("us").asc, col("event_id").asc)
@@ -316,8 +317,8 @@ object Queries {
     * post-join residual: the equi-key alone makes the candidate set
     * Σ_user |events_user|² — a bot user with 10⁶ events is 10¹²
     * candidate evaluations inside ONE sort-merge-join key group before
-    * the residual can drop any (the events-table quadratic the r14
-    * EventSkewProbe measures; same class as q64's sliding frame).
+    * the residual can drop any (the events-table quadratic BASELINE.md's
+    * round-14 bot-user table measures; same class as q64's sliding frame).
     * Because the output is a COUNT, it decomposes exactly over the
     * per-user time order: every unordered pair with |Δt| ≤ 60 s has
     * exactly one orientation with the smaller event_id first, so

@@ -117,7 +117,7 @@ object RetrievalQueries {
     // of its own here. The pinned frame is the narrow (doc_id, leg,
     // key) projection and measured wall-clock is neutral (~1.5-1.6 s at
     // sf0.1 in all shapes; the r5 bench's 2.11 s reading was session
-    // variance — JobProbe shows q45 planning-bound across 18 jobs).
+    // variance — a job ledger shows q45 planning-bound across 18 jobs).
     // The lex leg covers every document (left-join-fill, score 0);
     // the vec leg covers only embedded docs — RRF sums whichever
     // 1/(60+r) terms exist per doc (see the method scaladoc).
@@ -386,14 +386,9 @@ object RetrievalQueries {
     * [[gf.TopKAgg]] — each task ships ≤ 5 rows per query, no
     * corpus-wide window anywhere. Self-doc ranks first by construction
     * (every chunk maxes at itself), which `RetrievalEvalSpec` pins. */
-  def q119Maxsim(s: SparkSession, dir: String): DataFrame =
-    maxsimBrute(s, dir, nQueryDocs = 2)
-
-  /** q119's body with a configurable query-doc count (the oracle pins
-    * nQueryDocs = 2; the calibration probe sweeps a wider set). */
-  def maxsimBrute(s: SparkSession, dir: String, nQueryDocs: Int): DataFrame = {
+  def q119Maxsim(s: SparkSession, dir: String): DataFrame = {
     val e = chunkFrame(s, dir)
-    maxsimRank(e.crossJoin(broadcast(queryChunks(e, nQueryDocs)))
+    maxsimRank(e.crossJoin(broadcast(queryChunks(e)))
       .select(col("qd"), col("d").as("cd"), col("qv"),
         (round(gf.cosine_sim(col("embedding"), col("qvec")), 4) + 0.0).as("sim")))
   }
@@ -403,9 +398,9 @@ object RetrievalQueries {
     t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"), expr("vec_id div 4").as("d"))
 
-  /** The fixed query side: the first `nQueryDocs` pseudo-docs' chunks. */
-  private def queryChunks(e: DataFrame, nQueryDocs: Int = 2): DataFrame =
-    e.filter(col("d") < nQueryDocs)
+  /** The fixed query side: the first two pseudo-docs' chunks. */
+  private def queryChunks(e: DataFrame): DataFrame =
+    e.filter(col("d") < 2)
       .select(col("d").as("qd"), col("vec_id").as("qv"),
         col("embedding").as("qvec"))
 
@@ -439,27 +434,15 @@ object RetrievalQueries {
     * batched job over every query chunk ([[graft.index.IvfIndex
     * .searchBatch]]) — no per-chunk driver loop. */
   def maxsimIvf(s: SparkSession, dir: String, nprobe: Int,
-      candK: Int, nQueryDocs: Int = 2): DataFrame = {
+      candK: Int): DataFrame = {
     import graft.index.IvfIndex
+    import s.implicits._
     val e = chunkFrame(s, dir)
     val (idx, model) = IvfIndex.build(e, "embedding",
       IvfIndex.Params(listSize = 100, sampleSize = 50000))
     val cached = idx.persist()
     cached.count()
-    maxsimIvfWith(e, cached, model, nprobe, candK, nQueryDocs)
-  }
-
-  /** [[maxsimIvf]] against a PREBUILT index — the calibration probe
-    * sweeps the (nprobe, candK) grid against one build instead of
-    * rebuilding (and re-caching) the index per cell. */
-  def maxsimIvfWith(e: DataFrame, cached: DataFrame,
-      model: graft.index.IvfIndex.Model, nprobe: Int, candK: Int,
-      nQueryDocs: Int): DataFrame = {
-    import graft.index.IvfIndex
-    val spark = e.sparkSession
-    import spark.implicits._
-    val qchunks = e.filter(col("d") < nQueryDocs)
-      .select("d", "vec_id", "embedding").collect()
+    val qchunks = queryChunks(e).collect()
     // stage 1, batched: every chunk's top-candK through ONE probe join
     // (qid = the chunk's vec_id), then chunk → owning query doc
     val qvecs = qchunks.map(r => (r.getLong(1), r.getSeq[Float](2).toArray)).toSeq
@@ -471,14 +454,10 @@ object RetrievalQueries {
       .select(col("qd"), expr("vec_id div 4").as("cd"))
       .distinct()
     maxsimRank(e.join(broadcast(cands), e("d") === cands("cd"))
-      .join(broadcast(queryChunks(e, nQueryDocs)), "qd")
+      .join(broadcast(queryChunks(e)), "qd")
       .select(col("qd"), col("cd"), col("qv"),
         (round(gf.cosine_sim(col("embedding"), col("qvec")), 4) + 0.0).as("sim")))
   }
-
-  /** The probe's entry to [[chunkFrame]] (private otherwise). */
-  private[graft] def chunkFrameFor(s: SparkSession, dir: String): DataFrame =
-    chunkFrame(s, dir)
 
   val registry: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q119_maxsim" -> q119Maxsim _,

@@ -129,7 +129,7 @@ object Tables {
   /** On-disk parquet bytes of a table — the stats-free scale signal the
     * dedup family's partition sizing derives from (r19): one filesystem
     * stat, no Spark job, no planning pass. None when the path is
-    * missing. */
+    * missing or nested (see [[statOf]]). */
   def byteSize(spark: SparkSession, dir: String, name: String): Option[Long] =
     statOf(spark, s"$dir/$name.parquet").map(_.len)
 
@@ -173,7 +173,11 @@ object Tables {
     * Directories report the summed content length so the [[loadP]]
     * split estimate and the cache validators see real bytes, and the
     * version token folds child mtimes + count so an in-place part-file
-    * rewrite invalidates even when the dir's own mtime is unchanged. */
+    * rewrite invalidates even when the dir's own mtime is unchanged.
+    * Also None for a directory with subdirectories (a `partitionBy`
+    * layout): its top-level files are not the table, so a Stat would
+    * under-report rows and bytes — callers then read through Spark and
+    * take their counting gates instead of trusting a 0. */
   private def statOf(spark: SparkSession, pathStr: String): Option[Stat] = {
     val p = new org.apache.hadoop.fs.Path(pathStr)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -181,11 +185,14 @@ object Tables {
       val st = fs.getFileStatus(p)
       val qual = fs.makeQualified(p).toString
       if (st.isDirectory) {
-        val children = fs.listStatus(p).toSeq.filter(_.isFile)
-        val len = children.iterator.map(_.getLen).sum
-        val ver = children.iterator.map(_.getModificationTime)
-          .foldLeft(st.getModificationTime)(math.max) * 31 + children.size
-        Some(Stat(qual, ver, len, math.max(1L, children.size.toLong)))
+        val (dirs, children) = fs.listStatus(p).toSeq.partition(_.isDirectory)
+        if (dirs.nonEmpty) None
+        else {
+          val len = children.iterator.map(_.getLen).sum
+          val ver = children.iterator.map(_.getModificationTime)
+            .foldLeft(st.getModificationTime)(math.max) * 31 + children.size
+          Some(Stat(qual, ver, len, math.max(1L, children.size.toLong)))
+        }
       } else Some(Stat(qual, st.getModificationTime, st.getLen, 1L))
     } catch { case _: java.io.FileNotFoundException => None }
   }

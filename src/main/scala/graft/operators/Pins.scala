@@ -360,7 +360,7 @@ object Pins {
       // targets LONG lineages; the engine's pins sit one stage past a
       // shuffle, so the "recompute" is a local shuffle-file re-read —
       // measured CHEAPER at 10M than the persist alternative's full
-      // cache write+read round-trip (PackScaleProbe: 22.8 s direct vs
+      // cache write+read round-trip (BASELINE.md round 11: 22.8 s direct vs
       // 74-125 s with persist scaffolding). Deliberately unpersisted.
       val out = df.checkpoint(true)
       // record the pin's checkpoint files with the active scope so a

@@ -210,7 +210,7 @@ object RankOps {
     * per value of `legCol` — the distribution-rank window family
     * without per-leg windows. `ntile(n) over (partition by leg order
     * by …)` puts each leg in ONE window partition: on the repo's
-    * canonical mega-key regime (PackScaleProbe's 90%-English corpus) a
+    * canonical mega-key regime (BASELINE.md's 90%-English packing corpus) a
     * single task sorts 90% of the corpus. Here the ranking rides
     * [[globalRowNumberPer]] (one range exchange shared by all legs,
     * rows spread over all partitions) and all three functions are pure
@@ -326,7 +326,7 @@ object RankOps {
     * STAGE and no task ever receives more than k·partitions rows for
     * one user — at any skew.
     *
-    * Read the trade honestly (EventSkewProbe A/B, BASELINE.md r15):
+    * Read the trade honestly (BASELINE.md's r15 bot-user A/B):
     * single-node at 10M events the window twin is FASTER in every
     * regime (1.3–1.5 s vs 3.0–3.8 s — per-user keep-last-N is a
     * linear sort, and even a 5M-row bot sorts trivially in one local

@@ -1021,11 +1021,11 @@ object Streams {
     * a first batch over deep history) holds up to B open partials
     * until the next batch's watermark sweeps them closed — operators
     * must not treat the steady-state bound as a per-batch hard
-    * invariant (DriftCatchupProbe measures both regimes; a per-file
-    * catch-up replay stays at the steady bound because each batch
-    * advances the watermark before the next folds). `source`
-    * is a bounded dimension — the same premise q114/q136's aggregate
-    * rides — so no state TTL is needed. StreamsSpec proves the emitted
+    * invariant (BASELINE.md's round-18 catch-up table measures both
+    * regimes; a per-file catch-up replay stays at the steady bound
+    * because each batch advances the watermark before the next folds).
+    * `source` is a bounded dimension — the same premise q114/q136's
+    * aggregate rides — so no state TTL is needed. StreamsSpec proves the emitted
     * rows equal the batch operator over the full input, bucket for
     * bucket, including a multi-window close fired by the timeout
     * alone. Expects columns (source string, ts_us long, q double) with

@@ -167,21 +167,7 @@ class PlanRegressionSpec extends AnyFunSuite {
     * PRODUCT file that happened to end in Probe.scala. Adding a probe
     * file means adding it here consciously; the companion test below
     * additionally requires every entry to be a runnable main. */
-  private val tripwireExempt: Set[String] = Set(
-    "AuditScaleProbe.scala", "BatchEvalProbe.scala", "CatchupProbe.scala",
-    "CompScaleProbe.scala", "ContainScaleProbe.scala",
-    "CurationScaleProbe.scala", "DecontScaleProbe.scala",
-    "DedupScaleProbe.scala", "DriftCatchupProbe.scala",
-    "DriftScaleProbe.scala", "EventSkewProbe.scala",
-    "ExportScaleProbe.scala", "JobProbe.scala", "MaxsimCalProbe.scala",
-    "MediaStarProbe.scala", "OptProbe.scala", "PackScaleProbe.scala",
-    "PcaScaleProbe.scala",
-    "RuntimeFilterProbe.scala", "SampleScaleProbe.scala",
-    "ScaleProbe.scala", "SelectionScaleProbe.scala",
-    "SemDedupScaleProbe.scala", "ServeProbe.scala",
-    "ShuffleScaleProbe.scala", "SpanRankScaleProbe.scala",
-    "SpineScaleProbe.scala", "StarScaleProbe.scala",
-    "TvfScaleProbe.scala", "Plans.scala")
+  private val tripwireExempt: Set[String] = Set("Probe.scala", "Plans.scala")
 
   /** True when the tripwire scans this file (= not exempt). Split out
     * so the hatch test below can assert the decision on a PLANTED
