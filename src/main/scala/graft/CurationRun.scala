@@ -56,38 +56,11 @@ object CurationRun {
       nShards: Int, seed: Long): Seq[TrainingExport.ShardStat] =
     exportCurated(s, dir, outDir, nShards, seed, None)
 
-  /** [[exportCurated]] with the pin fault-tolerance mode scoped to
-    * THIS run ([[graft.operators.Pins.withReliable]]) instead of the
-    * session-global `spark.graft.reliablePins` conf: `reliable=true`
-    * hardens the run's corpus-scale pins against executor loss
-    * (multi-hour 100 TB runs) without taxing the session's
-    * dimension-sized pins 1.7×, `reliable=false` forces fast local
-    * pins even inside a hardened session. A reliable run checkpoints
-    * under the SIBLING dir `outDir + "_pins"` — same durable FS as the
-    * output, but never inside it: the shard write opens `outDir` in
-    * overwrite mode, which would delete a nested pin dir out from
-    * under the very frames the write is reading — and DELETES it on
-    * exit ([[graft.operators.Pins.withReliableRun]] — the cleanup
-    * story for clusters without `spark.cleaner.referenceTracking
-    * .cleanCheckpoints`; any pre-set session checkpoint dir is
-    * restored). A caller who instead wants the run's pins in a dir
-    * they own and clean composes `Pins.withReliable(true)` around the
-    * plain overload. */
-  def exportCurated(s: SparkSession, dir: String, outDir: String,
-      nShards: Int, seed: Long, decontaminate: Option[Decontaminate],
-      reliable: Boolean): Seq[TrainingExport.ShardStat] = {
-    import graft.operators.Pins
-    // collapse ALL trailing slashes: "out//".stripSuffix("/") would
-    // leave "out/" and NEST the pin dir inside outDir — the
-    // overwrite-delete hazard the scaladoc forbids
-    if (reliable)
-      Pins.withReliableRun(s,
-        outDir.replaceAll("/+$", "") + "_pins")(
-        exportCurated(s, dir, outDir, nShards, seed, decontaminate))
-    else Pins.withReliable(false)(
-      exportCurated(s, dir, outDir, nShards, seed, decontaminate))
-  }
-
+  /** Run the lifecycle over `dir` and write `nShards` certified shards
+    * to `outDir`. Every pin in the run goes through
+    * [[graft.operators.Pins]]: on a cluster master each pin keeps two
+    * block copies, so the run survives the loss of one executor; under
+    * a local master a pin keeps one. */
   def exportCurated(s: SparkSession, dir: String, outDir: String,
       nShards: Int, seed: Long, decontaminate: Option[Decontaminate])
       : Seq[TrainingExport.ShardStat] = {

@@ -1273,81 +1273,47 @@ object DedupQueries {
     * two-stage pattern applied to containment (Broder's bottom-k /
     * asymmetric-minhash containment estimation, "On the resemblance and
     * containment of documents", SEQUENCES'97): each document probes the
-    * capped shingle table with only its k hash-smallest shingles, pairs
+    * capped shingle table with only its k hash-smallest shingles
+    * (k = 2·⌊n/10⌋+1, below), pairs
     * are ESTIMATED from sketch-hit counts, and only pairs passing the
     * hit threshold reach the exact melt verify. For corpora where even
     * q118b's rare-prefix join is hot (df-flat corpora give the prefix
     * filter nothing rare to pick), the sketch bounds probe fan-in at
     * k·df per document regardless of df shape.
     *
-    * Two regimes, one body:
-    *  - `k <= 0` (REGISTERED, oracle = q118's): adaptive hash-order
-    *    prefix k_doc = ⌊n/10⌋+1, minHits = 1 — LOSSLESS by the same
-    *    pigeonhole as q118b (at most ⌊n/10⌋ of the small side's capped
-    *    shingles may miss the other doc, so any (⌊n/10⌋+1)-subset hits
-    *    it; hash order is just a different subset choice), so the exact
-    *    verify returns precisely q118's rows.
-    *  - `k > 0` (the scale knob, measured in BASELINE.md): fixed
-    *    bottom-k sketch, pairs kept when ≥ minHits DISTINCT shingles hit
-    *    through either side's sketch — if C >= 0.9, each of the small
-    *    side's k sketch shingles hits the big doc with prob ~0.9, so
-    *    even k = 16, minHits = 8 loses ~nothing while cutting probe
-    *    fan-in ~n/k-fold on long documents. */
-  def q126ContainmentSketch(s: SparkSession, dir: String): DataFrame =
-    containmentSketchPairs(cappedShingles(s, dir), k = 0, minHits = 1)
-
-  /** [[containmentSketchPairs]] over a testdata dir at an arbitrary
-    * (k, minHits) — ContainmentSpec's entry to the fast regime. */
-  private[graft] def containmentSketchFor(s: SparkSession, dir: String,
-      k: Int, minHits: Int, rareFirst: Boolean = false): DataFrame =
-    containmentSketchPairs(cappedShingles(s, dir), k, minHits, rareFirst)
-
-  private def containmentSketchPairs(sh: DataFrame, k: Int,
-      minHits: Int, rareFirst: Boolean = false): DataFrame = {
-    // k <= 0 (the registered lossless regime): DOUBLED adaptive sketch,
-    // 2·⌊n/10⌋+1 rows, with the pigeonhole hit threshold ⌊n_small/10⌋+1
-    // applied per pair below (r19 — see [[containmentPrefix]]'s proof;
-    // hash order is just a different subset choice, the same bound
-    // holds for ANY subset of that size). sf0.1: candidates 140,782 →
-    // 1,267 for 256 true pairs, ~100× less verify input for ~2× probe
-    // fan-in. The k > 0 probe regime (the estimator BASELINE.md's
-    // dedup tables measure) is untouched: fixed bottom-k sketch,
-    // caller's minHits.
-    val kCol = if (k <= 0) expr("2 * (n div 10)") + lit(1) else lit(k)
-    // rareFirst: probe with the k globally-RAREST shingles (q118b's
-    // order, k-capped) — cold join keys; plain bottom-k (hash order) is
-    // the classic unbiased containment sketch. xxhash64, not md5: the
-    // hash only picks WHICH per-doc subset probes. In the k <= 0 regime
-    // the choice is output-invariant (lossless by pigeonhole for ANY
-    // subset of the required size; the exact verify recomputes C from
-    // full sets). In the k > 0 regime the bottom-k sketch is LOSSY and
-    // a different hash family selects different per-doc subsets, so
-    // outputs are statistically equivalent but NOT row-identical across
-    // the md5→xxhash64 swap — k > 0 probe baselines in BASELINE.md
-    // from before r18 must be regenerated, not compared. The cheap
-    // codegen'd 64-bit hash replaces a 128-bit digest in the
-    // per-shingle hot path (r18).
-    val ord = if (rareFirst) Seq(col("df").asc, col("s").asc)
-      else Seq(xxhash64(col("s")).asc, col("s").asc)
+    * The sketch is the DOUBLED adaptive hash-order prefix,
+    * 2·⌊n/10⌋+1 rows per document, and a pair reaches the verify only
+    * when at least ⌊n_small/10⌋+1 of its small side's sketch shingles
+    * hit the big doc. That floor is the pigeonhole of q118b (at most
+    * ⌊n/10⌋ of the small side's capped shingles may miss the other doc
+    * at C >= 0.9, so any (⌊n/10⌋+1)-subset hits it; hash order is just
+    * a different subset choice), so the sketch is LOSSLESS and the
+    * exact verify returns precisely q118's rows (r19 — see
+    * [[containmentPrefix]]'s proof). sf0.1: candidates 140,782 →
+    * 1,267 for 256 true pairs, ~100× less verify input for ~2× probe
+    * fan-in. */
+  def q126ContainmentSketch(s: SparkSession, dir: String): DataFrame = {
+    val sh = cappedShingles(s, dir)
+    // the hash only picks WHICH per-doc subset probes, and the choice
+    // is output-invariant (lossless for ANY subset of the required
+    // size; the exact verify recomputes C from full sets), so the cheap
+    // codegen'd 64-bit xxhash64 serves the per-shingle hot path
     val sketch = sh
-      .withColumn("r", row_number().over(
-        Window.partitionBy("doc_id").orderBy(ord: _*)))
-      .filter(col("r") <= kCol)
+      .withColumn("r", row_number().over(Window.partitionBy("doc_id")
+        .orderBy(xxhash64(col("s")).asc, col("s").asc)))
+      .filter(col("r") <= expr("2 * (n div 10)") + lit(1))
       .select(col("doc_id").as("pd"), col("n").as("np"), col("s"))
     // ONE-SIDED probing: C normalizes by the SMALL side, so only the
     // small side's sketch estimates it — probe small→big exclusively,
     // with equal sizes tie-broken by id (pd < od, not pd =!= od: the
     // symmetric form admitted BOTH directions for equal-size pairs, so
     // (pair, s) was not unique and hits double-counted — an equal-size
-    // near-miss could pass a minHits threshold calibrated for one-sided
+    // near-miss could pass the hit floor calibrated for one-sided
     // counting and reach the expensive melt verify twice over).
     // Lossless: C is symmetric at equal sizes, so probing one direction
     // preserves every true pair. Halves the probe join AND makes
     // (pair, s) unique, so hits is a plain count, never a countDistinct
     // expand.
-    val hitFloor =
-      if (k <= 0) greatest(lit(minHits), expr("np div 10") + 1)
-      else lit(minHits)
     val cands = sketch
       .join(sh.select(col("doc_id").as("od"), col("n").as("no"), col("s")), "s")
       .filter(col("np") < col("no") ||
@@ -1355,7 +1321,7 @@ object DedupQueries {
       .groupBy(least(col("pd"), col("od")).as("doc_a"),
         greatest(col("pd"), col("od")).as("doc_b"))
       .agg(count(lit(1)).as("hits"), first(col("np")).as("np"))
-      .filter(col("hits") >= hitFloor)
+      .filter(col("hits") >= expr("np div 10") + 1)
       .select("doc_a", "doc_b")
     containmentVerify(cands, sh)
   }
@@ -1432,7 +1398,8 @@ object DedupQueries {
   }
 
   /** Bottom-k containment-sketch planner — q120's design-table pattern
-    * applied to q126's fast config, so (k, minHits) is measured policy,
+    * applied to a FIXED-size bottom-k sketch (q126's lossless sketch
+    * grows with n instead), so a fixed (k, minHits) is measured policy,
     * not a guess. A true pair at the C >= 0.9 gate passes the sketch
     * when >= minHits of the small side's k sketch shingles hit the big
     * doc; each hits independently with probability ~C (Broder's
@@ -1443,12 +1410,12 @@ object DedupQueries {
     * true pair — and reports the near-miss pass rate at C = 0.6 (the
     * planted quote regime of BASELINE.md's dedup tables): the fraction
     * of C≈0.6 candidates that still reach the exact melt verify, i.e. the wasted
-    * verify work the sketch failed to kill. The registered q126 fast
-    * config (k=16, minHits=11) is exactly this table's k=16 row —
-    * recall 0.9967 analytic (1.0 measured on the quote corpus,
-    * BASELINE.md), near-miss pass 0.3288 — and the table says what a
-    * bigger budget buys: k=32/m=24 kills 94% of near-misses at the same
-    * recall floor.
+    * verify work the sketch failed to kill. The fixed config
+    * BASELINE.md measured (k=16, minHits=11) is exactly this table's
+    * k=16 row — recall 0.9967 analytic (1.0 measured on the quote
+    * corpus), near-miss pass 0.3288 — and the table says what a bigger
+    * budget buys: k=32/m=24 kills 94% of near-misses at the same recall
+    * floor.
     *
     * Purely analytic (binomial tails over a k-grid — no corpus scan),
     * expressed as a plan so the DuckDB oracle checks it. Binomial

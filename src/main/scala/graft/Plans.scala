@@ -327,8 +327,8 @@ object Plans {
     section("q127_sketch_planner — analytic (k, minHits) design table",
       "Pure expression plan (no table scan): binomial tails via " +
         "sequence + aggregate lambdas inside WholeStageCodegen, one " +
-        "tiny window for the per-k argmax. The table that makes q126's " +
-        "fast config measured policy.",
+        "tiny window for the per-k argmax. The table that makes a fixed " +
+        "bottom-k (k, minHits) config measured policy.",
       DedupQueries.q127SketchPlanner(spark, dir))
 
     section("q112_expectations — the whole check suite in ONE scan",

@@ -575,12 +575,12 @@ object Streams {
         // pin the keyed batch: the row id must be IDENTICAL on the
         // probe side and the join-back side, and an unpinned batch can
         // recompute with a different partition layout between the two.
-        // DELIBERATELY localCheckpoint, not Pins.pin: under
-        // spark.graft.reliablePins the file round-trip would tax every
-        // micro-batch, and buys nothing here — a batch whose pin blocks
-        // die with an executor fails the batch, and the stream REPLAYS
-        // it from the checkpointed offsets (unlike a batch export,
-        // where a lost pin kills the whole run)
+        // DELIBERATELY a one-copy localCheckpoint, not Pins.pin: on a
+        // cluster Pins.pin would replicate every micro-batch, and
+        // micro-batch replay covers block loss — a batch whose pin
+        // blocks die with an executor fails the batch, and the stream
+        // REPLAYS it from the checkpointed offsets (unlike a batch
+        // export, where a lost pin kills the whole run)
         val keyed = batch.select(col("doc_id"), col("text"))
           .withColumn("_rid", monotonically_increasing_id())
           .localCheckpoint(true)
@@ -633,9 +633,9 @@ object Streams {
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // pinned synthetic row key — deliberately localCheckpoint, not
-        // Pins.pin: batch replay covers block loss (see
-        // runDecontaminationGate)
+        // pinned synthetic row key — deliberately a one-copy
+        // localCheckpoint, not Pins.pin: micro-batch replay covers
+        // block loss (see runDecontaminationGate)
         val keyed = batch.select(col("doc_id"), col("text"))
           .withColumn("_rid", monotonically_increasing_id())
           .localCheckpoint(true)
@@ -643,15 +643,12 @@ object Streams {
         // result so this batch can RELEASE it after the write — the
         // plain form would strand one verdict pin per micro-batch
         // until plan GC (an AvailableNow catch-up runs thousands).
-        // withReliable(false): the internal pin is per-batch state,
-        // same policy as `keyed` above — under a session-wide
-        // reliablePins=true it would otherwise file-checkpoint every
-        // micro-batch (and the block release below is a no-op for
-        // file-backed pins, so a thousand-batch catch-up would strand
-        // a thousand checkpoint file sets instead of blocks)
-        val (rew0, removedPin) = graft.operators.Pins.withReliable(false)(
+        // That verdict pin goes through Pins.pin, so a cluster keeps a
+        // replica of it too; it holds one row per leaked arrival, so
+        // the replica is cheap.
+        val (rew0, removedPin) =
           graft.AnalyticsQueries.decontaminateRewritePinned(
-            keyed.select(col("_rid").as("doc_id"), col("text")), prep))
+            keyed.select(col("_rid").as("doc_id"), col("text")), prep)
         val rew = rew0.withColumnRenamed("doc_id", "_rid")
         // inner join is exact here: every _rid appears exactly once on
         // each side (the rewrite emits one row per input row)

@@ -78,18 +78,13 @@ class ContainmentSpec extends AnyFunSuite {
     assert(pref == full && full.nonEmpty)
   }
 
-  test("bottom-k sketch q126 equals q118 at the lossless config; fast config only loses pairs it skipped") {
+  test("bottom-k sketch q126 equals q118 at the lossless config") {
     def keyed(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r =>
         (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val full = keyed(DedupQueries.q118Containment(spark, SparkSuite.sf0001))
     val sketch = keyed(DedupQueries.q126ContainmentSketch(spark, SparkSuite.sf0001))
     assert(sketch == full && full.nonEmpty)
-    // the fast config is an honest SUBSET: every emitted pair carries
-    // the exact verified containment (no estimated values ever leak)
-    val fast = keyed(DedupQueries.containmentSketchFor(
-      spark, SparkSuite.sf0001, k = 16, minHits = 11, rareFirst = true))
-    fast.foreach { case (pair, c) => assert(full.get(pair).contains(c)) }
   }
 
   test("q121 subsumption drops the contained copy and keeps the superset") {

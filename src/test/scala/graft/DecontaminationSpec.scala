@@ -138,30 +138,4 @@ class DecontaminationSpec extends AnyFunSuite {
     assert(man.contains(""""rule":"rewrite""""), man)
     assert(man.contains(""""rewritten":2"""), man)
   }
-
-  test("exportCurated under RELIABLE pins: file-backed end to end, shards certify") {
-    // the 100 TB fault-tolerance mode (graft.operators.Pins): every pin
-    // in the verdict→decontaminate→export chain becomes a checkpoint-FS
-    // file, so NO executor-resident pin blocks exist for an executor
-    // loss to take (PinsSpec proves a file-backed pin survives total
-    // block loss; this proves the whole entry point routes through it)
-    val dir = writeDocs(Seq(leakDoc(100L, 5), leakDoc(102L, 3)))
-    val out = java.nio.file.Files.createTempDirectory("decon-rel").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("decon-ckpt").toString
-    spark.sparkContext.setCheckpointDir(ckpt)
-    spark.conf.set(graft.operators.Pins.ReliableConf, "true")
-    try {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      CurationRun.exportCurated(spark, dir, out, 2, seed = 4L,
-        decontaminate = Some(CurationRun.Decontaminate.Drop(benchDf)))
-      val newPins = spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => before.contains(id) }
-      assert(newPins.isEmpty,
-        s"reliable export left executor-block pins: ${newPins.keySet}")
-      val gotDocs = spark.read.parquet(out).select("doc_id")
-        .collect().map(_.getLong(0)).toSet
-      assert(!gotDocs.contains(100L) && gotDocs.contains(102L), s"$gotDocs")
-      assert(graft.sources.TrainingExport.verifyShards(spark, out).isEmpty)
-    } finally spark.conf.set(graft.operators.Pins.ReliableConf, "false")
-  }
 }

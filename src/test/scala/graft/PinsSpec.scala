@@ -5,13 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Pins
 
-/** The reliable-pin option for long-running entry points: a
-  * localCheckpoint pin's blocks die with their executor (lineage is
-  * severed — the job is unrecoverable), while a
-  * `spark.graft.reliablePins=true` pin is files on the checkpoint FS
-  * and survives losing every block. Block loss is simulated the way an
-  * executor loss manifests to the block manager: the pinned RDD's
-  * blocks are dropped (unpersist) after materialization. */
+/** The one pin mechanism under the suite's local master: a
+  * `localCheckpoint` with one block copy, whose blocks die with their
+  * executor (lineage is severed — the read is unrecoverable). Block
+  * loss is simulated the way an executor loss manifests to the block
+  * manager: the pinned RDD's blocks are dropped (unpersist) after
+  * materialization. ExecutorLossSpec covers the replicated level a
+  * cluster master gets. */
 class PinsSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
 
@@ -29,32 +29,20 @@ class PinsSpec extends AnyFunSuite {
     val pinned = Pins.pin((1 to 1000).toDF("x").withColumn("y", col("x") * 2))
     assert(pinned.count() == 1000)
     backingRdd(pinned).unpersist(blocking = true) // "executor lost"
-    intercept[org.apache.spark.SparkException] { pinned.count() }
+    val e = intercept[org.apache.spark.SparkException] { pinned.count() }
+    val conditions = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null)
+      .collect { case t: org.apache.spark.SparkThrowable => t.getCondition }
+      .toSeq
+    assert(conditions.contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"),
+      s"want the lost-checkpoint-block condition, got $conditions")
   }
 
-  test("reliablePins=true: the pin survives total block loss") {
-    import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("relpins").toString
-    spark.sparkContext.setCheckpointDir(ckpt)
-    spark.conf.set(Pins.ReliableConf, "true")
-    try {
-      val pinned = Pins.pin((1 to 1000).toDF("x").withColumn("y", col("x") * 2))
-      assert(pinned.count() == 1000)
-      backingRdd(pinned).unpersist(blocking = true)
-      // file-backed: the re-read recovers every row and value
-      assert(pinned.agg(sum("y")).head().getLong(0) == 1001000L)
-      // releaseCheckpoint stays a safe no-op in reliable mode
-      graft.operators.DedupOps.releaseCheckpoint(pinned)
-      assert(pinned.count() == 1000)
-    } finally spark.conf.set(Pins.ReliableConf, "false")
-  }
-
-  test("pin tags round-trip through BOTH pin mechanisms via boundTag") {
+  test("pin tags round-trip through boundTag") {
     import spark.implicits._
     // the structural broadcast net (PlanRegressionSpec) reads a pin's
     // justification back out of the optimized plan through the RDD
-    // name — this pins the encode/decode contract on both mechanisms
-    spark.conf.set(Pins.ReliableConf, "false")
+    // name — this pins the encode/decode contract
     val local = Pins.pin((1 to 10).toDF("x"), "size-gated")
     assert(Pins.boundTag(backingRdd(local).name) == Some("size-gated"))
     // the tag survives plan composition: the LogicalRDD inside a
@@ -66,15 +54,6 @@ class PinsSpec extends AnyFunSuite {
         Pins.boundTag(lr.rdd.name)
     }
     assert(tags.nonEmpty && tags.forall(_ == Some("size-gated")), tags)
-    // reliable (file-backed) path carries the tag too
-    val dir = java.nio.file.Files.createTempDirectory("reltag").toString +
-      "/pins"
-    Pins.withReliableRun(spark, dir) {
-      val rel = Pins.pin((1 to 10).toDF("x"), "size-gated")
-      assert(Pins.boundTag(backingRdd(rel).name) == Some("size-gated"),
-        s"reliable pin lost its tag: ${backingRdd(rel).name}")
-      rel.count()
-    }
     // untagged pins read None; non-pin names read None; empty tags
     // are rejected at the call site
     assert(Pins.boundTag(backingRdd(Pins.pin((1 to 3).toDF("x"))).name).isEmpty)
@@ -87,346 +66,14 @@ class PinsSpec extends AnyFunSuite {
 
   test("default pin is block-backed (localCheckpoint), not file-backed") {
     import spark.implicits._
-    spark.conf.set(Pins.ReliableConf, "false")
-    val pinned = Pins.pin((1 to 10).toDF("x"))
-    val sl = backingRdd(pinned).getStorageLevel
-    assert(sl.useMemory || sl.useDisk,
-      s"default pin must live in executor blocks, got $sl")
-  }
-
-  test("a RankOps ranking under reliable pins completes after block loss") {
-    import spark.implicits._
-    val ckpt = java.nio.file.Files.createTempDirectory("relpins2").toString
-    spark.sparkContext.setCheckpointDir(ckpt)
-    spark.conf.set(Pins.ReliableConf, "true")
-    try {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val df = (1 to 500).map(i => (i.toLong, s"d$i")).toDF("k", "v")
-      val ranked = graft.operators.RankOps
-        .globalRowNumber(df, Seq(col("k").desc), "rank")
-      assert(ranked.count() == 500)
-      // reliable mode leaves NO executor-resident pin blocks — the pin
-      // is files, so there is nothing an executor loss can take (test 2
-      // above proves a file-backed pin re-reads after block loss)
-      val newPinned = spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => before.contains(id) }
-      assert(newPinned.isEmpty,
-        s"reliable mode left executor-block pins: ${newPinned.keySet}")
-      val top = ranked.filter(col("rank") === 1).select("k").head().getLong(0)
-      assert(top == 500L)
-    } finally spark.conf.set(Pins.ReliableConf, "false")
-  }
-
-  test("withReliable scopes the pin mode per entry point, overriding the conf") {
-    import spark.implicits._
-    // conf says LOCAL; a scope hardens ONLY its own pins — the
-    // session-global flip would tax every dimension-sized pin 1.7×
-    spark.conf.set(Pins.ReliableConf, "false")
-    val ckpt = java.nio.file.Files.createTempDirectory("relscope").toString
-    spark.sparkContext.setCheckpointDir(ckpt)
-    val inside = Pins.withReliable(true) { Pins.pin((1 to 10).toDF("x")) }
-    assert(backingRdd(inside).getCheckpointFile.isDefined,
-      "scoped pin not file-backed")
-    val outside = Pins.pin((1 to 10).toDF("x"))
-    assert(backingRdd(outside).getCheckpointFile.isEmpty,
-      "pin outside the scope must stay local")
-    // and the inverse: conf says RELIABLE, a scope opts its pins OUT
-    // (a cheap bench pin inside a hardened session)
-    spark.conf.set(Pins.ReliableConf, "true")
-    try {
-      val fast = Pins.withReliable(false) { Pins.pin((1 to 10).toDF("x")) }
-      assert(backingRdd(fast).getCheckpointFile.isEmpty,
-        "opt-out scope still file-backed")
-    } finally spark.conf.set(Pins.ReliableConf, "false")
-  }
-
-  test("withReliableRun hardens one run and deletes its checkpoint dir on exit") {
-    import spark.implicits._
-    spark.conf.set(Pins.ReliableConf, "false")
-    val prevDir = java.nio.file.Files.createTempDirectory("relprev").toString
-    spark.sparkContext.setCheckpointDir(prevDir)
-    val dir = java.nio.file.Files.createTempDirectory("relrun").toString +
-      "/pins"
-    val n = Pins.withReliableRun(spark, dir) {
-      val pinned = Pins.pin((1 to 100).toDF("x"))
-      val f = backingRdd(pinned).getCheckpointFile
-      assert(f.isDefined && f.get.contains("pins"),
-        s"run pin not file-backed under the run dir: $f")
-      pinned.count() // outputs materialized INSIDE the run
-    }
-    assert(n == 100)
-    // run exit: checkpoint files GONE (no cleanCheckpoints conf
-    // needed), previous checkpoint dir restored
-    assert(!new java.io.File(dir).exists(),
-      "run checkpoint dir must be deleted on exit")
-    assert(spark.sparkContext.getCheckpointDir.exists(_.contains("relprev")),
-      s"previous checkpoint dir not restored: " +
-        s"${spark.sparkContext.getCheckpointDir}")
-    // failure path cleans up too
-    intercept[RuntimeException] {
-      Pins.withReliableRun(spark, dir) {
-        Pins.pin((1 to 10).toDF("x")).count()
-        throw new RuntimeException("boom")
-      }
-    }
-    assert(!new java.io.File(dir).exists(),
-      "run checkpoint dir must be deleted on the failure path")
-  }
-
-  test("withReliableRun deletes only its OWN pin files; foreign content survives") {
-    import spark.implicits._
-    spark.conf.set(Pins.ReliableConf, "false")
-    // a directory that ALREADY exists with someone else's content at
-    // the run-dir path: a wholesale rm -r on exit would destroy data
-    // the caller never handed to the run (and, for two concurrent
-    // reliable runs, the other run's live checkpoint files)
-    val dir = java.nio.file.Files.createTempDirectory("relshare").toString +
-      "/pins"
-    new java.io.File(dir).mkdirs()
-    val foreign = new java.io.File(dir, "keep.txt")
-    java.nio.file.Files.write(foreign.toPath,
-      "precious".getBytes("UTF-8"))
-    Pins.withReliableRun(spark, dir) {
-      Pins.pin((1 to 50).toDF("x")).count()
-    }
-    assert(foreign.exists, "run cleanup wiped foreign content in its dir")
-    // ...but the run's own checkpoint files are gone: the only FILE
-    // left anywhere under dir is the foreign one
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-    val files =
-      try walk.filter(java.nio.file.Files.isRegularFile(_)).toArray.toSeq
-      finally walk.close()
-    assert(files == Seq(foreign.toPath),
-      s"expected only the foreign file to remain, got $files")
-  }
-
-  test("withReliableRun leaves a foreign EMPTY directory in its dir alone") {
-    import spark.implicits._
-    spark.conf.set(Pins.ReliableConf, "false")
-    // a pre-existing workspace used as the run dir, holding an empty
-    // staging dir another process is about to populate: the old tree
-    // sweep deleted every empty dir it could reach — empty does not
-    // mean ours; the ownership-precise cleanup (recorded pins + the
-    // run's own uuid dir + dir itself, non-recursive) must not touch it
-    val dir = java.nio.file.Files.createTempDirectory("relempty").toString +
-      "/pins"
-    val staging = new java.io.File(dir, "staging")
-    staging.mkdirs()
-    Pins.withReliableRun(spark, dir) {
-      Pins.pin((1 to 50).toDF("x")).count()
-    }
-    assert(staging.isDirectory,
-      "run cleanup deleted a foreign empty directory it never created")
-  }
-
-  test("pending removals drop after bounded retries (no cross-epoch leak)") {
-    import spark.implicits._
-    spark.conf.set(Pins.ReliableConf, "false")
-    // three PERMANENTLY occupied run dirs (foreign content makes the
-    // non-recursive delete fail every time, by design) used across
-    // three epochs, then clean epochs whose last-out retry sweeps
-    // accrue the strikes (per-exit direct failures are the expected
-    // sibling race and do NOT count — only last-out sweeps do).
-    // Before the retry bound, every such path was re-enqueued and
-    // retried by EVERY future epoch forever (one wasted FS RPC each);
-    // with the 3-sweep bound the set must drain to empty.
-    // PRECONDITION: the drain arithmetic below (exactly two clean
-    // epochs) assumes the process-global pendingRemovals map starts
-    // empty. Earlier suite tests LEGITIMATELY leave permanently
-    // occupied dirs pending (their foreign-content fixtures), so drain
-    // them with clean epochs first — any pending path reaches the
-    // 3-sweep bound within MaxRemovalRetries clean epochs — and fail
-    // with a clear message if that somehow doesn't converge, instead
-    // of a confusing drain-count mismatch at the end.
-    var drainEpochs = 0
-    while (Pins.pendingRemovalCount > 0 && drainEpochs < 4) {
-      val d = java.nio.file.Files.createTempDirectory("reldrain").toString
-      Pins.withReliableRun(spark, d) {
-        Pins.pin((1 to 10).toDF("x")).count()
-      }
-      drainEpochs += 1
-    }
-    assert(Pins.pendingRemovalCount == 0,
-      "precondition: pendingRemovals did not drain to empty after " +
-        s"$drainEpochs clean epochs - an earlier test leaked a pending " +
-        "path that keeps failing without accruing strikes")
-    val occupied = (1 to 3).map { i =>
-      val dir = java.nio.file.Files.createTempDirectory(s"relbound$i")
-        .toString + "/pins"
-      val foreign = new java.io.File(dir, "occupant.txt")
-      foreign.getParentFile.mkdirs()
-      java.nio.file.Files.writeString(foreign.toPath, "keep")
-      (dir, foreign)
-    }
-    occupied.foreach { case (dir, _) =>
-      Pins.withReliableRun(spark, dir) {
-        Pins.pin((1 to 10).toDF("x")).count()
-      }
-    }
-    // each occupied dir needs 3 last-out sweeps to be abandoned; the
-    // last one enqueued has seen 1 by now, so two clean epochs finish
-    // the drain
-    (1 to 2).foreach { _ =>
-      val clean = java.nio.file.Files.createTempDirectory("relclean").toString
-      Pins.withReliableRun(spark, clean) {
-        Pins.pin((1 to 10).toDF("x")).count()
-      }
-    }
-    assert(Pins.pendingRemovalCount == 0,
-      s"pendingRemovals retained ${Pins.pendingRemovalCount} path(s) " +
-        "past the retry bound")
-    occupied.foreach { case (_, foreign) =>
-      assert(foreign.exists, "retry bound must not delete foreign content")
-    }
-  }
-
-  test("overlapping withReliableRun scopes restore the ORIGINAL dir last-out") {
-    import spark.implicits._
-    spark.conf.set(Pins.ReliableConf, "false")
-    val original = java.nio.file.Files.createTempDirectory("relorig").toString
-    spark.sparkContext.setCheckpointDir(original)
-    val dirA = java.nio.file.Files.createTempDirectory("relA").toString + "/a"
-    val dirB = java.nio.file.Files.createTempDirectory("relB").toString + "/b"
-    // interleave two run scopes on two threads: A enters, B enters,
-    // A exits (must NOT restore — B is live; each run's own "prev" is
-    // a sibling's soon-deleted run dir), B exits (must restore the
-    // ORIGINAL dir captured at the 0→1 transition, not A's dir)
-    val aEntered = new java.util.concurrent.CountDownLatch(1)
-    val aMayExit = new java.util.concurrent.CountDownLatch(1)
-    val bDone = new java.util.concurrent.CountDownLatch(1)
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val tA = new Thread(() => try {
-      Pins.withReliableRun(spark, dirA) {
-        Pins.pin((1 to 20).toDF("x")).count()
-        aEntered.countDown()
-        // bounded: if B dies before its countDown, A must still exit
-        // (an unbounded await would hold A's run scope open forever,
-        // suppressing every later test's checkpoint-dir restore)
-        aMayExit.await(120, java.util.concurrent.TimeUnit.SECONDS)
-      }
-    } catch { case t: Throwable => errs.add(t); aEntered.countDown() })
-    val tB = new Thread(() => try {
-      aEntered.await()
-      Pins.withReliableRun(spark, dirB) {
-        Pins.pin((1 to 20).toDF("x")).count()
-        aMayExit.countDown() // A exits while B is still live
-        tA.join()
-        // A's exit must not have redirected B's context dir to A's
-        // captured prev (the restore is reserved for the last exit)
-        // getCheckpointDir returns the URI-qualified form
-        // (file:/tmp/...), so compare by substring, not prefix
-        val mid = spark.sparkContext.getCheckpointDir
-        assert(mid.exists(_.contains(dirB)),
-          s"A's exit redirected the live run's checkpoint dir: $mid")
-      }
-      bDone.countDown()
-    } catch { case t: Throwable => errs.add(t); bDone.countDown() })
-    tA.start(); tB.start()
-    assert(bDone.await(120, java.util.concurrent.TimeUnit.SECONDS))
-    tB.join()
-    assert(errs.isEmpty, s"run threads failed: ${errs.peek()}")
-    // the registered dir is original/<uuid> (setCheckpointDir appends
-    // a uuid subdir) — the restore puts back exactly that captured path
-    assert(spark.sparkContext.getCheckpointDir.exists(_.contains(original)),
-      s"last exit restored ${spark.sparkContext.getCheckpointDir}, " +
-        s"not the original $original")
-  }
-
-  test("overlapping runs: the last exit sweeps dirs an earlier exit could not") {
-    // B enters first, then A (context dir → A's uuid dir); B pins — the
-    // file lands in A's uuid dir, the dir being SparkContext-global
-    // while the scopes are thread-local. A exits FIRST: its
-    // non-recursive removeEmpty must fail harmlessly (B's live pin
-    // inside) and record the target; B's exit retries it after B's own
-    // pin delete — no empty uuid/run dirs may leak on the FS.
-    import spark.implicits._
-    spark.conf.set(Pins.ReliableConf, "false")
-    val original = java.nio.file.Files.createTempDirectory("retryorig").toString
-    spark.sparkContext.setCheckpointDir(original)
-    val rootA = java.nio.file.Files.createTempDirectory("retryA").toString
-    val rootB = java.nio.file.Files.createTempDirectory("retryB").toString
-    val dirA = rootA + "/a"
-    val dirB = rootB + "/b"
-    val bEntered = new java.util.concurrent.CountDownLatch(1)
-    val aEntered = new java.util.concurrent.CountDownLatch(1)
-    val bPinned = new java.util.concurrent.CountDownLatch(1)
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val tA = new Thread(() => try {
-      bEntered.await(120, java.util.concurrent.TimeUnit.SECONDS)
-      Pins.withReliableRun(spark, dirA) {
-        aEntered.countDown()
-        // exit only after B's pin landed in THIS run's uuid dir
-        bPinned.await(120, java.util.concurrent.TimeUnit.SECONDS)
-      }
-    } catch { case t: Throwable => errs.add(t); aEntered.countDown() })
-    val tB = new Thread(() => try {
-      Pins.withReliableRun(spark, dirB) {
-        bEntered.countDown()
-        aEntered.await(120, java.util.concurrent.TimeUnit.SECONDS)
-        val pinned = Pins.pin((1 to 20).toDF("x"))
-        pinned.count()
-        bPinned.countDown()
-        tA.join(120000) // A's exit runs (and fails its dir removes) here
-        // A could not have removed its dirs — B's pin is live in them
-        assert(new java.io.File(dirA).exists(),
-          "A removed a dir holding B's live pin")
-        pinned.count() // the pin must still be readable
-      }
-    } catch { case t: Throwable => errs.add(t); bPinned.countDown() })
-    tA.start(); tB.start()
-    tA.join(150000); tB.join(150000)
-    assert(errs.isEmpty, s"run threads failed: ${errs.peek()}")
-    // B (last out) retried A's failed removals: nothing leaks
-    assert(!new java.io.File(dirA).exists(), s"leaked run dir $dirA")
-    assert(!new java.io.File(dirB).exists(), s"leaked run dir $dirB")
-    assert(spark.sparkContext.getCheckpointDir.exists(_.contains(original)))
-  }
-
-  test("restore is skipped when the caller set its own dir mid-epoch") {
-    import spark.implicits._
-    spark.conf.set(Pins.ReliableConf, "false")
-    val original = java.nio.file.Files.createTempDirectory("skiporig").toString
-    spark.sparkContext.setCheckpointDir(original)
-    val dirR = java.nio.file.Files.createTempDirectory("skiprun").toString + "/r"
-    val mine = java.nio.file.Files.createTempDirectory("skipmine").toString
-    Pins.withReliableRun(spark, dirR) {
-      Pins.pin((1 to 10).toDF("x")).count()
-      // the caller takes ownership of the checkpoint dir mid-epoch:
-      // the exit must NOT write the epoch-start capture over it
-      spark.sparkContext.setCheckpointDir(mine)
-    }
-    assert(spark.sparkContext.getCheckpointDir.exists(_.contains(mine)),
-      s"exit clobbered the caller's dir: ${spark.sparkContext.getCheckpointDir}")
-    // the dropped capture must not leak into the NEXT epoch: it
-    // captures the caller's dir and restores exactly that
-    Pins.withReliableRun(spark, dirR) {
-      Pins.pin((1 to 10).toDF("x")).count()
-    }
-    assert(spark.sparkContext.getCheckpointDir.exists(_.contains(mine)),
-      s"next epoch restored a stale dir: ${spark.sparkContext.getCheckpointDir}")
-    spark.sparkContext.setCheckpointDir(original)
-  }
-
-  test("exportCurated(reliable=true) hardens its run pins and leaves no _pins dir") {
-    val out = java.nio.file.Files.createTempDirectory("relexport").toString +
-      "/shards"
-    spark.conf.set(Pins.ReliableConf, "false")
-    val stats = CurationRun.exportCurated(spark, SparkSuite.sf0001, out,
-      nShards = 2, seed = 7L, decontaminate = None, reliable = true)
-    assert(stats.nonEmpty && stats.map(_.rows).sum > 0)
-    // the run-scoped checkpoint dir (the SIBLING ${out}_pins — inside
-    // `out` the overwrite-mode shard write would delete it mid-run) is
-    // cleaned with the run; the shards it pinned through it remain
-    assert(!new java.io.File(s"${out}_pins").exists(),
-      "run-scoped pin dir must not outlive the export")
-    assert(spark.read.parquet(out).count() == stats.map(_.rows).sum)
-    // equals the local-pin export bit-for-bit (mode changes WHERE pins
-    // live, never what they hold)
-    val out2 = java.nio.file.Files.createTempDirectory("relexport2")
-      .toString + "/shards"
-    val stats2 = CurationRun.exportCurated(spark, SparkSuite.sf0001, out2,
-      nShards = 2, seed = 7L, decontaminate = None, reliable = false)
-    assert(stats.map(s => (s.shard, s.rows)) ==
-      stats2.map(s => (s.shard, s.rows)))
+    // the suite (like the benchmark) runs a local master: the pin keeps
+    // exactly the one-copy MEMORY_AND_DISK level a plain
+    // localCheckpoint(true) uses — a replica would have no peer
+    assert(spark.sparkContext.isLocal)
+    val rdd = backingRdd(Pins.pin((1 to 10).toDF("x")))
+    val sl = rdd.getStorageLevel
+    assert(sl.useDisk && sl.useMemory && sl.replication == 1,
+      s"local-master pin must be one-copy memory+disk blocks, got $sl")
+    assert(rdd.getCheckpointFile.isEmpty, "pin must not be file-backed")
   }
 }

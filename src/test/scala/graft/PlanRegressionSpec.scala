@@ -337,6 +337,67 @@ class PlanRegressionSpec extends AnyFunSuite {
       "comment/scaladoc mentions must not be counted")
   }
 
+  /** Second-pin-mechanism violations in one product file: a reliable
+    * `checkpoint(` call, a `setCheckpointDir`, or a `localCheckpoint(`
+    * that carries anything but its eager flag (a storage level) outside
+    * Pins.scala. Pins.pin is the ONE place that decides where a pin's
+    * blocks live and how many copies exist; a bare
+    * `localCheckpoint(true)` stays legal (one copy, the documented
+    * choice for state a replay can rebuild). Split out so the planted
+    * test can assert the decision on synthetic lines. */
+  private def pinMechanismViolations(fileName: String,
+      lines: Seq[String]): Seq[String] = {
+    val reliable = "(^|[^l])checkpoint\\(".r
+    val localAny = "localCheckpoint\\(".r
+    val localBare =
+      "localCheckpoint\\(\\s*(eager\\s*=\\s*)?(true|false)?\\s*\\)".r
+    lines.map(_.trim)
+      .filterNot(l => l.startsWith("*") || l.startsWith("//"))
+      .flatMap { l =>
+        val leveled = localAny.findAllIn(l).size > localBare.findAllIn(l).size
+        Seq(
+          reliable.findFirstIn(l).map(_ => s"$fileName: reliable checkpoint: $l"),
+          Option.when(l.contains("setCheckpointDir"))(
+            s"$fileName: setCheckpointDir: $l"),
+          Option.when(leveled && fileName != "Pins.scala")(
+            s"$fileName: leveled localCheckpoint outside Pins: $l")).flatten
+      }
+  }
+
+  test("source tripwire: Pins.pin is the only pin mechanism") {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        tripwireScans(p.getFileName.toString))
+      .toSeq
+    assert(files.exists(_.getFileName.toString == "Pins.scala"))
+    val found = files.flatMap(p => pinMechanismViolations(
+      p.getFileName.toString,
+      java.nio.file.Files.readAllLines(p).asScala.toSeq))
+    assert(found.isEmpty, "a second pin mechanism in product code " +
+      "(route the pin through Pins.pin):\n  " + found.mkString("\n  "))
+  }
+
+  test("hatch closed: a reliable or leveled checkpoint outside Pins is flagged") {
+    val planted = Seq(
+      "val p = df.checkpoint(true)",
+      "spark.sparkContext.setCheckpointDir(dir)",
+      "df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_2)",
+      "df.localCheckpoint(eager = true,")
+    assert(pinMechanismViolations("Rogue.scala", planted).size == 4,
+      pinMechanismViolations("Rogue.scala", planted))
+    // the same leveled call IS legal in Pins.scala, the one owner
+    assert(pinMechanismViolations("Pins.scala", planted.drop(2)).isEmpty)
+    // bare one-copy pins, the release helper and comments stay legal
+    assert(pinMechanismViolations("Rogue.scala", Seq(
+      "val k = batch.localCheckpoint(true)",
+      "df.localCheckpoint(eager = true) // pinned",
+      "DedupOps.releaseCheckpoint(keyed)",
+      "// sc.setCheckpointDir(dir) used to go here",
+      "* `checkpoint(true)` was the reliable mode")).isEmpty)
+  }
+
   test("no aggregate window runs a sliding frame (Spark cannot retract)") {
     // Spark's sliding WindowFunctionFrame re-aggregates the WHOLE
     // frame on every move (no retraction), so `rangeBetween(-24h, 0)`

@@ -1100,66 +1100,17 @@ class StreamsSpec extends AnyFunSuite {
       .select("doc_id", "contaminated").collect()
       .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(got == Map(20L -> true, 21L -> false, 22L -> false), s"$got")
-  }
-
-  test("rewrite gate under reliablePins: per-batch pins stay LOCAL, no checkpoint files accumulate") {
-    import spark.implicits._
-    // a hardened SESSION (reliablePins=true + checkpoint dir): the
-    // gate's per-batch pins (keyed batch, removal verdict) must stay
-    // executor-local — batch replay covers block loss, and the block
-    // release after each write is a no-op for file-backed pins, so
-    // routing them through the conf would strand one checkpoint file
-    // set per micro-batch on the FS. Only the ONE suite-prep pin may
-    // land as files.
-    val pinsDir = java.nio.file.Files.createTempDirectory("relgate").toString
-    // restore the session's checkpoint-dir state afterwards — leaving
-    // the temp dir set would couple any later reliable-mode test to
-    // this one's FS state (Spark has no unset, so a pre-existing dir
-    // is put back and "none was set" is left as-is but documented by
-    // the reliable-pin require() every consumer hits)
-    val prevCkptDir = spark.sparkContext.getCheckpointDir
-    spark.sparkContext.setCheckpointDir(pinsDir)
-    spark.conf.set(graft.operators.Pins.ReliableConf, "true")
-    try {
-      val bench = Seq((9000L, (1 to 8).map(j => s"rb$j").mkString(" ")))
-        .toDF("doc_id", "text")
-      // three files + maxFilesPerTrigger=1 → three micro-batches in
-      // one AvailableNow run (the prepare-once test's pattern)
-      val in = java.nio.file.Files.createTempDirectory("relgate_in").toString
-      Seq((40L, (1 to 8).map(j => s"rb$j").mkString(" ") + " keep1 keep2"))
-        .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in)
-      Seq((41L, (1 to 12).map(j => s"u$j").mkString(" ")))
-        .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in)
-      Seq((42L, (1 to 12).map(j => s"v$j").mkString(" ")))
-        .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in)
-      val stream = spark.readStream
-        .schema("doc_id LONG, text STRING")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in)
-      val out = java.nio.file.Files.createTempDirectory("relgate_out")
-        .toString + "/o"
-      val ckpt = java.nio.file.Files.createTempDirectory("relgate_ck").toString
-      Streams.runDecontaminationRewrite(stream, bench, out, ckpt)
-      val commits = new java.io.File(s"$ckpt/commits").listFiles()
-        .count(_.getName.forall(_.isDigit))
-      assert(commits >= 3, s"expected ≥3 micro-batches, got $commits")
-      // checkpoint FS holds AT MOST the suite-prep pin's one rdd dir
-      val walk = java.nio.file.Files.walk(
-        java.nio.file.Paths.get(pinsDir))
-      val rddDirs =
-        try walk.filter(p => p.getFileName.toString.startsWith("rdd-"))
-          .toArray.length
-        finally walk.close()
-      // EXACTLY one: more means per-batch pins escaped to the FS,
-      // zero means the suite-prep pin silently lost its reliable mode
-      assert(rddDirs == 1,
-        s"want exactly the suite-prep pin on the checkpoint FS, got " +
-          s"$rddDirs rdd dirs after $commits batches")
-      assert(spark.read.parquet(out).count() == 3)
-    } finally {
-      spark.conf.set(graft.operators.Pins.ReliableConf, "false")
-      prevCkptDir.foreach(spark.sparkContext.setCheckpointDir)
-    }
+    // the REWRITE gate over the same three files: ≥3 micro-batches in
+    // one run, one receipt row per arrival, one more suite read (its
+    // own prepare pin)
+    val rwOut = java.nio.file.Files.createTempDirectory("dgate1_rw").toString + "/o"
+    val rwCkpt = java.nio.file.Files.createTempDirectory("dgate1_rwck").toString
+    Streams.runDecontaminationRewrite(stream, bench, rwOut, rwCkpt)
+    val rwCommits = new java.io.File(s"$rwCkpt/commits").listFiles()
+      .count(_.getName.forall(_.isDigit))
+    assert(rwCommits >= 3, s"expected ≥3 micro-batches, got $rwCommits")
+    assert(acc.value == 2L, s"suite source read ${acc.value} times")
+    assert(spark.read.parquet(rwOut).count() == 3)
   }
 
   test("decontamination gate: a NULL doc_id arrival gets its own verdict") {
