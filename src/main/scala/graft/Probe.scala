@@ -37,7 +37,11 @@ import graft.index.IvfIndex
   *    family's pin-free shingle pipeline;
   *  - `serve <sfDir> [reps]` — the single-query search path split into
   *    planning, page job and backfill job, plus floors, a fused variant
-  *    and end-to-end AQE off/on; one JSON line;
+  *    and end-to-end AQE off/on; one JSON line. Then a write phase: a
+  *    `RestServer` on a temp dir takes `reps` warm rounds of a
+  *    10-document upload and a one-document delete, and the probe prints
+  *    jobs and job ms per round for each `"<route>/<step>"` and one JSON
+  *    line of per-route wall times;
   *  - `ivf-scale [nRows] [dim]` — the IVF lifecycle on a synthesized
   *    corpus at the reference's production constants (listSize 10k,
   *    sample 50k): build, brute force, nprobe recall, quantized and
@@ -302,6 +306,66 @@ object Probe {
     } finally {
       spark.conf.set(aqeKey, aqe0)
       Seq(docsHot, idx, e).foreach(_.unpersist())
+    }
+    serveWrites(spark, reps)
+  }
+
+  /** The write half of the serve path, over HTTP against a
+    * [[graft.server.RestServer]] on a temp dir: a cold upload trains the
+    * model and one warm round runs untimed, then `reps` rounds of a
+    * 10-document upload and a one-document delete. */
+  private def serveWrites(spark: SparkSession, reps: Int): Unit = {
+    import java.net.URI
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+    val dir = Files.createTempDirectory("graft-probe-serve")
+    val server = new graft.server.RestServer(spark, dir.toString)
+    val port = server.start()
+    val client = HttpClient.newHttpClient()
+    def post(route: String, body: String): String = {
+      val r = client.send(HttpRequest.newBuilder(URI.create(s"http://localhost:$port$route"))
+        .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      require(r.statusCode() == 200, s"$route -> ${r.statusCode()}: ${r.body().take(200)}")
+      r.body()
+    }
+    def upload(tag: String, n: Int): Seq[Long] = {
+      val docs = (0 until n).map(i =>
+        s"""{"document":"probe $tag doc $i about topic ${i % 7} and register ${i % 3}"}""")
+      val ids = "\\d+".r.findAllIn(post("/api/upload",
+        docs.mkString("""{"owner":"probe","documents":[""", ",", "]}"))).map(_.toLong).toSeq
+      require(ids.size == n, s"upload answered ${ids.size} ids for $n documents")
+      ids
+    }
+    val ledger = new JobLedger(spark)
+    spark.sparkContext.addSparkListener(ledger)
+    try {
+      var live = upload("seed", 200)
+      def round(r: Int): (Seq[(Int, String, Double)], Double, Double) = {
+        ledger.drain()
+        var t0 = System.nanoTime()
+        live = live ++ upload(s"round$r", 10)
+        val upMs = (System.nanoTime() - t0) / 1e6
+        t0 = System.nanoTime()
+        post("/api/delete/document", s"""{"document_id":${live.head}}""")
+        val delMs = (System.nanoTime() - t0) / 1e6
+        live = live.tail
+        (ledger.drain(), upMs, delMs)
+      }
+      round(0) // warm: the stores and the JIT warm up
+      val rounds = (1 to reps).map(round)
+      rounds.flatMap(_._1).groupBy(_._2).toSeq.sortBy(_._1).foreach { case (step, js) =>
+        println(f"[serve] write $step%-20s jobs=${js.size.toDouble / reps}%.1f " +
+          f"ms=${js.map(_._3).sum * 1e3 / reps}%.1f")
+      }
+      def per(route: String) = rounds.map(_._1.count(_._2.startsWith(route + "/"))).sum.toDouble / reps
+      def f(v: Double) = BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
+      println(s"""{"probe":"serve-write","reps":$reps,""" +
+        s""""upload_ms":${f(rounds.map(_._2).sum / reps)},"upload_jobs":${f(per("upload"))},""" +
+        s""""delete_ms":${f(rounds.map(_._3).sum / reps)},"delete_jobs":${f(per("delete"))}}""")
+    } finally {
+      spark.sparkContext.removeSparkListener(ledger)
+      server.stop()
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
     }
   }
 

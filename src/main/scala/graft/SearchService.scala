@@ -285,39 +285,26 @@ object SearchService {
       req.history, req.documents ++ fetched, req.prefix, req.text)
   }
 
-  /** Full document DELETE lifecycle (reference server/delete.go:214-288):
-    * the relational cascade — document + chunk stores, co-bucketed so only
-    * touched buckets rewrite — plus the index half
-    * ([[graft.sources.IvfBinarySource.delete]] — only lists holding the
-    * doomed chunk rows rewrite). Victim chunk ids come from an id-only
-    * index scan (physical column pruning: no vector bytes read) via the
-    * ingest path's vec_id = doc_id·10⁵ + chunk_id encoding
-    * ([[graft.streaming.Streams.ChunkVecIdBase]]). Returns the number of
-    * index rows deleted. */
+  /** Full document DELETE lifecycle (reference server/delete.go:214-288)
+    * for ids the caller holds, as a request does: the index half
+    * ([[graft.sources.IvfBinarySource.deleteDocs]] — a discovery job over
+    * the doc ids' vec_id envelope that reads no vector bytes, then a
+    * rewrite of only the lists holding their chunks, via the ingest
+    * path's vec_id = doc_id·10⁵ + chunk_id encoding,
+    * [[graft.streaming.Streams.ChunkVecIdBase]]), then the relational
+    * cascade over the document and chunk stores, co-bucketed so only
+    * touched buckets rewrite. The ids reach the stores as a driver-local
+    * frame, so each store's delete runs two Spark jobs when it knows its
+    * schema ([[ParquetStore.deleteKeys]]): six for the whole cascade.
+    * Returns the number of index rows deleted. */
   def deleteDocuments(spark: SparkSession, docStore: ParquetStore,
       chunkStore: ParquetStore, indexPath: String, docIds: Set[Long]): Long = {
     if (docIds.isEmpty) return 0L
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(docIds)
-    val base = graft.streaming.Streams.ChunkVecIdBase
-    val ofDoomedDoc = udf((vid: Long) => bc.value.contains(vid / base))
-    // doc ids map to contiguous vec_id ranges, so the doomed set has a
-    // pushable envelope [min·base, (max+1)·base): the connector's vec_id
-    // zone maps skip part files wholly outside it (the reference's
-    // B-tree id lookup, database/model.go:9-18); the udf refines exactly
-    val victims = spark.read
-      .format(graft.sources.IvfBinarySource.FORMAT).load(indexPath)
-      .select("vec_id")
-      .filter(col("vec_id").between(docIds.min * base,
-        docIds.max * base + (base - 1)) && ofDoomedDoc(col("vec_id")))
-    // distributed delete: victims flow to their list's rewrite task via
-    // a centroid-keyed join — a document with a million chunks never
-    // lands its chunk ids on the driver (ADVICE r4)
     val removed = Jobs.step(spark, "delete/index")(
-      graft.sources.IvfBinarySource.delete(spark, indexPath, victims))
-    val doomed = Jobs.step(spark, "delete/victims")(
-      docIds.toSeq.toDF(docStore.keyCol).localCheckpoint(true))
-    deleteRows(spark, docStore, chunkStore, doomed)
+      graft.sources.IvfBinarySource.deleteDocs(spark, indexPath, docIds,
+        graft.streaming.Streams.ChunkVecIdBase))
+    deleteRows(spark, docStore, chunkStore, docIds.toSeq.toDF(docStore.keyCol))
     removed
   }
 
@@ -336,7 +323,9 @@ object SearchService {
     * ([[graft.operators.DedupOps.gateKnown]] — broadcast when the scope
     * is request-sized, sort-merge when tenant-sized) against an id-only
     * index scan bounded by the doomed [lo,hi]·base vec_id envelope
-    * (zone-map file skipping, as in the Set overload). */
+    * (zone-map file skipping, as in the Set overload), and reach their
+    * lists through [[graft.sources.IvfBinarySource.delete]]'s shuffle
+    * join. */
   def deleteDocuments(spark: SparkSession, docStore: ParquetStore,
       chunkStore: ParquetStore, indexPath: String, doomedDocs: DataFrame,
       broadcastRowLimit: Long = graft.operators.DedupOps.BroadcastRowLimit)

@@ -14,7 +14,7 @@ import com.github.luben.zstd.{ZstdInputStream, ZstdOutputStream}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 
 import graft.{Jobs, SearchService}
 import graft.functions.{gf, EmbedProvider, GenerateProvider, NoopGenerateProvider}
@@ -54,11 +54,16 @@ import graft.streaming.Streams
   * lists the writes landed in), a doc-id counter, and a read view: the
   * resolved documents frame and the decoded index frame, which every read
   * reuses until a write drops it. The view holds plans and a file
-  * listing, never data. Rebuilding it after a write reads the doc store
-  * with the schema captured on its first resolve, so a plain search
-  * costs two Spark jobs (page, backfill) instead of also re-merging every
-  * parquet footer per request. Each Spark action a handler runs is named
-  * `"<route>/<step>"` ([[graft.Jobs]]). Tenant
+  * listing, never data. The server is the stores' only writer and
+  * declares their columns ([[RestServer.DocSchema]],
+  * [[RestServer.ChunkSchema]]), so no read or rewrite merges parquet
+  * footers. A plain search costs two Spark jobs
+  * (page, backfill). The writes run on keys the server minted and holds:
+  * a warm /api/delete/document costs six (a discovery job and a list
+  * rewrite in the index, a pin and a write per store) and a warm
+  * /api/upload seven (the embed pin, the index append's two, the
+  * doc-store upsert's three, the chunk append). Each Spark action a
+  * handler runs is named `"<route>/<step>"` ([[graft.Jobs]]). Tenant
   * scoping is size-gated, not driver-bounded: owner/category search
   * filters ride a gateKnown semi join (broadcast only when the scope is
   * small), and owner/category deletes keep their victim set a DataFrame
@@ -75,8 +80,10 @@ final class RestServer(spark: SparkSession, dataDir: String,
   private val mapper = new ObjectMapper()
   private val indexDir = s"$dataDir/index"
   private val modelDir = s"$dataDir/model"
-  private val docStore = ParquetStore(s"$dataDir/documents", "document_id", nBuckets = 16)
-  private val chunkStore = ParquetStore(s"$dataDir/chunks", "doc_id", nBuckets = 16)
+  private val docStore = ParquetStore(s"$dataDir/documents", "document_id", nBuckets = 16,
+    schema = Some(RestServer.DocSchema))
+  private val chunkStore = ParquetStore(s"$dataDir/chunks", "doc_id", nBuckets = 16,
+    schema = Some(RestServer.ChunkSchema))
 
   // server-held state beyond config: the centroid matrix (driver-side,
   // nLists × dim floats) and the id counter, both rebuilt from storage on
@@ -90,15 +97,10 @@ final class RestServer(spark: SparkSession, dataDir: String,
   // installed over the write's result; guarded by viewLock
   private var viewGen = 0L
   private val viewLock = new Object
-  // the doc store's columns, captured on the first resolve: the server is
-  // the store's only writer and always writes the same columns, so a
-  // later resolve skips the footer-merging schema job
-  @volatile private var docSchema: Option[StructType] = None
 
   private def readView(): RestServer.ReadView = view.getOrElse {
     val gen = viewLock.synchronized(viewGen)
-    val docs = Jobs.step(spark, "view/doc-schema")(docStore.read(spark, docSchema))
-    docSchema = Some(docs.schema)
+    val docs = Jobs.step(spark, "view/doc-schema")(docStore.read(spark))
     val v = RestServer.ReadView(docs, spark.read.format(IvfBinarySource.FORMAT).load(indexDir)
       .select(col("vec_id"),
         expr(s"vec_id div ${Streams.ChunkVecIdBase}").as("document_id"),
@@ -121,8 +123,10 @@ final class RestServer(spark: SparkSession, dataDir: String,
   private def hasIndex: Boolean = nonEmptyDir(indexDir)
 
   private def bootstrapFromStorage(): Unit = if (hasIndex) {
-    nextId.set(Jobs.step(spark, "bootstrap/id-counter")(
-      readView().docs.agg(max("document_id")).collect()(0).getLong(0) + 1))
+    // a store whose every document was deleted has no max: count from 1
+    val maxId = Jobs.step(spark, "bootstrap/id-counter")(
+      readView().docs.agg(max("document_id")).collect()(0))
+    nextId.set((if (maxId.isNullAt(0)) 0L else maxId.getLong(0)) + 1)
     // serve the SAME model the corpus was indexed under: upload persists
     // the trained centroids (the reference's DB keeps centroid rows for
     // exactly this — restarts don't re-derive the index, dnc.go /
@@ -315,9 +319,12 @@ final class RestServer(spark: SparkSession, dataDir: String,
           .cast("long").as("vec_id"),
         col("qvec"), col("centroid_id").cast("int").as("centroid_id"))
       .write.format(IvfBinarySource.FORMAT).mode("append").save(indexDir))
-    Jobs.step(spark, "upload/doc-store")(docStore.upsertOrCreate(
-      items.map { case (id, ext, js) => (id, ext, owner, category, js) }
-        .toDF("document_id", "external_id", "owner", "category", "doc_json")))
+    // the ids are fresh, but an append would add a file per touched
+    // bucket per upload: the upsert's bucket rewrite keeps one file per
+    // bucket for the search backfill's full-store scan
+    val docRows = items.map { case (id, ext, js) => (id, ext, owner, category, js) }
+      .toDF("document_id", "external_id", "owner", "category", "doc_json")
+    Jobs.step(spark, "upload/doc-store")(docStore.upsertOrCreate(docRows))
     // chunk store is doc-id keyed for the delete cascade (deleteKeys
     // drops every chunk row of a doomed doc), so multi-chunk docs must
     // APPEND (S6), never upsert — upsert's merge keeps one row per key
@@ -473,6 +480,17 @@ object RestServer {
   /** What every read resolves from storage: the documents frame and the
     * decoded index frame. */
   private final case class ReadView(docs: DataFrame, index: DataFrame)
+
+  /** The document store's columns, as the upload writes them. */
+  val DocSchema: StructType = StructType(Seq(
+    StructField("document_id", LongType), StructField("external_id", StringType),
+    StructField("owner", StringType), StructField("category", StringType),
+    StructField("doc_json", StringType)))
+
+  /** The chunk store's columns, as the upload writes them. */
+  val ChunkSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("chunk_id", IntegerType),
+    StructField("chunk", StringType)))
 
   /** Index rows semi-filtered to a tenant scope, size-gated
     * ([[graft.operators.DedupOps.gateKnown]]): broadcast only when the

@@ -234,34 +234,45 @@ object IvfBinarySource {
     * visible BEFORE the old ones disappear, so a crash mid-swap can
     * duplicate rows but never lose them. Returns # lists compacted. */
   def compact(spark: SparkSession, path: String): Long =
-    rewriteLists(spark, path, minFiles = 2, dropIds = Set.empty, only = None)
+    rewriteLists(spark, path, minFiles = 2, drop = _ => false, only = None)
 
-  /** Targeted row deletion — the index half of the reference's document
-    * DELETE cascade (server/delete.go:214-288; ParquetStore.cascadeDelete
-    * owns the relational half). Affected lists are located first by a
-    * vec_id+centroid_id scan that reads no vector bytes (physical column
-    * pruning), then ONLY those lists rewrite — deletion cost follows the
-    * touched lists, not the corpus. Returns # rows deleted, computed as
-    * the before/after row-count delta over the touched lists (file sizes
-    * ÷ row width), which stays exact under task retries. */
-  def delete(spark: SparkSession, path: String, ids: Set[Long]): Long = {
-    if (ids.isEmpty) return 0L
+  /** Targeted document deletion — the index half of the reference's
+    * document DELETE cascade (server/delete.go:214-288;
+    * ParquetStore.cascadeDelete owns the relational half), for ids the
+    * driver holds. Drops every row whose `vec_id / base` is in `docIds`,
+    * with `base` the ingest path's vec id encoding (vec_id =
+    * doc_id·base + chunk_id, [[graft.streaming.Streams.ChunkVecIdBase]];
+    * `base` 1 deletes by vec id). The doc ids map to the contiguous
+    * envelope [min·base, max·base + base − 1], so the zone maps skip every
+    * file outside it. Two Spark jobs: one discovery job scans `vec_id` and
+    * `centroid_id` only (no vector bytes) inside the envelope, and each
+    * task returns the distinct lists its doomed rows sit in — no shuffle,
+    * and no vec id reaches the driver. Then one rewrite job streams ONLY
+    * those lists, dropping the doomed rows ([[rewriteLists]]); an id the
+    * index does not hold rewrites nothing. Returns # rows deleted, the
+    * before/after row-count delta over the touched lists (file sizes ÷
+    * row width), which stays exact under task retries. */
+  def deleteDocs(spark: SparkSession, path: String, docIds: Set[Long],
+      base: Long): Long = {
     val root = new Path(path)
     val rootFs = fs(root)
-    if (!rootFs.exists(root)) return 0L
-    val bc = spark.sparkContext.broadcast(ids)
-    val hit = org.apache.spark.sql.functions.udf((id: Long) => bc.value.contains(id))
-    // the pushable range conjunct lets the zone maps skip whole files;
-    // the udf (residual) then gives exact membership on survivors
+    if (docIds.isEmpty || !rootFs.exists(root)) return 0L
+    val doomed: Long => Boolean = vid => docIds.contains(vid / base)
+    val bc = spark.sparkContext.broadcast(doomed)
     val affected = spark.read.format(FORMAT).load(path)
       .select("vec_id", "centroid_id")
-      .filter(col("vec_id").between(ids.min, ids.max) && hit(col("vec_id")))
-      .select("centroid_id").distinct()
-      .collect().map(_.getInt(0)).toSet
+      .filter(col("vec_id").between(docIds.min * base, docIds.max * base + (base - 1)))
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        val cids = scala.collection.mutable.Set[Int]()
+        rows.foreach(r => if (bc.value(r.getLong(0))) cids += r.getInt(1))
+        cids.iterator
+      }
+      .collect().toSet
     if (affected.isEmpty) return 0L
     val width = rowWidth(readDim(path)).toLong
     val before = rowsIn(rootFs, root, width, affected)
-    rewriteLists(spark, path, minFiles = 1, dropIds = ids, only = Some(affected))
+    rewriteLists(spark, path, minFiles = 1, drop = doomed, only = Some(affected))
     before - rowsIn(rootFs, root, width, affected)
   }
 
@@ -282,10 +293,12 @@ object IvfBinarySource {
     * that doom millions of rows. Only scalars come back: the [lo,hi]
     * envelope (2 longs, lets the vec_id zone maps skip whole files) and
     * the affected centroid ids (needed for file listing, which is driver
-    * work in any layout). The broadcast-Set overload above remains the
-    * cheaper call for request-sized deletes (the reference's DELETE
-    * /api/document carries explicit ids, server/delete.go:214-288);
-    * this one is the bulk path. Returns # rows deleted. */
+    * work in any layout). This is the bulk path: it costs a victim
+    * distinct and min/max collect, a persisted per-list `collect_set` and
+    * a shuffle join. A request whose ids the driver already holds (the
+    * reference's DELETE /api/document carries explicit ids,
+    * server/delete.go:214-288) takes the two-job [[deleteDocs]]
+    * instead. Returns # rows deleted. */
   def delete(spark: SparkSession, path: String, victims: DataFrame): Long = {
     val root = new Path(path)
     val rootFs = fs(root)
@@ -336,8 +349,9 @@ object IvfBinarySource {
         st.getModificationTime))
       .filter { case (cid, _, _) => only.forall(_.contains(cid)) }
 
-  /** Shared rewrite engine for [[compact]] and [[delete]]: each selected
-    * list's part files stream into one new file, dropping `dropIds` rows.
+  /** Shared rewrite engine for [[compact]] and the deletes: each
+    * selected list's part files stream into one new file, dropping the
+    * rows `drop` accepts.
     * Idempotent under Spark task retries / speculation: the merged file's
     * name is a pure function of the input file set, so a second attempt
     * either finds it already swapped in (and only finishes deleting
@@ -345,7 +359,7 @@ object IvfBinarySource {
     * input files that a prior attempt already deleted are skipped.
     * Returns # lists rewritten. */
   private def rewriteLists(spark: SparkSession, path: String, minFiles: Int,
-      dropIds: Set[Long], only: Option[Set[Int]]): Long = {
+      drop: Long => Boolean, only: Option[Set[Int]]): Long = {
     val root = new Path(path)
     val rootFs = fs(root)
     if (!rootFs.exists(root)) return 0L
@@ -357,7 +371,7 @@ object IvfBinarySource {
       .filter(_._2.size >= minFiles)
       .toSeq
     if (work.isEmpty) return 0L
-    val bc = spark.sparkContext.broadcast(dropIds)
+    val bc = spark.sparkContext.broadcast(drop)
     spark.sparkContext
       .parallelize(work, math.min(work.size, spark.sparkContext.defaultParallelism))
       .foreach { case (cid, files) =>
@@ -374,10 +388,11 @@ object IvfBinarySource {
   /** One list's rewrite — the task body of [[rewriteLists]], executed on
     * an executor and REPLAYABLE: any prefix of a previous attempt's
     * side effects (partial deletes, a completed swap) leads a re-run to
-    * the same final state with no duplicated rows. Package-private so the
+    * the same final state with no duplicated rows. `drop` picks the rows
+    * to leave out; a `Set[Long]` of vec ids is one. Package-private so the
     * retry contract is unit-testable without staging task failures. */
   private[graft] def rewriteOneList(path: String, cid: Int,
-      files: Seq[String], drop: Set[Long], width: Int): Unit = {
+      files: Seq[String], drop: Long => Boolean, width: Int): Unit = {
     val d = new Path(path, s"list=$cid")
     val efs = fs(d)
     // deterministic target name = hash of the input file set → a task
@@ -427,7 +442,7 @@ object IvfBinarySource {
                 }
                 val id = ByteBuffer.wrap(rowBuf, 0, 8)
                   .order(ByteOrder.LITTLE_ENDIAN).getLong
-                if (!drop.contains(id)) {
+                if (!drop(id)) {
                   out.write(rowBuf, 0, width)
                   kept += 1
                   if (id < mn) mn = id

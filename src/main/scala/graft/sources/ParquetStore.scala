@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StructType
@@ -14,15 +15,29 @@ import org.apache.spark.sql.types.StructType
   * `_bucket=<0..nBuckets-1>` partition directories. Every mutation:
   *   1. computes the buckets its keys touch (tiny driver-side set),
   *   2. reads ONLY those partition directories (partition pruning),
-  *   3. merges/filters in one shuffle bounded by the touched buckets,
-  *   4. rewrites only those directories via dynamic partition overwrite.
+  *   3. merges/filters them into the buckets' new rows,
+  *   4. rewrites only those directories via dynamic partition overwrite
+  *      ([[rewriteBuckets]]).
   *
   * At 100 TB with nBuckets sized so a bucket is a few GB, a point upsert
   * or delete rewrites a handful of directories, never the table. Child
   * tables bucketed with the SAME hash on the FK column are co-partitioned:
   * a cascade delete touches exactly the matching child buckets.
+  *
+  * `schema` is the stored columns, when the caller knows them (say, the
+  * store's only writer). Reads and rewrites then skip the Spark job that
+  * merges every part file's footer. Without it they merge footers, so
+  * buckets written before a column was added still read, missing columns
+  * as null; a known schema that is a superset of older files' columns
+  * reads them the same way.
+  *
+  * A mutation whose keys are a driver-local frame (a `LocalRelation`, as
+  * `Seq(...).toDF` builds) learns its touched buckets from a projection
+  * the optimizer folds into that relation, so it runs no job for them;
+  * any other frame runs one distinct job.
   */
-final case class ParquetStore(path: String, keyCol: String, nBuckets: Int = 64) {
+final case class ParquetStore(path: String, keyCol: String, nBuckets: Int = 64,
+    schema: Option[StructType] = None) {
 
   private def bucketOf(key: Column): Column = pmod(xxhash64(key), lit(nBuckets))
 
@@ -43,87 +58,111 @@ final case class ParquetStore(path: String, keyCol: String, nBuckets: Int = 64) 
   def create(df: DataFrame): Unit =
     withBucket(df).write.mode("overwrite").option("compression", "zstd").partitionBy("_bucket").parquet(path)
 
-  /** The stored rows, without the bucket column. With no `schema`, the
-    * read merges every part file's footer (one Spark job) so buckets
-    * written before a column was added still read, missing columns as
-    * null. A caller that already knows the columns — say, from an earlier
-    * read of a store only it writes — passes them as `schema` and the
-    * read costs only a file listing. */
-  def read(spark: SparkSession, schema: Option[StructType] = None): DataFrame =
+  /** Every stored row with its `_bucket` column. */
+  private def stored(spark: SparkSession): DataFrame =
     (schema match {
       case Some(s) => spark.read.schema(s)
       case None => spark.read.option("mergeSchema", "true")
-    }).parquet(path).drop("_bucket")
+    }).parquet(path)
+
+  /** The stored rows, without the bucket column. With a known `schema`
+    * the read costs only a file listing; without it, one footer-merging
+    * Spark job. */
+  def read(spark: SparkSession): DataFrame = stored(spark).drop("_bucket")
 
   /** S6 insert sink: append — new files land in their key's bucket dirs,
     * no existing file is touched. */
   def append(df: DataFrame): Unit =
     withBucket(df).write.mode("append").option("compression", "zstd").partitionBy("_bucket").parquet(path)
 
+  /** The distinct buckets of `keyed`'s `_bucket` column, and the frame's
+    * rows when it is driver-local (collecting those runs no job). */
+  private def touchedBy(keyed: DataFrame): (Seq[Long], Option[Array[Row]]) =
+    keyed.queryExecution.optimizedPlan match {
+      case _: LocalRelation =>
+        val rows = keyed.collect()
+        (rows.map(_.getAs[Long]("_bucket")).distinct.toSeq, Some(rows))
+      case _ =>
+        (keyed.select("_bucket").distinct().collect().map(_.getLong(0)).toSeq, None)
+    }
+
   /** S7 update sink (MERGE-on-key): rows in `updates` replace same-key
-    * rows; unmatched keys are inserted. Only touched buckets rewrite. */
+    * rows; unmatched keys are inserted. Only touched buckets rewrite.
+    * With driver-local updates and a known `schema` it runs three Spark
+    * jobs: the merge's shuffle and pin, and the write. */
   def upsert(updates: DataFrame): Unit = {
-    val spark = updates.sparkSession
     val up = withBucket(updates).withColumn("_new", lit(1))
-    val touched = up.select("_bucket").distinct().collect().map(_.getLong(0))
-    if (touched.isEmpty) return // empty update: nothing to merge or rewrite
-    val existing = spark.read.option("mergeSchema", "true").parquet(path)
-      .filter(col("_bucket").isin(touched: _*))
-      .withColumn("_new", lit(0))
-    val w = Window.partitionBy(col(keyCol)).orderBy(col("_new").desc)
-    // allowMissingColumns: an upsert may carry columns the stored rows
-    // predate (schema evolution) or omit stored ones (nulls fill in)
-    val merged = existing.unionByName(up, allowMissingColumns = true)
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn", "_new")
-    // the merged frame reads from the directories being overwritten —
-    // break the dependency before the dynamic overwrite
-    val snapshot = merged.localCheckpoint(true)
+    val (touched, _) = touchedBy(up)
+    rewriteBuckets(updates.sparkSession, touched) { existing =>
+      val w = Window.partitionBy(col(keyCol)).orderBy(col("_new").desc)
+      // allowMissingColumns: an upsert may carry columns the stored rows
+      // predate (schema evolution) or omit stored ones (nulls fill in)
+      existing.withColumn("_new", lit(0))
+        .unionByName(up, allowMissingColumns = true)
+        .withColumn("_rn", row_number().over(w))
+        .filter(col("_rn") === 1)
+        .drop("_rn", "_new")
+    }
+  }
+
+  /** S8 delete sink: drop rows whose KEY matches `keys` (first column);
+    * only their buckets rewrite. Driver-local keys filter the survivors
+    * with an IN list, and with a known `schema` the delete runs two
+    * Spark jobs, the pin and the write; any other key frame anti-joins.
+    * Deleting every row leaves the store readable (see
+    * [[rewriteBuckets]]). */
+  def deleteKeys(keys: DataFrame): Unit = {
+    val k = keys.columns.head
+    val del = keys.select(col(k).as(keyCol), bucketOf(col(k)).as("_bucket"))
+    val (touched, local) = touchedBy(del)
+    rewriteBuckets(keys.sparkSession, touched) { existing =>
+      local match {
+        case Some(rows) => existing.filter(!col(keyCol).isin(rows.map(_.get(0)).toSeq: _*))
+        case None => existing.join(del.select(keyCol), Seq(keyCol), "left_anti")
+      }
+    }
+  }
+
+  /** The one bucket rewrite behind upsert, delete and compact: `merge`
+    * turns the rows of the `touched` buckets into their new contents,
+    * which are pinned, then written by dynamic partition overwrite. That
+    * write stages its files and swaps a bucket's directory only when the
+    * job commits, so a failed write leaves the store as it was. It
+    * replaces only the buckets present in its output, so a bucket whose
+    * rows were ALL deleted keeps its old files through the commit; those
+    * directories are removed after it (a crash in between leaves the
+    * doomed rows, which the same delete removes on a retry). When the
+    * store ends up empty, one zero-row file carrying the schema keeps it
+    * readable (parquet cannot infer a schema from a bare _SUCCESS
+    * marker). */
+  private def rewriteBuckets(spark: SparkSession, touched: Seq[Long])(
+      merge: DataFrame => DataFrame): Unit = {
+    if (touched.isEmpty) return
+    val snapshot = merge(stored(spark).filter(col("_bucket").isin(touched: _*)))
+      .localCheckpoint(true)
+    def files(b: Long): Set[String] =
+      Option(new java.io.File(s"$path/_bucket=$b").list()).fold(Set.empty[String])(_.toSet)
+    val before = touched.map(b => b -> files(b))
     dynamicOverwrite(spark) {
       snapshot.write.mode("overwrite").option("compression", "zstd").partitionBy("_bucket").parquet(path)
     }
-  }
-
-  /** S8 delete sink: drop rows whose KEY matches `keys`; only their
-    * buckets rewrite. Touched bucket directories are cleared explicitly
-    * BEFORE the survivors land: dynamic partition overwrite only
-    * replaces partitions present in the write, so a bucket whose rows
-    * are ALL doomed would emit no output partition and its stale files
-    * would silently survive the delete. */
-  def deleteKeys(keys: DataFrame): Unit = {
-    val spark = keys.sparkSession
-    val k = keys.columns.head
-    val del = keys.withColumn("_bucket", bucketOf(col(k)))
-    val touched = del.select("_bucket").distinct().collect().map(_.getLong(0))
-    if (touched.isEmpty) return
-    val existing = spark.read.option("mergeSchema", "true").parquet(path)
-      .filter(col("_bucket").isin(touched: _*))
-    val kept = existing.join(del.select(col(k).as(keyCol)), Seq(keyCol), "left_anti")
-    // materialize the survivors BEFORE their source directories vanish
-    val snapshot = kept.localCheckpoint(true)
-    val schema = org.apache.spark.sql.types.StructType(
-      snapshot.schema.filterNot(_.name == "_bucket"))
+    // an overwritten bucket holds only new files: one still holding an
+    // old file got no output rows
     val conf = spark.sparkContext.hadoopConfiguration
-    touched.foreach { b =>
+    for ((b, old) <- before if (files(b) & old).nonEmpty) {
       val dir = new org.apache.hadoop.fs.Path(s"$path/_bucket=$b")
       dir.getFileSystem(conf).delete(dir, true)
     }
-    snapshot.write.mode("append").option("compression", "zstd").partitionBy("_bucket").parquet(path)
-    if (bucketDirs.isEmpty) {
-      // the delete emptied the store: land one zero-row file carrying
-      // the schema so the store stays readable (parquet cannot infer a
-      // schema from a bare _SUCCESS marker)
+    if (bucketDirs.isEmpty)
       spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq.empty[org.apache.spark.sql.Row], 1),
-        schema).write.mode("append").option("compression", "zstd").parquet(path)
-    }
+        spark.sparkContext.parallelize(Seq.empty[Row], 1),
+        StructType(snapshot.schema.filterNot(_.name == "_bucket")))
+        .write.mode("append").option("compression", "zstd").parquet(path)
   }
 
   /** Small-file compaction: buckets holding `minFiles`+ parquet parts
-    * rewrite into a single file each via the same dynamic partition
-    * overwrite as upsert — buckets under the threshold keep their
-    * files untouched. Streaming upsert/append lands one file per
+    * rewrite into a single file each — buckets under the threshold keep
+    * their files untouched. Streaming upsert/append lands one file per
     * (micro-batch, bucket), so per-bucket file count — and every
     * read's open() cost — grows with batch count until compaction
     * restores one-file-per-bucket (the relational twin of
@@ -134,18 +173,10 @@ final case class ParquetStore(path: String, keyCol: String, nBuckets: Int = 64) 
       .filter(d => d.isDirectory && d.getName.startsWith("_bucket="))
       .filter(_.listFiles().count(_.getName.endsWith(".parquet")) >= minFiles)
       .map(_.getName.stripPrefix("_bucket=").toLong)
-    if (crowded.isEmpty) return 0L
     // one shuffle partition per crowded bucket → one output file per
     // dir (a hash collision folds two buckets into one task; each dir
     // still receives exactly one file, written by that task)
-    val rows = spark.read.option("mergeSchema", "true").parquet(path)
-      .filter(col("_bucket").isin(crowded: _*))
-      .repartition(crowded.length, col("_bucket"))
-    val snapshot = rows.localCheckpoint(true)
-    dynamicOverwrite(spark) {
-      snapshot.write.mode("overwrite").option("compression", "zstd")
-        .partitionBy("_bucket").parquet(path)
-    }
+    rewriteBuckets(spark, crowded.toSeq)(_.repartition(crowded.length, col("_bucket")))
     crowded.length.toLong
   }
 

@@ -517,7 +517,7 @@ class IvfBinarySourceSpec extends AnyFunSuite {
         .map(f => (f.getName, f.lastModified())).toSeq
     }.toMap
     val n0 = load().count()
-    val dropped = IvfBinarySource.delete(spark, p, victims)
+    val dropped = IvfBinarySource.deleteDocs(spark, p, victims, 1L)
     assert(dropped == victims.size.toLong)
     assert(load().count() == n0 - victims.size)
     assert(load().filter(col("vec_id").isin(victims.toSeq: _*)).count() == 0)
@@ -531,11 +531,11 @@ class IvfBinarySourceSpec extends AnyFunSuite {
     // deleting every remaining row of the victim list removes its dir
     val rest = load().filter(col("centroid_id") === victimList)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    IvfBinarySource.delete(spark, p, rest)
+    IvfBinarySource.deleteDocs(spark, p, rest, 1L)
     assert(!new java.io.File(p, s"list=$victimList").exists())
     assert(load().filter(col("centroid_id") === victimList).count() == 0)
     // deleting unknown ids is a no-op
-    assert(IvfBinarySource.delete(spark, p, Set(Long.MaxValue)) == 0L)
+    assert(IvfBinarySource.deleteDocs(spark, p, Set(Long.MaxValue), 1L) == 0L)
   }
 
   test("DataFrame-victim delete matches the Set path without a driver set") {
@@ -586,4 +586,28 @@ class IvfBinarySourceSpec extends AnyFunSuite {
       Seq(Tuple1(Long.MaxValue), Tuple1(Long.MaxValue - 1))).toDF("vec_id")
     assert(IvfBinarySource.delete(spark, p, absent) == 0L)
   }
+
+  test("deleteDocs drops a document from every list its chunks sit in") {
+    import spark.implicits._
+    val base = 100000L
+    // document d's chunk c sits in list (d + c) % 4: each document spans
+    // three lists
+    val p = tmp()
+    (1L to 6L).flatMap(d => (0 until 3).map(c =>
+        (d * base + c, Seq.fill(8)((d * 10 + c).toFloat), ((d + c) % 4).toInt)))
+      .toDF("vec_id", "embedding", "centroid_id")
+      .select(col("vec_id"), gf.quantize_vec(col("embedding")).as("qvec"), col("centroid_id"))
+      .write.format(IvfBinarySource.FORMAT).mode("overwrite").save(p)
+    def load() = spark.read.format(IvfBinarySource.FORMAT).load(p)
+    val lists = load().filter(col("vec_id").between(4 * base, 5 * base - 1))
+      .select("centroid_id").distinct().count()
+    assert(lists == 3, "document 4 must span three lists")
+    assert(IvfBinarySource.deleteDocs(spark, p, Set(4L), base) == 3L)
+    val left = load().select("vec_id").collect().map(_.getLong(0) / base).toSeq
+    assert(!left.contains(4L))
+    assert(left.groupBy(identity).map { case (d, vs) => d -> vs.size } ==
+      (Set(1L, 2L, 3L, 5L, 6L).map(_ -> 3).toMap))
+    assert(IvfBinarySource.deleteDocs(spark, p, Set.empty, base) == 0L)
+  }
 }
+

@@ -112,6 +112,18 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(store.read(spark).select("v").collect().map(_.getString(0)).toSeq == Seq("z"))
   }
 
+  test("an upsert whose write fails leaves every stored row in place") {
+    import spark.implicits._
+    val rows = (1L to 40L).map(k => (k, s"v$k"))
+    val store = ParquetStore(tmp(), "k", nBuckets = 8)
+    store.create(rows.toDF("k", "v"))
+    // parquet cannot store a calendar interval: the merge and its pin
+    // succeed, the write of the touched buckets fails
+    intercept[Exception](store.upsert(Seq((5L, "new"), (41L, "ins")).toDF("k", "v")
+      .withColumn("bad", expr("make_interval(0, 0, 0, 1)"))))
+    assert(store.read(spark).collect().map(r => (r.getLong(0), r.getString(1))).toSet == rows.toSet)
+  }
+
   test("compact folds multi-file buckets to one file; sparse buckets untouched") {
     import spark.implicits._
     val store = ParquetStore(tmp(), "doc_id", nBuckets = 4)
@@ -153,4 +165,30 @@ class ParquetStoreSpec extends AnyFunSuite {
       .filter(f => f.getName.endsWith(".parquet"))
       .map(f => f.getAbsolutePath -> f.lastModified()).toMap
   }
+
+  test("driver-local keys on a known schema: delete in two jobs, upsert in three, same rows") {
+    import spark.implicits._
+    val rows = (1L to 40L).map(k => (k, s"v$k"))
+    val known = ParquetStore(tmp(), "k", nBuckets = 8, schema = Some(rows.toDF("k", "v").schema))
+    val merged = ParquetStore(tmp(), "k", nBuckets = 8)
+    // one input partition: every bucket starts as one file
+    Seq(known, merged).foreach(_.create(rows.toDF("k", "v").repartition(1)))
+    val del = SparkSuite.jobsOf(known.deleteKeys(Seq(3L, 17L, 29L).toDF("k")))
+    assert(del.size == 2, s"a local-key delete on a known schema runs the pin and the write: $del")
+    val up = SparkSuite.jobsOf(known.upsert(Seq((5L, "new"), (41L, "ins")).toDF("k", "v")))
+    assert(up.size <= 3, s"a local upsert on a known schema runs the merge and the write: $up")
+    // the same mutations through the footer-merging, distributed-key path
+    merged.deleteKeys(Seq(3L, 17L, 29L).toDF("k").localCheckpoint(true))
+    merged.upsert(Seq((5L, "new"), (41L, "ins")).toDF("k", "v").localCheckpoint(true))
+    def contents(st: ParquetStore) =
+      st.read(spark).collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(contents(known) == contents(merged))
+    assert(contents(known) == (rows.toMap -- Seq(3L, 17L, 29L) + (5L -> "new") + (41L -> "ins")).toSet)
+    // a delete keeps a one-file bucket one file; the upsert's merge writes
+    // each bucket it touches as one file
+    known.bucketDirs.foreach { d =>
+      assert(new java.io.File(known.path, d).listFiles().count(_.getName.endsWith(".parquet")) == 1, d)
+    }
+  }
 }
+

@@ -9,6 +9,8 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite.jobsOf
+
 /** Integration gate for the REST serving tier: the reference's
   * upload → search → chat → delete lifecycle driven END TO END through
   * real HTTP against the stub providers, plus the openapi payload
@@ -294,9 +296,12 @@ class RestServerSpec extends AnyFunSuite {
 
   /** A fresh server on its own data directory, with a POST helper that
     * returns the parsed JSON body. */
-  private def withServer(name: String)(body: ((String, String) => JsonNode) => Unit): Unit = {
-    val s = new graft.server.RestServer(spark,
-      java.nio.file.Files.createTempDirectory(name).toString)
+  private def withServer(name: String)(body: ((String, String) => JsonNode) => Unit): Unit =
+    withServerIn(java.nio.file.Files.createTempDirectory(name).toString)(body)
+
+  /** [[withServer]] on a given data directory. */
+  private def withServerIn(dir: String)(body: ((String, String) => JsonNode) => Unit): Unit = {
+    val s = new graft.server.RestServer(spark, dir)
     s.start()
     def call(path: String, req: String) = {
       val r = client.send(
@@ -307,24 +312,6 @@ class RestServerSpec extends AnyFunSuite {
       json(r)
     }
     try body(call) finally s.stop()
-  }
-
-  /** Descriptions of the Spark jobs `body` submits. */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        names.add(Option(j.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).getOrElse("<unnamed>"))
-    }
-    org.apache.spark.graftsync.ListenerSync.waitUntilEmpty(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.graftsync.ListenerSync.waitUntilEmpty(sc)
-    } finally sc.removeSparkListener(listener)
-    names.asScala.toSeq
   }
 
   test("a plain search runs two named Spark jobs, also right after a write") {
@@ -378,6 +365,87 @@ class RestServerSpec extends AnyFunSuite {
       assert(search(""","category":"cd"""") == d.toSet)
       assert(search(""","owner":"oa","category":"cd"""").isEmpty)
       assert(search(""","owner":"ob"""").isEmpty)
+    }
+  }
+
+  test("a warm delete runs six jobs in its three steps, a warm 10-document upload at most seven") {
+    withServer("rest-write-jobs") { call =>
+      def upload(tag: String, n: Int) = call("/api/upload", (1 to n)
+        .map(i => s"""{"document":"write job $tag doc $i"}""")
+        .mkString("""{"owner":"o","documents":[""", ",", "]}"))
+        .get("document_ids").elements().asScala.map(_.asLong()).toSeq
+      val ids = upload("seed", 30)
+      // warm both routes once
+      upload("warm", 10)
+      call("/api/delete/document", s"""{"document_id":${ids.head}}""")
+      val del = jobsOf(call("/api/delete/document", s"""{"document_id":${ids(1)}}"""))
+      assert(del.toSet.subsetOf(Set("delete/index", "delete/doc-store", "delete/chunk-store")),
+        s"a delete ran jobs outside its three steps: $del")
+      assert(del.size <= 6, s"a warm delete must run at most 6 jobs: $del")
+      val up = jobsOf(upload("measured", 10))
+      assert(up.size <= 7, s"a warm 10-document upload must run at most 7 jobs: $up")
+      // the deletes and the upload are all visible
+      val left = call("/api/search",
+        """{"text":"write job probe","count":20,"centroids":-1,"no_documents":true}""")
+        .get("documents").elements().asScala.map(_.get("document_id").asLong()).toSet
+      assert(!left.contains(ids.head) && !left.contains(ids(1)) && left.nonEmpty)
+    }
+  }
+
+  test("warm uploads and deletes keep one parquet file per document-store bucket") {
+    val dir = java.nio.file.Files.createTempDirectory("rest-files").toString
+    def crowded() = new java.io.File(dir, "documents").listFiles()
+      .filter(d => d.isDirectory && d.getName.startsWith("_bucket="))
+      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
+      .filter(_._2 > 1).toSeq
+    withServerIn(dir) { call =>
+      def upload(tag: String, n: Int) = call("/api/upload", (1 to n)
+        .map(i => s"""{"document":"file count $tag doc $i"}""")
+        .mkString("""{"documents":[""", ",", "]}"))
+        .get("document_ids").elements().asScala.map(_.asLong()).toSeq
+      // the first upload creates the store, one file per bucket per
+      // task; the second touches every bucket, and its upsert rewrites
+      // each as one file
+      var live = upload("seed", 40) ++ upload("spread", 150)
+      assert(crowded().isEmpty, s"buckets holding more than one file: ${crowded()}")
+      (1 to 5).foreach { r =>
+        live = live ++ upload(s"round$r", 10)
+        call("/api/delete/document", s"""{"document_id":${live.head}}""")
+        live = live.tail
+      }
+    }
+    assert(crowded().isEmpty, s"buckets holding more than one file: ${crowded()}")
+  }
+
+  test("the declared store schemas are the columns an upload writes") {
+    val dir = java.nio.file.Files.createTempDirectory("rest-schemas").toString
+    withServerIn(dir) { call =>
+      call("/api/upload", """{"owner":"o","category":"c","documents":[{"document":"schema doc"}]}""")
+    }
+    Seq("documents" -> graft.server.RestServer.DocSchema,
+        "chunks" -> graft.server.RestServer.ChunkSchema).foreach { case (store, declared) =>
+      val written = spark.read.parquet(s"$dir/$store").drop("_bucket").schema
+      assert(written.map(f => f.name -> f.dataType) == declared.map(f => f.name -> f.dataType),
+        s"$store wrote $written, declared $declared")
+    }
+  }
+
+  test("a restart after every document was deleted serves new uploads") {
+    val dir = java.nio.file.Files.createTempDirectory("rest-wiped").toString
+    withServerIn(dir) { call =>
+      call("/api/upload",
+        """{"documents":[{"document":"wiped doc one"},{"document":"wiped doc two"}]}""")
+        .get("document_ids").elements().asScala.map(_.asLong())
+        .foreach(id => call("/api/delete/document", s"""{"document_id":$id}"""))
+    }
+    withServerIn(dir) { call =>
+      val fresh = call("/api/upload",
+        """{"documents":[{"document":"a document after the wipe"}]}""")
+        .get("document_ids").get(0).asLong()
+      val found = call("/api/search",
+        """{"text":"a document after the wipe","count":5,"centroids":-1,"no_documents":true}""")
+        .get("documents").elements().asScala.map(_.get("document_id").asLong()).toSeq
+      assert(found == Seq(fresh), s"search after the restart returned $found, uploaded $fresh")
     }
   }
 

@@ -335,4 +335,61 @@ class SearchServiceSpec extends AnyFunSuite {
     assert(SearchService.deleteDocuments(spark, docStore, chunkStore, idx,
       spark.emptyDataFrame.select(lit(0L).as("doc_id")).filter(lit(false))) == 0L)
   }
+
+  /** A served corpus in miniature: documents `ids`, three chunks each,
+    * chunk c of document d in list (d + c) % 3, with both stores knowing
+    * their columns as the server's stores do. Returns the stores and the
+    * index path. */
+  private def miniCascade(ids: Seq[Long]): (ParquetStore, ParquetStore, String) = {
+    import spark.implicits._
+    import graft.sources.IvfBinarySource
+    import graft.streaming.Streams
+    def tmp(n: String) = java.nio.file.Files.createTempDirectory(n).toString
+    val docs = ids.map(d => (d, s"doc $d")).toDF("document_id", "doc_json")
+    val docStore = ParquetStore(tmp("mini-docs"), "document_id", nBuckets = 4,
+      schema = Some(docs.schema))
+    docStore.create(docs)
+    val chunks = ids.flatMap(d => (0 until 3).map(c => (d, c, s"chunk $c of $d")))
+      .toDF("doc_id", "chunk_id", "chunk")
+    val chunkStore = ParquetStore(tmp("mini-chunks"), "doc_id", nBuckets = 4,
+      schema = Some(chunks.schema))
+    chunkStore.create(chunks)
+    val idx = tmp("mini-idx")
+    ids.flatMap(d => (0 until 3).map(c =>
+        (d * Streams.ChunkVecIdBase + c, Seq.fill(8)((d * 10 + c).toFloat), ((d + c) % 3).toInt)))
+      .toDF("vec_id", "embedding", "centroid_id")
+      .select(col("vec_id"), gf.quantize_vec(col("embedding")).as("qvec"), col("centroid_id"))
+      .write.format(IvfBinarySource.FORMAT).mode("overwrite").save(idx)
+    (docStore, chunkStore, idx)
+  }
+
+  /** name -> mtime of every index part file under `idx`. */
+  private def listFiles(idx: String): Map[String, Long] =
+    new java.io.File(idx).listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles()).filter(_.getName.endsWith(".bin"))
+      .map(f => s"${f.getParentFile.getName}/${f.getName}" -> f.lastModified()).toMap
+
+  test("deleting an id nothing holds returns 0 and rewrites no list file") {
+    val (docStore, chunkStore, idx) = miniCascade(Seq(1L, 2L, 4L, 5L))
+    val before = listFiles(idx)
+    // 3 sits inside every list file's vec_id zone map, so discovery scans
+    // the files and finds no row
+    assert(SearchService.deleteDocuments(spark, docStore, chunkStore, idx, Set(3L)) == 0L)
+    assert(listFiles(idx) == before, "a delete that matched nothing rewrote list files")
+    assert(docStore.read(spark).count() == 4 && chunkStore.read(spark).count() == 12)
+  }
+
+  test("deleting every document leaves both stores readable, each with its zero-row file") {
+    val ids = Seq(1L, 2L, 3L)
+    val (docStore, chunkStore, idx) = miniCascade(ids)
+    assert(SearchService.deleteDocuments(spark, docStore, chunkStore, idx, ids.toSet) == 9L)
+    Seq(docStore, chunkStore).foreach { st =>
+      assert(st.read(spark).count() == 0, st.path)
+      assert(!st.isInitialized, st.path)
+      assert(new java.io.File(st.path).listFiles().count(_.getName.endsWith(".parquet")) == 1,
+        s"${st.path} must keep one schema-bearing zero-row file")
+    }
+    assert(docStore.read(spark).columns.toSeq == Seq("document_id", "doc_json"))
+    assert(spark.read.format(graft.sources.IvfBinarySource.FORMAT).load(idx).count() == 0)
+  }
 }

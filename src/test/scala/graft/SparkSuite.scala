@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole forked test JVM. */
@@ -17,6 +19,25 @@ object SparkSuite {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Descriptions of the Spark jobs `body` submits, in start order. */
+  def jobsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        names.add(Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse("<unnamed>"))
+    }
+    org.apache.spark.graftsync.ListenerSync.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.graftsync.ListenerSync.waitUntilEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    names.asScala.toSeq
+  }
+
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
 }
