@@ -23,13 +23,14 @@ import graft.sources.ParquetStore
 final case class OwnershipStore(root: String) {
 
   /** Owners keyed by their unique name (uq_owner_name, model.go:63-67). */
-  val owners: ParquetStore = ParquetStore(s"$root/owners", "owner_name", nBuckets = 4)
+  val owners: ParquetStore = ParquetStore(s"$root/owners", "owner_name", nBuckets = 4,
+    schema = Some(OwnershipStore.OwnerSchema))
 
   /** Categories keyed by the unique composite (owner_id, name)
     * (uq_category_name, model.go:48-54) encoded as one key column, so the
     * same category name under different owners stays distinct. */
-  val categories: ParquetStore =
-    ParquetStore(s"$root/categories", "category_key", nBuckets = 4)
+  val categories: ParquetStore = ParquetStore(s"$root/categories", "category_key",
+    nBuckets = 4, schema = Some(OwnershipStore.CategorySchema))
 
   private def keyOf(ownerId: Column, name: Column): Column =
     concat(ownerId.cast("string"), lit(":"), name)
@@ -145,6 +146,16 @@ final case class OwnershipStore(root: String) {
   def fetchCategories(spark: SparkSession, ownerName: String): DataFrame =
     tree(spark).filter(col("owner_name") === ownerName)
       .select(col("category_id"), col("category_name"))
+}
+
+/** The two stores' columns, as [[OwnershipStore.getOrCreate]] writes them:
+  * declared, so a store read costs a file listing, not a footer merge. */
+object OwnershipStore {
+  val OwnerSchema: StructType = StructType(Seq(
+    StructField("owner_name", StringType), StructField("owner_id", LongType)))
+  val CategorySchema: StructType = StructType(Seq(
+    StructField("category_key", StringType), StructField("category_id", LongType),
+    StructField("category_name", StringType), StructField("owner_id", LongType)))
 }
 
 /** Oracle-gated query surfaces over the ownership tree, derived from the

@@ -286,71 +286,70 @@ object SearchService {
   }
 
   /** Full document DELETE lifecycle (reference server/delete.go:214-288)
-    * for ids the caller holds, as a request does: the index half
+    * for ids the caller holds, as a request does. The cascade covers the
+    * reference's two tables: the index half
     * ([[graft.sources.IvfBinarySource.deleteDocs]] — a discovery job over
     * the doc ids' vec_id envelope that reads no vector bytes, then a
     * rewrite of only the lists holding their chunks, via the ingest
     * path's vec_id = doc_id·10⁵ + chunk_id encoding,
-    * [[graft.streaming.Streams.ChunkVecIdBase]]), then the relational
-    * cascade over the document and chunk stores, co-bucketed so only
-    * touched buckets rewrite. The ids reach the stores as a driver-local
-    * frame, so each store's delete runs two Spark jobs when it knows its
-    * schema ([[ParquetStore.deleteKeys]]): six for the whole cascade.
+    * [[graft.streaming.Streams.ChunkVecIdBase]]), then the document
+    * store, where only touched buckets rewrite. The ids reach the store as
+    * a driver-local frame, so its delete runs two Spark jobs when it knows
+    * its schema ([[ParquetStore.deleteKeys]]): four for the whole cascade.
     * Returns the number of index rows deleted. */
   def deleteDocuments(spark: SparkSession, docStore: ParquetStore,
-      chunkStore: ParquetStore, indexPath: String, docIds: Set[Long]): Long = {
+      indexPath: String, docIds: Set[Long]): Long = {
     if (docIds.isEmpty) return 0L
     import spark.implicits._
     val removed = Jobs.step(spark, "delete/index")(
       graft.sources.IvfBinarySource.deleteDocs(spark, indexPath, docIds,
         graft.streaming.Streams.ChunkVecIdBase))
-    deleteRows(spark, docStore, chunkStore, docIds.toSeq.toDF(docStore.keyCol))
+    Jobs.step(spark, "delete/doc-store")(
+      docStore.deleteKeys(docIds.toSeq.toDF(docStore.keyCol)))
     removed
   }
 
-  /** The relational half of the cascade, each store's rewrite named. */
-  private def deleteRows(spark: SparkSession, docStore: ParquetStore,
-      chunkStore: ParquetStore, doomed: DataFrame): Unit = {
-    Jobs.step(spark, "delete/doc-store")(docStore.deleteKeys(doomed))
-    Jobs.step(spark, "delete/chunk-store")(chunkStore.deleteKeys(doomed))
+  /** The four-argument cascade, then the same ids out of a second store
+    * keyed by the document id (a child table co-bucketed on that key).
+    * The server keeps no such store; this form serves callers that do.
+    * A store that was never written is left alone. */
+  def deleteDocuments(spark: SparkSession, docStore: ParquetStore,
+      chunkStore: ParquetStore, indexPath: String, docIds: Set[Long]): Long = {
+    import spark.implicits._
+    val removed = deleteDocuments(spark, docStore, indexPath, docIds)
+    Jobs.step(spark, "delete/chunk-store")(
+      chunkStore.deleteKeys(docIds.toSeq.toDF(chunkStore.keyCol)))
+    removed
   }
 
   /** [[deleteDocuments]] with the doomed doc ids as a DataFrame — the
     * tenant-scale path (reference delete.go's `DELETE WHERE owner_id=?`
     * has no driver bound, so neither does this): a large owner's victim
     * set never lands on the driver. The first column of `doomedDocs` is
-    * the doc id. Index victims resolve via a size-gated semi join
-    * ([[graft.operators.DedupOps.gateKnown]] — broadcast when the scope
-    * is request-sized, sort-merge when tenant-sized) against an id-only
-    * index scan bounded by the doomed [lo,hi]·base vec_id envelope
-    * (zone-map file skipping, as in the Set overload), and reach their
-    * lists through [[graft.sources.IvfBinarySource.delete]]'s shuffle
-    * join. */
+    * the doc id. The distinct ids are pinned, and one aggregate job reads
+    * their [lo, hi] envelope and count. The count size-gates the ids
+    * ([[graft.operators.DedupOps.gateKnown]] — broadcast when the scope is
+    * request-sized, sort-merge when tenant-sized) for
+    * [[graft.sources.IvfBinarySource.deleteDocs]]'s DataFrame form, which
+    * reads the index once inside the envelope. The document store then
+    * anti-joins the pinned ids. */
   def deleteDocuments(spark: SparkSession, docStore: ParquetStore,
-      chunkStore: ParquetStore, indexPath: String, doomedDocs: DataFrame,
-      broadcastRowLimit: Long = graft.operators.DedupOps.BroadcastRowLimit)
-      : Long = {
-    import graft.operators.DedupOps
+      indexPath: String, doomedDocs: DataFrame,
+      broadcastRowLimit: Long = graft.operators.DedupOps.BroadcastRowLimit): Long = {
+    import graft.operators.{DedupOps, Pins}
     def victimStep[A](body: => A): A = Jobs.step(spark, "delete/victims")(body)
-    val doomed = victimStep(doomedDocs
+    val doomed = victimStep(Pins.pin(doomedDocs
       .select(col(doomedDocs.columns.head).cast("long").as("document_id"))
-      .distinct().localCheckpoint(true))
+      .distinct()))
     try {
-      val bounds = victimStep(
-        doomed.agg(min("document_id"), max("document_id")).collect()(0))
-      if (bounds.isNullAt(0)) return 0L
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val nDoomed = victimStep(doomed.count()) // cheap once pinned
-      val base = graft.streaming.Streams.ChunkVecIdBase
-      val victims = spark.read
-        .format(graft.sources.IvfBinarySource.FORMAT).load(indexPath)
-        .select("vec_id")
-        .filter(col("vec_id").between(lo * base, hi * base + (base - 1)))
-        .join(DedupOps.gateKnown(doomed, nDoomed, broadcastRowLimit),
-          expr(s"vec_id div $base") === col("document_id"), "left_semi")
+      val stats = victimStep(
+        doomed.agg(min("document_id"), max("document_id"), count(lit(1))).collect()(0))
+      if (stats.isNullAt(0)) return 0L
       val removed = Jobs.step(spark, "delete/index")(
-        graft.sources.IvfBinarySource.delete(spark, indexPath, victims))
-      deleteRows(spark, docStore, chunkStore, doomed)
+        graft.sources.IvfBinarySource.deleteDocs(spark, indexPath,
+          DedupOps.gateKnown(doomed, stats.getLong(2), broadcastRowLimit),
+          stats.getLong(0), stats.getLong(1), graft.streaming.Streams.ChunkVecIdBase))
+      Jobs.step(spark, "delete/doc-store")(docStore.deleteKeys(doomed))
       removed
     } finally DedupOps.releaseCheckpoint(doomed)
   }

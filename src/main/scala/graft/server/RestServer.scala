@@ -19,6 +19,7 @@ import org.apache.spark.sql.types._
 import graft.{Jobs, SearchService}
 import graft.functions.{gf, EmbedProvider, GenerateProvider, NoopGenerateProvider}
 import graft.index.IvfIndex
+import graft.operators.Pins
 import graft.sources.{IvfBinarySource, ParquetStore}
 import graft.streaming.Streams
 
@@ -32,7 +33,7 @@ import graft.streaming.Streams
   * already on Spark's classpath).
   *
   *  - POST /api/upload          → flatten → chunk → embed → assign →
-  *                                binary index + doc/chunk stores
+  *                                binary index + document store
   *                                (server/upload.go; Streams.chunkEmbed)
   *  - POST /api/search          → SearchService.search over the index
   *                                (server/search.go)
@@ -49,20 +50,22 @@ import graft.streaming.Streams
   *
   * Scale notes: this is a THIN shell — every data decision stays in the
   * facades (nprobe-pruned scans, IN-pushed backfills, bucketed upserts,
-  * distributed delete victims). The server itself holds the IVF model
+  * distributed delete victims). A served corpus lives in the reference's
+  * two tables: the IVF index (vec_id, quantized vector, centroid_id; no
+  * chunk text, like the reference's `embeddings` rows) and the document
+  * store. The server itself holds the IVF model
   * (centroid matrix, persisted under dataDir/model so restarts serve the
   * lists the writes landed in), a doc-id counter, and a read view: the
   * resolved documents frame and the decoded index frame, which every read
   * reuses until a write drops it. The view holds plans and a file
-  * listing, never data. The server is the stores' only writer and
-  * declares their columns ([[RestServer.DocSchema]],
-  * [[RestServer.ChunkSchema]]), so no read or rewrite merges parquet
-  * footers. A plain search costs two Spark jobs
+  * listing, never data. The server is the document store's only writer
+  * and declares its columns ([[RestServer.DocSchema]]), so no read or
+  * rewrite merges parquet footers. A plain search costs two Spark jobs
   * (page, backfill). The writes run on keys the server minted and holds:
-  * a warm /api/delete/document costs six (a discovery job and a list
-  * rewrite in the index, a pin and a write per store) and a warm
-  * /api/upload seven (the embed pin, the index append's two, the
-  * doc-store upsert's three, the chunk append). Each Spark action a
+  * a warm /api/delete/document costs four (a discovery job and a list
+  * rewrite in the index, a pin and a write in the document store) and a
+  * warm /api/upload six (the embed pin, the index append's two, the
+  * doc-store upsert's three). Each Spark action a
   * handler runs is named `"<route>/<step>"` ([[graft.Jobs]]). Tenant
   * scoping is size-gated, not driver-bounded: owner/category search
   * filters ride a gateKnown semi join (broadcast only when the scope is
@@ -82,8 +85,6 @@ final class RestServer(spark: SparkSession, dataDir: String,
   private val modelDir = s"$dataDir/model"
   private val docStore = ParquetStore(s"$dataDir/documents", "document_id", nBuckets = 16,
     schema = Some(RestServer.DocSchema))
-  private val chunkStore = ParquetStore(s"$dataDir/chunks", "doc_id", nBuckets = 16,
-    schema = Some(RestServer.ChunkSchema))
 
   // server-held state beyond config: the centroid matrix (driver-side,
   // nLists × dim floats) and the id counter, both rebuilt from storage on
@@ -295,11 +296,11 @@ final class RestServer(spark: SparkSession, dataDir: String,
     }
     import spark.implicits._
     val df = items.map { case (id, _, js) => (id, js) }.toDF("doc_id", "text")
-    // pin the embedded batch: the index write, the chunk append, and (on
-    // cold bootstrap) IvfIndex.build each run an action over this frame,
-    // and re-deriving it would re-invoke the embed provider per action
-    val emb = Jobs.step(spark, "upload/embed")(Streams.chunkEmbed(df, ctxNum, dim,
-      embedProvider, chunkPrefix = "search_document: " + prefix).localCheckpoint(true))
+    // pin the embedded batch: the index write and (on cold bootstrap)
+    // IvfIndex.build each run an action over this frame, and re-deriving
+    // it would re-invoke the embed provider per action
+    val emb = Jobs.step(spark, "upload/embed")(Pins.pin(Streams.chunkEmbed(df, ctxNum, dim,
+      embedProvider, chunkPrefix = "search_document: " + prefix)))
     val assigned = model match {
       case Some(m) => IvfIndex.assign(emb, "embedding", m)
       case None =>
@@ -325,13 +326,6 @@ final class RestServer(spark: SparkSession, dataDir: String,
     val docRows = items.map { case (id, ext, js) => (id, ext, owner, category, js) }
       .toDF("document_id", "external_id", "owner", "category", "doc_json")
     Jobs.step(spark, "upload/doc-store")(docStore.upsertOrCreate(docRows))
-    // chunk store is doc-id keyed for the delete cascade (deleteKeys
-    // drops every chunk row of a doomed doc), so multi-chunk docs must
-    // APPEND (S6), never upsert — upsert's merge keeps one row per key
-    val chunks = assigned.select("doc_id", "chunk_id", "chunk")
-    Jobs.step(spark, "upload/chunk-store")(
-      if (chunkStore.isInitialized) chunkStore.append(chunks)
-      else chunkStore.create(chunks))
     val ids = items.map(_._1).mkString("[", ",", "]")
     (200, s"""{"document_ids":$ids}""")
   }
@@ -364,8 +358,7 @@ final class RestServer(spark: SparkSession, dataDir: String,
     // the driver (the reference's WHERE owner_id=? has no such bound)
     val scopeIds =
       if (owner.isEmpty && category.isEmpty) None
-      else Some(Jobs.step(spark, "search/scope")(
-        scoped.select("document_id").localCheckpoint(true)))
+      else Some(Jobs.step(spark, "search/scope")(Pins.pin(scoped.select("document_id"))))
     val rows = try {
       val indexed = scopeIds match {
         case None => v.index
@@ -417,7 +410,7 @@ final class RestServer(spark: SparkSession, dataDir: String,
 
   private def deleteIds(ids: Set[Long]): (Int, String) = write {
     if (ids.nonEmpty)
-      SearchService.deleteDocuments(spark, docStore, chunkStore, indexDir, ids)
+      SearchService.deleteDocuments(spark, docStore, indexDir, ids)
     (200, "{}") // delete.go:79 responds `{}`
   }
 
@@ -435,7 +428,7 @@ final class RestServer(spark: SparkSession, dataDir: String,
   private def deleteWhere(pred: org.apache.spark.sql.Column): (Int, String) =
     write {
       if (docStore.isInitialized)
-        SearchService.deleteDocuments(spark, docStore, chunkStore, indexDir,
+        SearchService.deleteDocuments(spark, docStore, indexDir,
           readView().docs.filter(pred).select("document_id"),
           broadcastRowLimit)
       (200, "{}")
@@ -486,11 +479,6 @@ object RestServer {
     StructField("document_id", LongType), StructField("external_id", StringType),
     StructField("owner", StringType), StructField("category", StringType),
     StructField("doc_json", StringType)))
-
-  /** The chunk store's columns, as the upload writes them. */
-  val ChunkSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("chunk_id", IntegerType),
-    StructField("chunk", StringType)))
 
   /** Index rows semi-filtered to a tenant scope, size-gated
     * ([[graft.operators.DedupOps.gateKnown]]): broadcast only when the

@@ -249,7 +249,8 @@ object IvfBinarySource {
     * task returns the distinct lists its doomed rows sit in — no shuffle,
     * and no vec id reaches the driver. Then one rewrite job streams ONLY
     * those lists, dropping the doomed rows ([[rewriteLists]]); an id the
-    * index does not hold rewrites nothing. Returns # rows deleted, the
+    * index does not hold rewrites nothing. Ids too many for the driver
+    * take the DataFrame form below. Returns # rows deleted, the
     * before/after row-count delta over the touched lists (file sizes ÷
     * row width), which stays exact under task retries. */
   def deleteDocs(spark: SparkSession, path: String, docIds: Set[Long],
@@ -286,56 +287,50 @@ object IvfBinarySource {
         .map(_.getLen / width).sum
     }.sum
 
-  /** Distributed-victim deletion: the doomed ids arrive as a DataFrame
-    * (first column, castable to long) and meet their list's rewrite task
-    * through a centroid-keyed join — the full victim set never
-    * materializes on the driver, so delete scales to retention sweeps
-    * that doom millions of rows. Only scalars come back: the [lo,hi]
-    * envelope (2 longs, lets the vec_id zone maps skip whole files) and
-    * the affected centroid ids (needed for file listing, which is driver
-    * work in any layout). This is the bulk path: it costs a victim
-    * distinct and min/max collect, a persisted per-list `collect_set` and
-    * a shuffle join. A request whose ids the driver already holds (the
-    * reference's DELETE /api/document carries explicit ids,
-    * server/delete.go:214-288) takes the two-job [[deleteDocs]]
-    * instead. Returns # rows deleted. */
-  def delete(spark: SparkSession, path: String, victims: DataFrame): Long = {
+  /** [[deleteDocs]] for doomed doc ids held in a DataFrame (first
+    * column, castable to long) — the tenant-scale path: the id set never
+    * reaches the driver, so a delete can doom millions of rows. The caller
+    * passes the ids' envelope `[lo, hi]` (so the vec_id zone maps skip
+    * every file outside [lo·base, hi·base + base − 1]) and sizes the frame
+    * for the semi join (a broadcast hint when the ids are few,
+    * [[graft.operators.DedupOps.gateKnown]]). One scan of `vec_id` and
+    * `centroid_id` inside the envelope builds one doom set per list; only
+    * the affected list ids come back to the driver, for the file listing.
+    * Each doom set meets its list's rewrite task through a centroid-keyed
+    * join, so a task holds one list's doomed vec ids, never the sweep's.
+    * Returns # rows deleted. */
+  def deleteDocs(spark: SparkSession, path: String, docIds: DataFrame,
+      lo: Long, hi: Long, base: Long): Long = {
     val root = new Path(path)
     val rootFs = fs(root)
     if (!rootFs.exists(root)) return 0L
-    import org.apache.spark.sql.functions.{collect_set, max => smax, min => smin}
-    val vic = victims
-      .select(col(victims.columns.head).cast("long").as("vec_id")).distinct()
-    val bounds = vic.agg(smin("vec_id"), smax("vec_id")).collect()(0)
-    if (bounds.isNullAt(0)) return 0L // empty victim frame
-    // hits = victims that actually exist in the index, tagged with their
-    // list; id-only columns (no vector bytes read) + zone-map skipping
+    import org.apache.spark.sql.functions.{collect_set, expr}
+    val ids = docIds.select(col(docIds.columns.head).cast("long").as("_doomed_doc"))
     val perList = spark.read.format(FORMAT).load(path)
       .select("vec_id", "centroid_id")
-      .filter(col("vec_id").between(bounds.getLong(0), bounds.getLong(1)))
-      .join(vic, Seq("vec_id"), "left_semi")
+      .filter(col("vec_id").between(lo * base, hi * base + (base - 1)))
+      .join(ids, expr(s"vec_id div $base") === col("_doomed_doc"), "left_semi")
       .groupBy("centroid_id").agg(collect_set("vec_id").as("doomed"))
       .persist()
-    val affected = perList.select("centroid_id").collect().map(_.getInt(0)).toSet
-    if (affected.isEmpty) { perList.unpersist(); return 0L }
-    val width = rowWidth(readDim(path))
-    val before = rowsIn(rootFs, root, width.toLong, affected)
-    val work = listDirs(rootFs, root, Some(affected)).map { case (cid, d, mtime) =>
-      (cid, listBinFiles(rootFs, d, mtime).map(_._1).toSeq)
-    }.toSeq
-    val workRdd = spark.sparkContext.parallelize(work,
-      math.min(work.size, spark.sparkContext.defaultParallelism))
-    val dropRdd = perList.rdd.map(r => (r.getInt(0), r.getSeq[Long](1)))
-    // inner join routes each list's OWN victims to its rewrite task —
-    // a task holds one list's doom set, never the sweep's
-    workRdd.join(dropRdd).foreach { case (cid, (files, doomed)) =>
-      rewriteOneList(path, cid, files, doomed.toSet, width)
-    }
-    perList.unpersist()
-    work.foreach { case (cid, _) =>
-      dirCache.remove(new Path(root, s"list=$cid").toString)
-    }
-    before - rowsIn(rootFs, root, width.toLong, affected)
+    try {
+      val affected = perList.select("centroid_id").collect().map(_.getInt(0)).toSet
+      if (affected.isEmpty) return 0L
+      val width = rowWidth(readDim(path))
+      val before = rowsIn(rootFs, root, width.toLong, affected)
+      val work = listDirs(rootFs, root, Some(affected)).map { case (cid, d, mtime) =>
+        (cid, listBinFiles(rootFs, d, mtime).map(_._1).toSeq)
+      }.toSeq
+      spark.sparkContext.parallelize(work,
+          math.min(work.size, spark.sparkContext.defaultParallelism))
+        .join(perList.rdd.map(r => (r.getInt(0), r.getSeq[Long](1))))
+        .foreach { case (cid, (files, doomed)) =>
+          rewriteOneList(path, cid, files, doomed.toSet, width)
+        }
+      work.foreach { case (cid, _) =>
+        dirCache.remove(new Path(root, s"list=$cid").toString)
+      }
+      before - rowsIn(rootFs, root, width.toLong, affected)
+    } finally perList.unpersist()
   }
 
   /** List-directory enumeration shared by scan planning and maintenance:

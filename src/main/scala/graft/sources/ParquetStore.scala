@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.StructType
 
+import graft.operators.Pins
+
 /** Keyed mutable table on plain parquet — the engine's S6/S7/S8 sinks
   * (reference server/upload.go:286-313 bulk insert, dnc/dnc.go:223-247
   * centroid UPDATE, server/delete.go:214-288 cascading DELETE) re-expressed
@@ -110,8 +112,11 @@ final case class ParquetStore(path: String, keyCol: String, nBuckets: Int = 64,
     * with an IN list, and with a known `schema` the delete runs two
     * Spark jobs, the pin and the write; any other key frame anti-joins.
     * Deleting every row leaves the store readable (see
-    * [[rewriteBuckets]]). */
+    * [[rewriteBuckets]]). A store with no bucket on disk (never written,
+    * or emptied) holds nothing to delete: the call returns before any
+    * job runs. */
   def deleteKeys(keys: DataFrame): Unit = {
+    if (!isInitialized) return
     val k = keys.columns.head
     val del = keys.select(col(k).as(keyCol), bucketOf(col(k)).as("_bucket"))
     val (touched, local) = touchedBy(del)
@@ -138,8 +143,7 @@ final case class ParquetStore(path: String, keyCol: String, nBuckets: Int = 64,
   private def rewriteBuckets(spark: SparkSession, touched: Seq[Long])(
       merge: DataFrame => DataFrame): Unit = {
     if (touched.isEmpty) return
-    val snapshot = merge(stored(spark).filter(col("_bucket").isin(touched: _*)))
-      .localCheckpoint(true)
+    val snapshot = Pins.pin(merge(stored(spark).filter(col("_bucket").isin(touched: _*))))
     def files(b: Long): Set[String] =
       Option(new java.io.File(s"$path/_bucket=$b").list()).fold(Set.empty[String])(_.toSet)
     val before = touched.map(b => b -> files(b))
@@ -202,8 +206,7 @@ object ParquetStore {
     * touches exactly the buckets of the deleted keys. */
   def cascadeDelete(spark: SparkSession, parent: ParquetStore,
       child: ParquetStore, parentPred: Column): Unit = {
-    val doomed = parent.read(spark).filter(parentPred)
-      .select(col(parent.keyCol)).localCheckpoint(true)
+    val doomed = Pins.pin(parent.read(spark).filter(parentPred).select(col(parent.keyCol)))
     parent.deleteKeys(doomed)
     child.deleteKeys(doomed.withColumnRenamed(parent.keyCol, child.keyCol))
   }

@@ -557,9 +557,10 @@ class IvfBinarySourceSpec extends AnyFunSuite {
     val n0 = load().count()
     // the victim frame also carries ids the index does NOT hold — they
     // must not count toward the delta
-    val vicDf = spark.createDataFrame(
-      (victimIds + Long.MaxValue).toSeq.map(Tuple1(_))).toDF("vec_id")
-    val dropped = IvfBinarySource.delete(spark, p, vicDf)
+    val vicIds = victimIds + Long.MaxValue
+    val vicDf = spark.createDataFrame(vicIds.toSeq.map(Tuple1(_))).toDF("vec_id")
+    // base 1: the document id IS the vec id
+    val dropped = IvfBinarySource.deleteDocs(spark, p, vicDf, vicIds.min, vicIds.max, 1L)
     assert(dropped == victimIds.size.toLong)
     assert(load().count() == n0 - victimIds.size)
     assert(load().filter(col("vec_id").isin(victimIds.toSeq: _*)).count() == 0)
@@ -578,13 +579,13 @@ class IvfBinarySourceSpec extends AnyFunSuite {
       }
     }
     // empty victim frame is a no-op
-    assert(IvfBinarySource.delete(spark, p,
-      vicDf.filter(col("vec_id") < Long.MinValue + 1)) == 0L)
+    assert(IvfBinarySource.deleteDocs(spark, p,
+      vicDf.filter(col("vec_id") < Long.MinValue + 1), vicIds.min, vicIds.max, 1L) == 0L)
     // non-empty frame whose ids all miss the index is also a no-op
     // (exercises the affected-lists-empty early return)
     val absent = spark.createDataFrame(
       Seq(Tuple1(Long.MaxValue), Tuple1(Long.MaxValue - 1))).toDF("vec_id")
-    assert(IvfBinarySource.delete(spark, p, absent) == 0L)
+    assert(IvfBinarySource.deleteDocs(spark, p, absent, Long.MaxValue - 1, Long.MaxValue, 1L) == 0L)
   }
 
   test("deleteDocs drops a document from every list its chunks sit in") {

@@ -84,4 +84,25 @@ class OwnershipSpec extends AnyFunSuite {
     assert(store.getOrCreate(withNulls).count() == 1)
     assert(store.tree(spark).count() == 1)
   }
+
+  test("the declared store schemas are the columns getOrCreate writes") {
+    val store = fresh()
+    // the first batch creates both stores, the second upserts into them
+    store.getOrCreate(pairs(("acme", "en"), ("zeta", "fr")))
+    store.getOrCreate(pairs(("acme", "de"), ("muon", "en")))
+    Seq(store.owners -> OwnershipStore.OwnerSchema,
+        store.categories -> OwnershipStore.CategorySchema).foreach { case (st, declared) =>
+      val written = spark.read.option("mergeSchema", "true").parquet(st.path)
+        .drop("_bucket").schema
+      assert(written.map(f => f.name -> f.dataType) == declared.map(f => f.name -> f.dataType),
+        s"${st.path} wrote $written, declared $declared")
+    }
+  }
+
+  test("a warm q74 runs at most 12 jobs: its store reads merge no footers") {
+    val dir = SparkSuite.sf0001
+    OwnershipQueries.q74FetchCategories(spark, dir).collect() // builds the stores
+    val jobs = SparkSuite.jobsOf(OwnershipQueries.q74FetchCategories(spark, dir).collect())
+    assert(jobs.size <= 12, s"a warm q74 ran ${jobs.size} jobs: $jobs")
+  }
 }

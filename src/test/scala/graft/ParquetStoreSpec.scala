@@ -166,6 +166,19 @@ class ParquetStoreSpec extends AnyFunSuite {
       .map(f => f.getAbsolutePath -> f.lastModified()).toMap
   }
 
+  test("a delete on a store that was never written runs no job and creates no directory") {
+    import spark.implicits._
+    val path = s"${tmp()}/never-written"
+    val store = ParquetStore(path, "k", nBuckets = 8)
+    // driver-local keys and a distributed key frame
+    val jobs = SparkSuite.jobsOf {
+      store.deleteKeys(Seq(1L, 2L).toDF("k"))
+      store.deleteKeys(spark.range(3).toDF("k"))
+    }
+    assert(jobs.isEmpty, s"a delete on an unwritten store ran jobs: $jobs")
+    assert(!new java.io.File(path).exists(), s"$path was created by a delete")
+  }
+
   test("driver-local keys on a known schema: delete in two jobs, upsert in three, same rows") {
     import spark.implicits._
     val rows = (1L to 40L).map(k => (k, s"v$k"))

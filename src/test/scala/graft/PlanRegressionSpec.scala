@@ -337,16 +337,22 @@ class PlanRegressionSpec extends AnyFunSuite {
       "comment/scaladoc mentions must not be counted")
   }
 
-  /** Second-pin-mechanism violations in one product file: a reliable
-    * `checkpoint(` call, a `setCheckpointDir`, or a `localCheckpoint(`
-    * that carries anything but its eager flag (a storage level) outside
-    * Pins.scala. Pins.pin is the ONE place that decides where a pin's
-    * blocks live and how many copies exist; a bare
-    * `localCheckpoint(true)` stays legal (one copy, the documented
-    * choice for state a replay can rebuild). Split out so the planted
-    * test can assert the decision on synthetic lines. */
-  private def pinMechanismViolations(fileName: String,
+  /** Second-pin-mechanism violations in one product file, named by its
+    * path under src/main/scala: a reliable `checkpoint(` call, a
+    * `setCheckpointDir`, or a `localCheckpoint(` that carries anything
+    * but its eager flag (a storage level) outside Pins.scala. Pins.pin is
+    * the ONE place that decides where a pin's blocks live and how many
+    * copies exist. A bare `localCheckpoint(true)` stays legal in batch
+    * and streaming code (one copy, the documented choice for state a
+    * replay can rebuild), but not on the serve path (`server/`,
+    * `sources/`, SearchService.scala), where no replay rebuilds a lost
+    * block: every pin there goes through Pins.pin. Split out so the
+    * planted test can assert the decision on synthetic lines. */
+  private def pinMechanismViolations(relPath: String,
       lines: Seq[String]): Seq[String] = {
+    val fileName = relPath.split('/').last
+    val servePath = relPath.startsWith("graft/server/") ||
+      relPath.startsWith("graft/sources/") || relPath == "graft/SearchService.scala"
     val reliable = "(^|[^l])checkpoint\\(".r
     val localAny = "localCheckpoint\\(".r
     val localBare =
@@ -360,7 +366,9 @@ class PlanRegressionSpec extends AnyFunSuite {
           Option.when(l.contains("setCheckpointDir"))(
             s"$fileName: setCheckpointDir: $l"),
           Option.when(leveled && fileName != "Pins.scala")(
-            s"$fileName: leveled localCheckpoint outside Pins: $l")).flatten
+            s"$fileName: leveled localCheckpoint outside Pins: $l"),
+          Option.when(servePath && !leveled && localAny.findFirstIn(l).nonEmpty)(
+            s"$fileName: bare localCheckpoint on the serve path: $l")).flatten
       }
   }
 
@@ -372,8 +380,9 @@ class PlanRegressionSpec extends AnyFunSuite {
         tripwireScans(p.getFileName.toString))
       .toSeq
     assert(files.exists(_.getFileName.toString == "Pins.scala"))
+    val scalaRoot = java.nio.file.Paths.get("src/main/scala")
     val found = files.flatMap(p => pinMechanismViolations(
-      p.getFileName.toString,
+      scalaRoot.relativize(p).toString,
       java.nio.file.Files.readAllLines(p).asScala.toSeq))
     assert(found.isEmpty, "a second pin mechanism in product code " +
       "(route the pin through Pins.pin):\n  " + found.mkString("\n  "))
@@ -385,12 +394,18 @@ class PlanRegressionSpec extends AnyFunSuite {
       "spark.sparkContext.setCheckpointDir(dir)",
       "df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_2)",
       "df.localCheckpoint(eager = true,")
-    assert(pinMechanismViolations("Rogue.scala", planted).size == 4,
-      pinMechanismViolations("Rogue.scala", planted))
+    assert(pinMechanismViolations("graft/Rogue.scala", planted).size == 4,
+      pinMechanismViolations("graft/Rogue.scala", planted))
     // the same leveled call IS legal in Pins.scala, the one owner
-    assert(pinMechanismViolations("Pins.scala", planted.drop(2)).isEmpty)
-    // bare one-copy pins, the release helper and comments stay legal
-    assert(pinMechanismViolations("Rogue.scala", Seq(
+    assert(pinMechanismViolations("graft/operators/Pins.scala", planted.drop(2)).isEmpty)
+    // on the serve path a bare one-copy pin is flagged too
+    val bare = Seq("val k = batch.localCheckpoint(true)", "df.localCheckpoint()")
+    Seq("graft/server/Rogue.scala", "graft/sources/Rogue.scala", "graft/SearchService.scala")
+      .foreach(f => assert(pinMechanismViolations(f, bare).size == 2, f))
+    assert(pinMechanismViolations("graft/sources/Rogue.scala",
+      Seq("// df.localCheckpoint(true) used to go here", "Pins.pin(df)")).isEmpty)
+    // elsewhere bare one-copy pins, the release helper and comments stay legal
+    assert(pinMechanismViolations("graft/streaming/Rogue.scala", Seq(
       "val k = batch.localCheckpoint(true)",
       "df.localCheckpoint(eager = true) // pinned",
       "DedupOps.releaseCheckpoint(keyed)",

@@ -73,8 +73,8 @@ class ProbeSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.adaptive.enabled") == aqe)
     // the write phase: a ledger line per "<route>/<step>" and a summary
     val steps = out.filter(_.startsWith("[serve] write ")).map(_.split("\\s+")(2)).toSet
-    assert(Set("upload/index-write", "upload/doc-store", "upload/chunk-store",
-      "delete/index", "delete/doc-store", "delete/chunk-store").subsetOf(steps), out)
+    assert(Set("upload/index-write", "upload/doc-store",
+      "delete/index", "delete/doc-store").subsetOf(steps), out)
     assert(out.exists(l => l.startsWith("""{"probe":"serve-write","reps":2,""") &&
       l.contains("\"delete_jobs\":")), out)
   }

@@ -145,9 +145,9 @@ class RestServerSpec extends AnyFunSuite {
   }
 
   test("upload embeds each chunk exactly once (batch pinned across writes)") {
-    // the upload handler runs THREE actions over the embedded batch
-    // (index write, chunk append, and k-means on cold bootstrap); without
-    // the localCheckpoint pin each action re-invokes the embed provider
+    // the upload handler runs TWO actions over the embedded batch (index
+    // write, and k-means on cold bootstrap); without the pin each action
+    // re-invokes the embed provider
     val dir = java.nio.file.Files.createTempDirectory("rest-embed").toString
     RestServerSpec.embedCalls.set(0)
     val s = new graft.server.RestServer(spark, dir,
@@ -368,8 +368,9 @@ class RestServerSpec extends AnyFunSuite {
     }
   }
 
-  test("a warm delete runs six jobs in its three steps, a warm 10-document upload at most seven") {
-    withServer("rest-write-jobs") { call =>
+  test("a warm delete runs at most four jobs in its two steps, a warm 10-document upload at most six") {
+    val dir = java.nio.file.Files.createTempDirectory("rest-write-jobs").toString
+    withServerIn(dir) { call =>
       def upload(tag: String, n: Int) = call("/api/upload", (1 to n)
         .map(i => s"""{"document":"write job $tag doc $i"}""")
         .mkString("""{"owner":"o","documents":[""", ",", "]}"))
@@ -379,16 +380,40 @@ class RestServerSpec extends AnyFunSuite {
       upload("warm", 10)
       call("/api/delete/document", s"""{"document_id":${ids.head}}""")
       val del = jobsOf(call("/api/delete/document", s"""{"document_id":${ids(1)}}"""))
-      assert(del.toSet.subsetOf(Set("delete/index", "delete/doc-store", "delete/chunk-store")),
-        s"a delete ran jobs outside its three steps: $del")
-      assert(del.size <= 6, s"a warm delete must run at most 6 jobs: $del")
+      assert(del.toSet.subsetOf(Set("delete/index", "delete/doc-store")),
+        s"a delete ran jobs outside its two steps: $del")
+      assert(del.size <= 4, s"a warm delete must run at most 4 jobs: $del")
       val up = jobsOf(upload("measured", 10))
-      assert(up.size <= 7, s"a warm 10-document upload must run at most 7 jobs: $up")
+      assert(up.size <= 6, s"a warm 10-document upload must run at most 6 jobs: $up")
       // the deletes and the upload are all visible
       val left = call("/api/search",
         """{"text":"write job probe","count":20,"centroids":-1,"no_documents":true}""")
         .get("documents").elements().asScala.map(_.get("document_id").asLong()).toSet
       assert(!left.contains(ids.head) && !left.contains(ids(1)) && left.nonEmpty)
+    }
+    // the served corpus is the index and the document store, nothing else
+    assert(new java.io.File(dir).list().toSet == Set("documents", "index", "model"))
+    assert(!new java.io.File(dir, "chunks").exists(), "uploads and deletes wrote a chunk store")
+  }
+
+  test("a warm owner delete runs at most 13 jobs in its three steps") {
+    withServer("rest-owner-jobs") { call =>
+      def upload(owner: String, n: Int) = call("/api/upload", (1 to n)
+        .map(i => s"""{"document":"owner job $owner doc $i"}""")
+        .mkString(s"""{"owner":"$owner","documents":[""", ",", "]}"))
+        .get("document_ids").elements().asScala.map(_.asLong()).toSeq
+      val keep = upload("keep", 20)
+      upload("warm", 10)
+      upload("measured", 10)
+      call("/api/delete/owner", """{"owner":"warm"}""")
+      val del = jobsOf(call("/api/delete/owner", """{"owner":"measured"}"""))
+      assert(del.toSet.subsetOf(Set("delete/victims", "delete/index", "delete/doc-store")),
+        s"an owner delete ran jobs outside its three steps: $del")
+      assert(del.size <= 13, s"a warm owner delete must run at most 13 jobs: $del")
+      val left = call("/api/search",
+        """{"text":"owner job probe","count":20,"centroids":-1,"no_documents":true}""")
+        .get("documents").elements().asScala.map(_.get("document_id").asLong()).toSet
+      assert(left == keep.toSet, s"the owner deletes left $left")
     }
   }
 
@@ -422,12 +447,10 @@ class RestServerSpec extends AnyFunSuite {
     withServerIn(dir) { call =>
       call("/api/upload", """{"owner":"o","category":"c","documents":[{"document":"schema doc"}]}""")
     }
-    Seq("documents" -> graft.server.RestServer.DocSchema,
-        "chunks" -> graft.server.RestServer.ChunkSchema).foreach { case (store, declared) =>
-      val written = spark.read.parquet(s"$dir/$store").drop("_bucket").schema
-      assert(written.map(f => f.name -> f.dataType) == declared.map(f => f.name -> f.dataType),
-        s"$store wrote $written, declared $declared")
-    }
+    val written = spark.read.parquet(s"$dir/documents").drop("_bucket").schema
+    val declared = graft.server.RestServer.DocSchema
+    assert(written.map(f => f.name -> f.dataType) == declared.map(f => f.name -> f.dataType),
+      s"documents wrote $written, declared $declared")
   }
 
   test("a restart after every document was deleted serves new uploads") {

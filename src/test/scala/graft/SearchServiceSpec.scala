@@ -310,8 +310,6 @@ class SearchServiceSpec extends AnyFunSuite {
           .cast("long").as("vec_id"),
         col("qvec"), col("centroid_id").cast("int").as("centroid_id"))
       .localCheckpoint(true)
-    val chunkStore = ParquetStore(tmp("chunks2"), "doc_id", nBuckets = 8)
-    chunkStore.create(chunks)
     val idx = tmp("idx2")
     chunks.select("vec_id", "qvec", "centroid_id").write
       .format(IvfBinarySource.FORMAT).mode("overwrite").save(idx)
@@ -321,18 +319,15 @@ class SearchServiceSpec extends AnyFunSuite {
     // broadcastRowLimit=1 pins the large-tenant regime: victims resolve
     // through the merge-hinted semi join, never a driver-held set
     val removed = SearchService.deleteDocuments(
-      spark, docStore, chunkStore, idx,
-      doomed.toSeq.toDF("doc_id"), broadcastRowLimit = 1L)
+      spark, docStore, idx, doomed.toSeq.toDF("doc_id"), broadcastRowLimit = 1L)
     assert(removed == expectRemoved)
     assert(docStore.read(spark)
-      .filter(col("doc_id").isin(doomed.toSeq: _*)).count() == 0)
-    assert(chunkStore.read(spark)
       .filter(col("doc_id").isin(doomed.toSeq: _*)).count() == 0)
     assert(spark.read.format(IvfBinarySource.FORMAT).load(idx)
       .filter((col("vec_id") / Streams.ChunkVecIdBase).cast("long")
         .isin(doomed.toSeq: _*)).count() == 0)
     // empty-victims call is a no-op
-    assert(SearchService.deleteDocuments(spark, docStore, chunkStore, idx,
+    assert(SearchService.deleteDocuments(spark, docStore, idx,
       spark.emptyDataFrame.select(lit(0L).as("doc_id")).filter(lit(false))) == 0L)
   }
 
