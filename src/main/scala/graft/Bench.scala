@@ -224,22 +224,18 @@ object Bench {
             offset = 0, centroids = 2)).collect()
       }
       val searchMs = (System.nanoTime() - tSearch) / 1e6 / 8
-      // fused one-execution shape over a hot (persisted) docs dimension
-      val docsHot = docs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      docsHot.count()
-      (0 until 2).foreach { i =>
-        graft.SearchService.searchHot(spark, chunks, docsHot, model,
-          graft.SearchService.SearchRequest(s"bench query $i", count = 10,
-            offset = 0, centroids = 2)).collect()
-      }
+      // the driver path: the corpus is collected before the timed loop,
+      // as a server's read view holds it between writes
+      val local = graft.SearchService.LocalCorpus(
+        graft.SearchService.LocalCorpus.lists(chunks),
+        graft.SearchService.LocalCorpus.docs(docs))
+      def searchLocal(i: Int) = graft.SearchService.searchLocal(local, model,
+        graft.SearchService.SearchRequest(s"bench query $i", count = 10,
+          offset = 0, centroids = 2))
+      (0 until 2).foreach(searchLocal)
       val tHot = System.nanoTime()
-      (0 until 8).foreach { i =>
-        graft.SearchService.searchHot(spark, chunks, docsHot, model,
-          graft.SearchService.SearchRequest(s"bench query $i", count = 10,
-            offset = 0, centroids = 2)).collect()
-      }
+      (0 until 8).foreach(searchLocal)
       val searchHotMs = (System.nanoTime() - tHot) / 1e6 / 8
-      docsHot.unpersist()
       // the amortized serving shape: one job drains a 32-request queue
       val batchReqs = (0 until 32).map(i =>
         graft.SearchService.SearchRequest(s"bench query $i", count = 10,

@@ -40,8 +40,10 @@ import graft.index.IvfIndex
   *    and end-to-end AQE off/on; one JSON line. Then a write phase: a
   *    `RestServer` on a temp dir takes `reps` warm rounds of a
   *    10-document upload and a one-document delete, and the probe prints
-  *    jobs and job ms per round for each `"<route>/<step>"` and one JSON
-  *    line of per-route wall times;
+  *    jobs and job ms per round for each `"<route>/<step>"`, a
+  *    `[serve] search` line each for the first search after the round's
+  *    writes and a warm one (jobs and wall ms), and one JSON line of
+  *    per-route wall times;
   *  - `ivf-scale [nRows] [dim]` — the IVF lifecycle on a synthesized
   *    corpus at the reference's production constants (listSize 10k,
   *    sample 50k): build, brute force, nprobe recall, quantized and
@@ -313,7 +315,9 @@ object Probe {
   /** The write half of the serve path, over HTTP against a
     * [[graft.server.RestServer]] on a temp dir: a cold upload trains the
     * model and one warm round runs untimed, then `reps` rounds of a
-    * 10-document upload and a one-document delete. */
+    * 10-document upload and a one-document delete, each followed by two
+    * searches: the first after the write, which rebuilds the read view,
+    * and a warm one. */
   private def serveWrites(spark: SparkSession, reps: Int): Unit = {
     import java.net.URI
     import java.net.http.{HttpClient, HttpRequest, HttpResponse}
@@ -340,7 +344,15 @@ object Probe {
     spark.sparkContext.addSparkListener(ledger)
     try {
       var live = upload("seed", 200)
-      def round(r: Int): (Seq[(Int, String, Double)], Double, Double) = {
+      // (jobs, ms) of one search
+      def search(text: String): (Int, Double) = {
+        ledger.drain()
+        val t0 = System.nanoTime()
+        post("/api/search", s"""{"text":"$text","count":10}""")
+        val ms = (System.nanoTime() - t0) / 1e6
+        (ledger.drain().size, ms)
+      }
+      def round(r: Int): (Seq[(Int, String, Double)], Double, Double, (Int, Double), (Int, Double)) = {
         ledger.drain()
         var t0 = System.nanoTime()
         live = live ++ upload(s"round$r", 10)
@@ -349,13 +361,19 @@ object Probe {
         post("/api/delete/document", s"""{"document_id":${live.head}}""")
         val delMs = (System.nanoTime() - t0) / 1e6
         live = live.tail
-        (ledger.drain(), upMs, delMs)
+        val writes = ledger.drain()
+        (writes, upMs, delMs, search(s"probe search $r"), search(s"probe warm search $r"))
       }
       round(0) // warm: the stores and the JIT warm up
       val rounds = (1 to reps).map(round)
       rounds.flatMap(_._1).groupBy(_._2).toSeq.sortBy(_._1).foreach { case (step, js) =>
         println(f"[serve] write $step%-20s jobs=${js.size.toDouble / reps}%.1f " +
           f"ms=${js.map(_._3).sum * 1e3 / reps}%.1f")
+      }
+      Seq("after-write" -> rounds.map(_._4), "warm" -> rounds.map(_._5)).foreach {
+        case (kind, runs) =>
+          println(f"[serve] search $kind%-11s jobs=${runs.map(_._1).sum.toDouble / reps}%.1f " +
+            f"ms=${runs.map(_._2).sum / reps}%.1f")
       }
       def per(route: String) = rounds.map(_._1.count(_._2.startsWith(route + "/"))).sum.toDouble / reps
       def f(v: Double) = BigDecimal(v).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble

@@ -49,7 +49,9 @@ object SearchService {
     *
     * Cost: a serving probe (nprobe ≤ 8) runs two Spark jobs, the page
     * and the backfill point read. The result is a driver-held local
-    * frame, so collecting it runs none. */
+    * frame, so collecting it runs none. A corpus small enough to hold on
+    * the driver answers the same search with no job through
+    * [[searchLocal]]. */
   def search(spark: SparkSession, indexed: DataFrame, documents: DataFrame,
       model: IvfIndex.Model, req: SearchRequest,
       vecCol: String = "embedding", dim: Int = 64): DataFrame = {
@@ -83,33 +85,80 @@ object SearchService {
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
-  /** Request-level TTL cache + singleflight in front of the read path —
-    * the reference's cache middleware on /api/search
-    * (cache/middleware.go:18-163, 5 s TTL per config/constants.go:15).
-    * Values are the COLLECTED page (≤ count+offset rows), so a hit
-    * costs zero Spark jobs, and concurrent identical requests share ONE
-    * execution instead of stampeding the cluster. Writers must call
-    * [[CachedSearch.invalidate]] after mutating the index/documents
-    * (the reference's delete/upload call cache.Delete the same way). */
-  final class CachedSearch(spark: SparkSession, indexed: DataFrame,
-      documents: DataFrame, model: IvfIndex.Model,
-      ttlMs: Long = 5000L,
-      clock: () => Long = () => System.currentTimeMillis()) {
-    private val cache = new graft.operators.TtlCache[SearchRequest,
-      Array[org.apache.spark.sql.Row]](ttlMs, clock = clock)
-    def search(req: SearchRequest): Array[org.apache.spark.sql.Row] =
-      cache.getOrCompute(req)(
-        searchHot(spark, indexed, documents, model, req).collect())
-    def invalidate(): Unit = cache.invalidateAll()
+  /** A served corpus held on the driver: each IVF list's
+    * (document_id, vector) rows by centroid_id, and each document's row,
+    * (document_id, payload columns…), by document_id. */
+  final case class LocalCorpus(lists: Map[Int, Array[(Long, Array[Float])]],
+      docs: Map[Long, Row])
+
+  object LocalCorpus {
+    /** Collects the (centroid_id, document_id, `vecCol`) rows of
+      * `indexed` in one job. `vecCol` holds float vectors or the index's
+      * quantized bytes, which decode on the driver with
+      * [[VectorKernels.dequantize]], the kernel `dequantize_vec` runs. */
+    def lists(indexed: DataFrame, vecCol: String = "embedding")
+        : Map[Int, Array[(Long, Array[Float])]] =
+      indexed.select(col("centroid_id").cast("int"), col("document_id").cast("long"), col(vecCol))
+        .collect().groupBy(_.getInt(0)).map { case (cid, rows) =>
+          cid -> rows.map(r => (r.getLong(1), r.get(2) match {
+            case q: Array[Byte] => VectorKernels.dequantize(q)
+            case v: scala.collection.Seq[_] => v.map(_.asInstanceOf[Float]).toArray
+          }))
+        }
+
+    /** Collects `documents` (document_id first) in one job, keyed by the
+      * document id; a row keeps its schema, so payload columns read by
+      * name. */
+    def docs(documents: DataFrame): Map[Long, Row] =
+      documents.select(col(documents.columns.head).cast("long").as("document_id") +:
+        documents.columns.tail.toSeq.map(col): _*)
+        .collect().map(r => r.getLong(0) -> r).toMap
   }
 
+  /** One [[searchLocal]] hit: the document's best-chunk similarity and
+    * its row, None when the corpus holds no row for it. */
+  final case class LocalHit(documentId: Long, similarity: Double, doc: Option[Row])
+
+  /** [[search]]'s page from a [[LocalCorpus]], with no Spark job: the
+    * same probe, per-chunk scores from the scalar [[VectorKernels.cosine]]
+    * that `cosine_sim` runs (never a float-lane kernel, so every score is
+    * the Spark path's to the bit), each document's best chunk,
+    * (similarity DESC, document_id ASC) order, then offset and count.
+    * A `scope` keeps only the documents whose row it accepts; a document
+    * without a row is outside every scope. */
+  def searchLocal(corpus: LocalCorpus, model: IvfIndex.Model, req: SearchRequest,
+      scope: Option[Row => Boolean] = None, dim: Int = 64): Seq[LocalHit] = {
+    val p = clamp(req, model.k)
+    val qvec = queryVector(req.text, dim)
+    val inScope: Long => Boolean = scope match {
+      case None => _ => true
+      case Some(accept) => id => corpus.docs.get(id).exists(accept)
+    }
+    val best = scala.collection.mutable.HashMap.empty[Long, Double]
+    for {
+      cid <- model.probe(qvec, p.nprobe)
+      (id, v) <- corpus.lists.getOrElse(cid, Array.empty[(Long, Array[Float])])
+      if inScope(id)
+    } {
+      val sim = VectorKernels.cosine(v, qvec)
+      if (best.get(id).forall(_ < sim)) best(id) = sim
+    }
+    best.toSeq
+      .sortWith { case ((i1, s1), (i2, s2)) => s1 > s2 || (s1 == s2 && i1 < i2) }
+      .slice(p.offset, p.offset + p.count)
+      .map { case (id, sim) => LocalHit(id, sim, corpus.docs.get(id)) }
+  }
+
+  /** The query text's embedding; the reference prefixes
+    * "search_query: " before embedding (search.go:128). */
+  private def queryVector(text: String, dim: Int): Array[Float] =
+    VectorKernels.dequantize(VectorKernels.noopEmbed("search_query: " + text, dim))
+
   /** The probe → pruned scan → per-doc best-chunk → paginated top-k
-    * subgraph shared by every read-path shape. */
+    * subgraph shared by the Spark read-path shapes. */
   private def pageGraph(indexed: DataFrame, model: IvfIndex.Model,
       p: Clamped, text: String, vecCol: String, dim: Int): DataFrame = {
-    // reference prefixes "search_query: " before embedding (search.go:128)
-    val qvec = VectorKernels.dequantize(
-      VectorKernels.noopEmbed("search_query: " + text, dim))
+    val qvec = queryVector(text, dim)
     val probeIds = model.probe(qvec, p.nprobe)
     val pruned = indexed
       .filter(col("centroid_id").isin(probeIds: _*)) // pruned scan (S4)
@@ -128,28 +177,6 @@ object SearchService {
       .orderBy(col("similarity").desc, col("document_id").asc)
       .limit(p.offset + p.count) // T2: distributed partial top-k
       .offset(p.offset) // T3: native offset — no window pass
-  }
-
-  /** Single-query shape with [[search]]'s semantics, built as ONE
-    * execution: the ≤count page joins a BROADCAST of the documents side
-    * inside the plan, with no collect-then-replan round trip.
-    *
-    * Cost: collecting the result runs two Spark jobs, the broadcast of
-    * the documents side and the page with its join — as many as
-    * [[search]]. Unlike [[search]], the documents side broadcasts WHOLE,
-    * with no IN-list pushdown, so it is only right when the payload
-    * projection is small and persisted hot. Against a large document
-    * table keep [[search]], whose backfill is a pushed-down point read,
-    * or amortize the per-query planning and job floor across a request
-    * queue with [[searchBatch]]. */
-  def searchHot(spark: SparkSession, indexed: DataFrame, documents: DataFrame,
-      model: IvfIndex.Model, req: SearchRequest,
-      vecCol: String = "embedding", dim: Int = 64): DataFrame = {
-    val p = clamp(req, model.k)
-    pageGraph(indexed, model, p, req.text, vecCol, dim)
-      .join(broadcast(documents), Seq("document_id"), "left")
-      .coalesce(1)
-      .sortWithinPartitions(col("similarity").desc, col("document_id").asc)
   }
 
   /** Batched read path — the Spark-honest serving shape. A single-query
@@ -184,8 +211,7 @@ object SearchService {
       .distinct.zipWithIndex
     val uOf = uniques.toMap
     val probes = uniques.flatMap { case ((text, nprobe), uqid) =>
-      val qvec = VectorKernels.dequantize(
-        VectorKernels.noopEmbed("search_query: " + text, dim))
+      val qvec = queryVector(text, dim)
       model.probe(qvec, nprobe).map(cid => (uqid, cid, qvec.toSeq))
     }
     val qdf = probes.toDF("uqid", "probe_cid", "qvec")

@@ -12,7 +12,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import com.github.luben.zstd.{ZstdInputStream, ZstdOutputStream}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -55,24 +55,30 @@ import graft.streaming.Streams
   * chunk text, like the reference's `embeddings` rows) and the document
   * store. The server itself holds the IVF model
   * (centroid matrix, persisted under dataDir/model so restarts serve the
-  * lists the writes landed in), a doc-id counter, and a read view: the
-  * resolved documents frame and the decoded index frame, which every read
-  * reuses until a write drops it. The view holds plans and a file
-  * listing, never data. The server is the document store's only writer
-  * and declares its columns ([[RestServer.DocSchema]]), so no read or
-  * rewrite merges parquet footers. A plain search costs two Spark jobs
-  * (page, backfill). The writes run on keys the server minted and holds:
-  * a warm /api/delete/document costs four (a discovery job and a list
-  * rewrite in the index, a pin and a write in the document store) and a
-  * warm /api/upload six (the embed pin, the index append's two, the
-  * doc-store upsert's three). Each Spark action a
-  * handler runs is named `"<route>/<step>"` ([[graft.Jobs]]). Tenant
-  * scoping is size-gated, not driver-bounded: owner/category search
-  * filters ride a gateKnown semi join (broadcast only when the scope is
-  * small), and owner/category deletes keep their victim set a DataFrame
-  * end-to-end — a tenant larger than driver memory still searches and
-  * deletes (the reference's `WHERE owner_id=?` SQL has no driver bound
-  * either). */
+  * lists the writes landed in), a doc-id counter, and a read view, which
+  * every read reuses until a write drops it. The view's frames, the
+  * resolved documents and the decoded index, are plans over a file
+  * listing; chat, categories, the owner/category deletes and the restart
+  * bootstrap read them. When the index and the document store together
+  * fit `spark.sql.autoBroadcastJoinThreshold` on disk, the view also holds
+  * the corpus on the driver, collected in two jobs (`view/index`,
+  * `view/docs`) by the first search after a write, and every search,
+  * plain or scoped, answers from it with no Spark job
+  * ([[SearchService.searchLocal]]). Over the bound a plain search costs
+  * two Spark jobs (page, backfill). The server is the document store's
+  * only writer and declares its columns ([[RestServer.DocSchema]]), so no
+  * read or rewrite merges parquet footers. The writes run on keys the
+  * server minted and holds: a warm /api/delete/document costs four (a
+  * discovery job and a list rewrite in the index, a pin and a write in
+  * the document store) and a warm /api/upload six (the embed pin, the
+  * index append's two, the doc-store upsert's three). Each Spark action
+  * a handler runs is named `"<route>/<step>"` ([[graft.Jobs]]). Tenant
+  * scoping is size-gated, not driver-bounded: over the bound,
+  * owner/category search filters ride a gateKnown semi join (broadcast
+  * only when the scope is small), and owner/category deletes keep their
+  * victim set a DataFrame end-to-end — a tenant larger than driver
+  * memory still searches and deletes (the reference's `WHERE owner_id=?`
+  * SQL has no driver bound either). */
 final class RestServer(spark: SparkSession, dataDir: String,
     dim: Int = 64, ctxNum: Int = 256,
     embedProvider: Option[EmbedProvider] = None,
@@ -102,12 +108,33 @@ final class RestServer(spark: SparkSession, dataDir: String,
   private def readView(): RestServer.ReadView = view.getOrElse {
     val gen = viewLock.synchronized(viewGen)
     val docs = Jobs.step(spark, "view/doc-schema")(docStore.read(spark))
-    val v = RestServer.ReadView(docs, spark.read.format(IvfBinarySource.FORMAT).load(indexDir)
-      .select(col("vec_id"),
-        expr(s"vec_id div ${Streams.ChunkVecIdBase}").as("document_id"),
-        gf.dequantize_vec(col("qvec")).as("embedding"), col("centroid_id")))
+    val index = spark.read.format(IvfBinarySource.FORMAT).load(indexDir)
+      .withColumn("document_id", expr(s"vec_id div ${Streams.ChunkVecIdBase}"))
+    val v = new RestServer.ReadView(docs,
+      index.select(col("vec_id"), col("document_id"),
+        gf.dequantize_vec(col("qvec")).as("embedding"), col("centroid_id")),
+      localCorpus(docs, index))
     viewLock.synchronized { if (viewGen == gen) view = Some(v) }
     v
+  }
+
+  /** The served corpus on the driver, or None when the index and the
+    * document store together hold more bytes on disk than
+    * `spark.sql.autoBroadcastJoinThreshold` (Spark's bound for a side
+    * small enough to ship whole; -1 means never). The bytes come from
+    * the file listing, before anything is collected. Under the bound,
+    * one job collects the index's quantized lists and one the documents. */
+  private def localCorpus(docs: DataFrame, index: DataFrame): Option[SearchService.LocalCorpus] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val bytes = Seq(indexDir, docStore.path).map { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      val fs = p.getFileSystem(conf)
+      if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+    }.sum
+    if (bytes > spark.sessionState.conf.autoBroadcastJoinThreshold) None
+    else Some(SearchService.LocalCorpus(
+      Jobs.step(spark, "view/index")(SearchService.LocalCorpus.lists(index, "qvec")),
+      Jobs.step(spark, "view/docs")(SearchService.LocalCorpus.docs(docs))))
   }
 
   /** Runs a store mutation under the write lock and drops the read view
@@ -348,6 +375,37 @@ final class RestServer(spark: SparkSession, dataDir: String,
       offset = intOr(req, "offset", 0),
       centroids = intOr(req, "centroids", 1))
     val v = readView()
+    // (document_id, similarity, external_id, doc_json) in page order
+    val hits = v.local match {
+      case Some(corpus) =>
+        val scope =
+          if (owner.isEmpty && category.isEmpty) None
+          else Some((d: Row) => (owner.isEmpty || d.getAs[String]("owner") == owner) &&
+            (category.isEmpty || d.getAs[String]("category") == category))
+        SearchService.searchLocal(corpus, model.get, sreq, scope, dim).map { h =>
+          (h.documentId, h.similarity, h.doc.map(_.getAs[String]("external_id")).orNull,
+            h.doc.map(_.getAs[String]("doc_json")).orNull)
+        }
+      case None => clusterSearch(v, owner, category, sreq)
+    }
+    val arr = mapper.createArrayNode()
+    hits.foreach { case (id, similarity, externalId, docJson) =>
+      val o: ObjectNode = arr.addObject()
+      o.put("document_id", id)
+      o.put("external_id", externalId)
+      o.put("document_similarity", similarity)
+      if (!noDocs) o.set[JsonNode]("document", mapper.readTree(docJson))
+    }
+    val res = mapper.createObjectNode()
+    res.set("documents", arr)
+    (200, mapper.writeValueAsString(res))
+  }
+
+  /** A search over the view's frames, for a corpus too large to hold on
+    * the driver: the page and the backfill, plus the scope's pin and
+    * count for an owner or category search. */
+  private def clusterSearch(v: RestServer.ReadView, owner: String, category: String,
+      sreq: SearchService.SearchRequest): Seq[(Long, Double, String, String)] = {
     val scoped = Seq(
       Option(owner).filter(_.nonEmpty).map(o => col("owner") === o),
       Option(category).filter(_.nonEmpty).map(c => col("category") === c)
@@ -369,18 +427,8 @@ final class RestServer(spark: SparkSession, dataDir: String,
         scoped.select("document_id", "external_id", "doc_json"),
         model.get, sreq, dim = dim).collect()
     } finally scopeIds.foreach(graft.operators.DedupOps.releaseCheckpoint)
-    val arr = mapper.createArrayNode()
-    rows.foreach { r =>
-      val o: ObjectNode = arr.addObject()
-      o.put("document_id", r.getAs[Long]("document_id"))
-      o.put("external_id", r.getAs[String]("external_id"))
-      o.put("document_similarity", r.getAs[Double]("similarity"))
-      if (!noDocs)
-        o.set("document", mapper.readTree(r.getAs[String]("doc_json")))
-    }
-    val res = mapper.createObjectNode()
-    res.set("documents", arr)
-    (200, mapper.writeValueAsString(res))
+    rows.toSeq.map(r => (r.getAs[Long]("document_id"), r.getAs[Double]("similarity"),
+      r.getAs[String]("external_id"), r.getAs[String]("doc_json")))
   }
 
   // ---------- /api/chat (server/chat.go) ----------
@@ -471,8 +519,14 @@ final class RestServer(spark: SparkSession, dataDir: String,
 
 object RestServer {
   /** What every read resolves from storage: the documents frame and the
-    * decoded index frame. */
-  private final case class ReadView(docs: DataFrame, index: DataFrame)
+    * decoded index frame, plans over one file listing; and `local`, the
+    * corpus on the driver when it is small, collected by the first
+    * search that reads it, so a write that drops the view never pays
+    * for it. */
+  private final class ReadView(val docs: DataFrame, val index: DataFrame,
+      collectLocal: => Option[SearchService.LocalCorpus]) {
+    lazy val local: Option[SearchService.LocalCorpus] = collectLocal
+  }
 
   /** The document store's columns, as the upload writes them. */
   val DocSchema: StructType = StructType(Seq(

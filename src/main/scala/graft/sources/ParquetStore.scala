@@ -72,11 +72,6 @@ final case class ParquetStore(path: String, keyCol: String, nBuckets: Int = 64,
     * Spark job. */
   def read(spark: SparkSession): DataFrame = stored(spark).drop("_bucket")
 
-  /** S6 insert sink: append — new files land in their key's bucket dirs,
-    * no existing file is touched. */
-  def append(df: DataFrame): Unit =
-    withBucket(df).write.mode("append").option("compression", "zstd").partitionBy("_bucket").parquet(path)
-
   /** The distinct buckets of `keyed`'s `_bucket` column, and the frame's
     * rows when it is driver-local (collecting those runs no job). */
   private def touchedBy(keyed: DataFrame): (Seq[Long], Option[Array[Row]]) =
@@ -166,10 +161,10 @@ final case class ParquetStore(path: String, keyCol: String, nBuckets: Int = 64,
 
   /** Small-file compaction: buckets holding `minFiles`+ parquet parts
     * rewrite into a single file each — buckets under the threshold keep
-    * their files untouched. Streaming upsert/append lands one file per
-    * (micro-batch, bucket), so per-bucket file count — and every
-    * read's open() cost — grows with batch count until compaction
-    * restores one-file-per-bucket (the relational twin of
+    * their files untouched. A write lands one file per (task, bucket),
+    * so a store created from many input partitions holds several files
+    * per bucket, and every read pays an open() per file, until
+    * compaction restores one-file-per-bucket (the relational twin of
     * [[IvfBinarySource.compact]]). Offline operation: not safe
     * concurrently with writers. Returns # buckets rewritten. */
   def compact(spark: SparkSession, minFiles: Int = 2): Long = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.ParquetStore
 
-/** S6/S7/S8 sinks: bucket-partitioned append / upsert / cascading delete,
+/** S6/S7/S8 sinks: bucket-partitioned create / upsert / cascading delete,
   * with the partition-pruning guarantee (untouched buckets' files are not
   * rewritten) checked via file modification times. */
 class ParquetStoreSpec extends AnyFunSuite {
@@ -20,19 +20,6 @@ class ParquetStoreSpec extends AnyFunSuite {
     store.create(docs)
     assert(store.read(spark).count() == docs.count())
     assert(store.bucketDirs.nonEmpty && store.bucketDirs.forall(_.startsWith("_bucket=")))
-  }
-
-  test("append adds rows without touching existing files") {
-    import spark.implicits._
-    val store = ParquetStore(tmp(), "doc_id", nBuckets = 8)
-    store.create(docs)
-    val before = filesWithMtime(store.path)
-    store.append(Seq((100000L, "new doc text", "en", "srcX"))
-      .toDF("doc_id", "text", "lang", "source"))
-    val after = filesWithMtime(store.path)
-    // every pre-existing file untouched
-    before.foreach { case (f, m) => assert(after.get(f).contains(m), f) }
-    assert(store.read(spark).count() == docs.count() + 1)
   }
 
   test("upsert replaces matched keys, inserts new, rewrites only touched buckets") {
@@ -127,12 +114,12 @@ class ParquetStoreSpec extends AnyFunSuite {
   test("compact folds multi-file buckets to one file; sparse buckets untouched") {
     import spark.implicits._
     val store = ParquetStore(tmp(), "doc_id", nBuckets = 4)
-    store.create(docs)
-    // three appends → several files per touched bucket
-    (1 to 3).foreach { i =>
-      store.append(Seq((200000L + i, s"late doc $i", "en", "srcZ"))
-        .toDF("doc_id", "text", "lang", "source"))
-    }
+    // the corpus in one partition writes one file into every bucket; the
+    // three late rows, a partition each, add files to at most three of
+    // the four (two single-partition sides would union into one)
+    val late = (1 to 3).map(i => (200000L + i, s"late doc $i", "en", "srcZ"))
+      .toDF("doc_id", "text", "lang", "source")
+    store.create(docs.coalesce(1).unionByName(late.repartition(3)))
     val rowsBefore = store.read(spark).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet
     def filesPerBucket: Map[String, Int] =
@@ -141,7 +128,7 @@ class ParquetStoreSpec extends AnyFunSuite {
           .count(_.getName.endsWith(".parquet"))
       }.toMap
     val before = filesPerBucket
-    assert(before.values.exists(_ > 1), "appends must have split buckets")
+    assert(before.values.exists(_ > 1), "the late rows must have split buckets")
     val sparse = before.filter(_._2 == 1).keySet
     val sparseMtimes = filesWithMtime(store.path)
       .filter { case (p, _) => sparse.exists(d => p.contains(s"/$d/")) }

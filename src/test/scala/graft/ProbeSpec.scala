@@ -77,6 +77,11 @@ class ProbeSpec extends AnyFunSuite {
       "delete/index", "delete/doc-store").subsetOf(steps), out)
     assert(out.exists(l => l.startsWith("""{"probe":"serve-write","reps":2,""") &&
       l.contains("\"delete_jobs\":")), out)
+    // the read half: the first search after a write collects the view in
+    // two jobs, a warm one answers on the driver
+    val searches = out.filter(_.startsWith("[serve] search ")).map(_.split("\\s+"))
+      .map(f => f(2) -> f(3)).toMap
+    assert(searches == Map("after-write" -> "jobs=2.0", "warm" -> "jobs=0.0"), out)
   }
 
   test("ivf-scale runs the index lifecycle on a small synthesized corpus") {

@@ -32,6 +32,13 @@ object RestServerSpec {
 
 class RestServerSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
+  /** A session on the suite's context whose broadcast threshold is -1:
+    * a server on it never holds its corpus on the driver. */
+  private lazy val overBound = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
+  }
   private val mapper = new ObjectMapper()
   private val client = HttpClient.newHttpClient()
 
@@ -261,9 +268,10 @@ class RestServerSpec extends AnyFunSuite {
   test("large-tenant regime: scoped search + owner delete work with the gate forced to merge") {
     // broadcastRowLimit=1 makes EVERY tenant scope take the
     // no-broadcast, no-driver-collect path — the 100 TB regime in
-    // miniature, end-to-end over HTTP
+    // miniature, end-to-end over HTTP; the -1 threshold keeps the corpus
+    // off the driver, so searches take that Spark path
     val dir = java.nio.file.Files.createTempDirectory("rest-tenant").toString
-    val s = new graft.server.RestServer(spark, dir, broadcastRowLimit = 1L)
+    val s = new graft.server.RestServer(overBound, dir, broadcastRowLimit = 1L)
     s.start()
     def post2(path: String, body: String) = client.send(
       HttpRequest.newBuilder(URI.create(s"http://localhost:${s.port}$path"))
@@ -300,8 +308,14 @@ class RestServerSpec extends AnyFunSuite {
     withServerIn(java.nio.file.Files.createTempDirectory(name).toString)(body)
 
   /** [[withServer]] on a given data directory. */
-  private def withServerIn(dir: String)(body: ((String, String) => JsonNode) => Unit): Unit = {
-    val s = new graft.server.RestServer(spark, dir)
+  private def withServerIn(dir: String)(body: ((String, String) => JsonNode) => Unit): Unit =
+    withRawServer(dir, spark)(call => body((path, req) => mapper.readTree(call(path, req))))
+
+  /** A server on `dir` and `session`, with a POST helper that returns the
+    * raw body. */
+  private def withRawServer(dir: String, session: org.apache.spark.sql.SparkSession)(
+      body: ((String, String) => String) => Unit): Unit = {
+    val s = new graft.server.RestServer(session, dir)
     s.start()
     def call(path: String, req: String) = {
       val r = client.send(
@@ -309,28 +323,75 @@ class RestServerSpec extends AnyFunSuite {
           .POST(HttpRequest.BodyPublishers.ofString(req)).build(),
         HttpResponse.BodyHandlers.ofByteArray())
       assert(r.statusCode() == 200, s"$path $req -> ${r.statusCode()}")
-      json(r)
+      new String(r.body(), UTF_8)
     }
     try body(call) finally s.stop()
   }
 
-  test("a plain search runs two named Spark jobs, also right after a write") {
-    withServer("rest-jobs") { call =>
+  test("a warm search runs no job; over the bound, the page and the backfill") {
+    val dir = java.nio.file.Files.createTempDirectory("rest-jobs").toString
+    val search = """{"text":"job count doc 7","count":10,"centroids":1}"""
+    val scoped = """{"text":"job count doc 7","count":10,"owner":"o","category":"c"}"""
+    withServerIn(dir) { call =>
       val docs = (1 to 30).map(i => s"""{"document":"job count doc $i"}""")
         .mkString("[", ",", "]")
-      call("/api/upload", s"""{"owner":"o","documents":$docs}""")
-      val search = """{"text":"job count doc 7","count":10,"centroids":1}"""
-      call("/api/search", search) // first resolve of the read view
-      val warm = jobsOf(call("/api/search", search))
-      assert(warm == Seq("search/page", "search/backfill"),
-        s"a plain search must run the page and the backfill only: $warm")
-      // a write drops the view; the rebuild reads the doc store with the
-      // schema it already knows, so it adds no footer-merging job
-      call("/api/upload", """{"documents":[{"document":"one more doc"}]}""")
-      val rebuilt = jobsOf(call("/api/search", search))
-      assert(rebuilt == Seq("search/page", "search/backfill"),
-        s"the first search after a write must run the same two jobs: $rebuilt")
+      call("/api/upload", s"""{"owner":"o","category":"c","documents":$docs}""")
+      val first = jobsOf(call("/api/search", search))
+      assert(first == Seq("view/index", "view/docs"),
+        s"the first search must collect the index and the documents only: $first")
+      val warm = jobsOf { call("/api/search", search); call("/api/search", scoped) }
+      assert(warm.isEmpty, s"a warm plain or scoped search must run no job: $warm")
+      // a write drops the view; the next search collects it again
+      call("/api/upload", """{"owner":"o","documents":[{"document":"one more doc"}]}""")
+      val rebuilt = jobsOf(call("/api/search", scoped))
+      assert(rebuilt == Seq("view/index", "view/docs"),
+        s"the first search after a write must rebuild the view in two jobs: $rebuilt")
+      assert(jobsOf(call("/api/search", search)).isEmpty)
     }
+    // the same data with the threshold at -1: nothing is collected, and a
+    // plain search is the page and the backfill, warm or first
+    withRawServer(dir, overBound) { call =>
+      val over = jobsOf { call("/api/search", search); call("/api/search", search) }
+      assert(over == Seq("search/page", "search/backfill", "search/page", "search/backfill"),
+        s"over the bound a plain search must run the page and the backfill only: $over")
+    }
+  }
+
+  test("the driver path answers byte-identically to the Spark path") {
+    val dir = java.nio.file.Files.createTempDirectory("rest-equiv").toString
+    def texts(tag: String, n: Int) = (1 to n)
+      .map(i => s"""{"external_id":"$tag$i","document":"equal answer $tag doc $i topic ${i % 11}"}""")
+      .mkString("[", ",", "]")
+    val q = "\"text\":\"equal answer topic 3\""
+    val reqs = Seq(
+      s"""{$q,"count":10}""",
+      s"""{$q,"count":10,"offset":10}""",
+      s"""{$q,"count":10,"centroids":4}""",
+      s"""{$q,"count":20,"centroids":-1}""",
+      s"""{$q,"count":10,"owner":"oa"}""",
+      s"""{$q,"count":10,"category":"cb","centroids":-1}""",
+      s"""{$q,"count":10,"owner":"oa","category":"cb","centroids":-1}""",
+      s"""{$q,"count":10,"owner":"nobody"}""",
+      s"""{$q,"count":10,"no_documents":true}""",
+      s"""{$q,"count":10,"no_documents":false}""")
+    var onDriver = Seq.empty[String]
+    withRawServer(dir, spark) { call =>
+      // the first upload trains a three-list model
+      call("/api/upload", s"""{"owner":"oa","category":"ca","documents":${texts("a", 150)}}""")
+      call("/api/upload", s"""{"owner":"ob","category":"cb","documents":${texts("b", 30)}}""")
+      call("/api/upload", s"""{"owner":"oa","category":"cb","documents":${texts("c", 20)}}""")
+      val jobs = jobsOf { onDriver = reqs.map(call("/api/search", _)) }
+      assert(jobs == Seq("view/index", "view/docs"), s"the driver path ran $jobs")
+    }
+    withRawServer(dir, overBound) { call =>
+      reqs.zip(onDriver).foreach { case (req, driver) =>
+        assert(call("/api/search", req) == driver, s"request $req")
+      }
+    }
+    val counts = onDriver.map(b => mapper.readTree(b).get("documents").size())
+    assert(counts == Seq(10, 10, 10, 20, 10, 10, 10, 0, 10, 10), counts)
+    assert(!mapper.readTree(onDriver(8)).get("documents").get(0).has("document"))
+    assert(mapper.readTree(onDriver(9)).get("documents").get(0).has("document"))
   }
 
   test("every write is visible to the next search, and scopes hold after a rebuild") {

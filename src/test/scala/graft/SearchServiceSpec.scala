@@ -82,7 +82,7 @@ class SearchServiceSpec extends AnyFunSuite {
     }
   }
 
-  test("searchHot returns exactly what search returns, fused") {
+  test("searchLocal returns exactly what search returns, with no Spark job") {
     val (indexed, model) = built
     val docs = Tables.load(spark, SparkSuite.sf0001, "documents")
       .select(col("doc_id").as("document_id"), col("lang"))
@@ -90,18 +90,27 @@ class SearchServiceSpec extends AnyFunSuite {
       SearchRequest("hot alpha", count = 5, offset = 0, centroids = 2),
       SearchRequest("hot beta", count = 3, offset = 2, centroids = 1),
       SearchRequest("hot gamma", count = 4, offset = 0, centroids = -1))
-    reqs.foreach { req =>
-      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+    val local = SearchService.LocalCorpus(
+      SearchService.LocalCorpus.lists(indexed), SearchService.LocalCorpus.docs(docs))
+    // a scope keeps the documents whose row it accepts; the Spark path
+    // gets the same scope as a semi-joined index and filtered documents
+    val en = docs.filter(col("lang") === "en")
+    val inEn = Some((r: org.apache.spark.sql.Row) => r.getAs[String]("lang") == "en")
+    for (req <- reqs; scoped <- Seq(false, true)) {
+      val twoPhase = SearchService.search(spark,
+        if (scoped) indexed.join(en.select("document_id"), Seq("document_id"), "left_semi")
+        else indexed, if (scoped) en else docs, model, req).collect()
         .map(r => (r.getAs[Long]("document_id"),
           r.getAs[Double]("similarity"), r.getAs[String]("lang"))).toSeq
-      val twoPhase = rows(SearchService.search(spark, indexed, docs, model, req))
-      val fused = rows(SearchService.searchHot(spark, indexed, docs, model, req))
-      assert(fused == twoPhase, s"request '${req.text}'")
+      var onDriver = Seq.empty[(Long, Double, String)]
+      val jobs = SparkSuite.jobsOf {
+        onDriver = SearchService.searchLocal(local, model, req, if (scoped) inEn else None)
+          .map(h => (h.documentId, h.similarity, h.doc.map(_.getAs[String]("lang")).orNull))
+      }
+      assert(twoPhase.nonEmpty, s"request '${req.text}' scoped=$scoped")
+      assert(onDriver == twoPhase, s"request '${req.text}' scoped=$scoped")
+      assert(jobs.isEmpty, s"the driver path ran jobs: $jobs")
     }
-    // the fused shape is one execution: no IN-pushdown collect round trip
-    val plan = SearchService.searchHot(spark, indexed, docs, model, reqs.head)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan.take(400))
   }
 
   test("search keeps left-join backfill semantics: missing ids null, duplicate ids fan out") {
