@@ -316,15 +316,17 @@ object Probe {
     * [[graft.server.RestServer]] on a temp dir: a cold upload trains the
     * model and one warm round runs untimed, then `reps` rounds of a
     * 10-document upload and a one-document delete, each followed by two
-    * searches: the first after the write, which rebuilds the read view,
-    * and a warm one. */
+    * searches: the first after the writes, which read the corpus the
+    * writes kept current, and a warm one. The client speaks HTTP/1.1, as
+    * the benchmark's does, so each reply's packets reach it as they would
+    * there. */
   private def serveWrites(spark: SparkSession, reps: Int): Unit = {
     import java.net.URI
     import java.net.http.{HttpClient, HttpRequest, HttpResponse}
     val dir = Files.createTempDirectory("graft-probe-serve")
     val server = new graft.server.RestServer(spark, dir.toString)
     val port = server.start()
-    val client = HttpClient.newHttpClient()
+    val client = HttpClient.newBuilder().version(HttpClient.Version.HTTP_1_1).build()
     def post(route: String, body: String): String = {
       val r = client.send(HttpRequest.newBuilder(URI.create(s"http://localhost:$port$route"))
         .POST(HttpRequest.BodyPublishers.ofString(body)).build(),

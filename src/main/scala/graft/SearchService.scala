@@ -87,9 +87,26 @@ object SearchService {
 
   /** A served corpus held on the driver: each IVF list's
     * (document_id, vector) rows by centroid_id, and each document's row,
-    * (document_id, payload columns…), by document_id. */
+    * (document_id, payload columns…), by document_id. Immutable: a write
+    * derives a new corpus with [[add]] or [[remove]], and a search that
+    * holds the old one finishes on it. */
   final case class LocalCorpus(lists: Map[Int, Array[(Long, Array[Float])]],
-      docs: Map[Long, Row])
+      docs: Map[Long, Row]) {
+    /** This corpus plus `rows`, document rows keyed by their first column,
+      * and `vectors`, (centroid_id, document_id, vector) chunk rows. */
+    def add(rows: Seq[Row], vectors: Seq[(Int, Long, Array[Float])]): LocalCorpus =
+      LocalCorpus(
+        vectors.groupBy(_._1).foldLeft(lists) { case (ls, (cid, vs)) =>
+          ls.updated(cid, ls.getOrElse(cid, Array.empty[(Long, Array[Float])]) ++
+            vs.map { case (_, id, v) => (id, v) })
+        },
+        docs ++ rows.map(r => r.getLong(0) -> r))
+
+    /** This corpus without the documents `ids` and their chunks. */
+    def remove(ids: Set[Long]): LocalCorpus =
+      LocalCorpus(lists.map { case (cid, rows) => cid -> rows.filterNot(r => ids(r._1)) },
+        docs -- ids)
+  }
 
   object LocalCorpus {
     /** Collects the (centroid_id, document_id, `vecCol`) rows of

@@ -13,11 +13,13 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import com.github.luben.zstd.{ZstdInputStream, ZstdOutputStream}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.{Jobs, SearchService}
-import graft.functions.{gf, EmbedProvider, GenerateProvider, NoopGenerateProvider}
+import graft.SearchService.LocalCorpus
+import graft.functions.{gf, EmbedProvider, GenerateProvider, NoopGenerateProvider, VectorKernels}
 import graft.index.IvfIndex
 import graft.operators.Pins
 import graft.sources.{IvfBinarySource, ParquetStore}
@@ -55,30 +57,44 @@ import graft.streaming.Streams
   * chunk text, like the reference's `embeddings` rows) and the document
   * store. The server itself holds the IVF model
   * (centroid matrix, persisted under dataDir/model so restarts serve the
-  * lists the writes landed in), a doc-id counter, and a read view, which
-  * every read reuses until a write drops it. The view's frames, the
-  * resolved documents and the decoded index, are plans over a file
-  * listing; chat, categories, the owner/category deletes and the restart
-  * bootstrap read them. When the index and the document store together
-  * fit `spark.sql.autoBroadcastJoinThreshold` on disk, the view also holds
+  * lists the writes landed in), a doc-id counter, and a read view. The
+  * view's frames, the resolved documents and the decoded index, are lazy
+  * plans over a file listing; chat, categories, the owner/category
+  * deletes of a corpus not held and the restart bootstrap read them.
+  * When the index and the document store together fit
+  * `spark.sql.autoBroadcastJoinThreshold` on disk, the view also holds
   * the corpus on the driver, collected in two jobs (`view/index`,
-  * `view/docs`) by the first search after a write, and every search,
+  * `view/docs`) by the first search that reads it, and every search,
   * plain or scoped, answers from it with no Spark job
-  * ([[SearchService.searchLocal]]). Over the bound a plain search costs
-  * two Spark jobs (page, backfill). The server is the document store's
-  * only writer and declares its columns ([[RestServer.DocSchema]]), so no
-  * read or rewrite merges parquet footers. The writes run on keys the
-  * server minted and holds: a warm /api/delete/document costs four (a
-  * discovery job and a list rewrite in the index, a pin and a write in
-  * the document store) and a warm /api/upload six (the embed pin, the
-  * index append's two, the doc-store upsert's three). Each Spark action
-  * a handler runs is named `"<route>/<step>"` ([[graft.Jobs]]). Tenant
-  * scoping is size-gated, not driver-bounded: over the bound,
-  * owner/category search filters ride a gateKnown semi join (broadcast
-  * only when the scope is small), and owner/category deletes keep their
-  * victim set a DataFrame end-to-end — a tenant larger than driver
-  * memory still searches and deletes (the reference's `WHERE owner_id=?`
-  * SQL has no driver bound either). */
+  * ([[SearchService.searchLocal]]). Writes keep a held corpus current: an
+  * upload adds the rows it wrote to the index and the documents, a delete
+  * removes its ids, and the next view holds the result, so no search
+  * after a write runs a job either. A write never collects a corpus that
+  * was not held; one that fails part-way drops the view, and one that
+  * takes the stores over the bound hands search to the Spark path, where
+  * a plain search costs two Spark jobs (page, backfill). The server is
+  * the document store's only writer and declares its columns
+  * ([[RestServer.DocSchema]]), so no read or rewrite merges parquet
+  * footers. The writes run on keys the server minted and holds: a warm
+  * /api/delete/document costs four (a discovery job and a list rewrite
+  * in the index, a pin and a write in the document store) and a warm
+  * /api/upload seven (the embed pin, the collect of the assigned batch,
+  * the index append's two, the doc-store upsert's three). With a held corpus an owner or category delete
+  * takes its ids from the held rows and costs what a document delete
+  * does. Each Spark action a handler runs is named `"<route>/<step>"`
+  * ([[graft.Jobs]]). Tenant scoping is size-gated, not driver-bounded:
+  * over the bound, owner/category search filters ride a gateKnown semi
+  * join (broadcast only when the scope is small), and owner/category
+  * deletes keep their victim set a DataFrame end-to-end — a tenant
+  * larger than driver memory still searches and deletes (the reference's
+  * `WHERE owner_id=?` SQL has no driver bound either).
+  *
+  * Every reply goes out without Nagle's delay: the JDK server writes a
+  * reply's headers and its body as two packets, and with Nagle on the
+  * body waits for the client's delayed ACK (about 40 ms). The companion
+  * object sets `sun.net.httpserver.nodelay` to true unless it is already
+  * set; the JDK reads it once, so it holds for every JDK `HttpServer` in
+  * the JVM, and only if none was created before this class. */
 final class RestServer(spark: SparkSession, dataDir: String,
     dim: Int = 64, ctxNum: Int = 256,
     embedProvider: Option[EmbedProvider] = None,
@@ -107,41 +123,54 @@ final class RestServer(spark: SparkSession, dataDir: String,
 
   private def readView(): RestServer.ReadView = view.getOrElse {
     val gen = viewLock.synchronized(viewGen)
-    val docs = Jobs.step(spark, "view/doc-schema")(docStore.read(spark))
-    val index = spark.read.format(IvfBinarySource.FORMAT).load(indexDir)
-      .withColumn("document_id", expr(s"vec_id div ${Streams.ChunkVecIdBase}"))
-    val v = new RestServer.ReadView(docs,
-      index.select(col("vec_id"), col("document_id"),
-        gf.dequantize_vec(col("qvec")).as("embedding"), col("centroid_id")),
-      localCorpus(docs, index))
+    val v = newView(None)
     viewLock.synchronized { if (viewGen == gen) view = Some(v) }
     v
   }
 
-  /** The served corpus on the driver, or None when the index and the
-    * document store together hold more bytes on disk than
-    * `spark.sql.autoBroadcastJoinThreshold` (Spark's bound for a side
-    * small enough to ship whole; -1 means never). The bytes come from
-    * the file listing, before anything is collected. Under the bound,
-    * one job collects the index's quantized lists and one the documents. */
-  private def localCorpus(docs: DataFrame, index: DataFrame): Option[SearchService.LocalCorpus] = {
+  /** A view over the stores as they are on disk, holding `held`; a view
+    * that holds no corpus collects one, when the stores are
+    * [[withinBound]], for the first search that reads it: one job
+    * collects the index's quantized lists and one the documents. */
+  private def newView(held: Option[LocalCorpus]): RestServer.ReadView =
+    new RestServer.ReadView(
+      Jobs.step(spark, "view/doc-schema")(docStore.read(spark)),
+      spark.read.format(IvfBinarySource.FORMAT).load(indexDir)
+        .withColumn("document_id", expr(s"vec_id div ${Streams.ChunkVecIdBase}")),
+      held,
+      v => if (!withinBound) None else Some(LocalCorpus(
+        Jobs.step(spark, "view/index")(LocalCorpus.lists(v.indexRows, "qvec")),
+        Jobs.step(spark, "view/docs")(LocalCorpus.docs(v.docs)))))
+
+  /** Whether the index and the document store together hold at most
+    * `spark.sql.autoBroadcastJoinThreshold` bytes on disk (Spark's bound
+    * for a side small enough to ship whole; -1 means never), summed from
+    * the file listing with no job. */
+  private def withinBound: Boolean = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val bytes = Seq(indexDir, docStore.path).map { d =>
+    Seq(indexDir, docStore.path).map { d =>
       val p = new org.apache.hadoop.fs.Path(d)
       val fs = p.getFileSystem(conf)
       if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-    }.sum
-    if (bytes > spark.sessionState.conf.autoBroadcastJoinThreshold) None
-    else Some(SearchService.LocalCorpus(
-      Jobs.step(spark, "view/index")(SearchService.LocalCorpus.lists(index, "qvec")),
-      Jobs.step(spark, "view/docs")(SearchService.LocalCorpus.docs(docs))))
+    }.sum <= spark.sessionState.conf.autoBroadcastJoinThreshold
   }
 
-  /** Runs a store mutation under the write lock and drops the read view
-    * afterwards, also when the write fails part-way. */
-  private def write[A](body: => A): A = writeLock.synchronized {
-    try body
-    finally viewLock.synchronized { viewGen += 1; view = None }
+  /** Runs a store mutation under the write lock. `body` gets the corpus
+    * the current view holds, if it holds one, and returns its reply and
+    * that corpus with the write's own change applied; the next view holds
+    * it while the stores stay [[withinBound]]. A write that fails
+    * part-way, or that returns no corpus, drops the view. */
+  private def write[A](body: Option[LocalCorpus] =>
+      (A, Option[LocalCorpus])): A = writeLock.synchronized {
+    var next = Option.empty[LocalCorpus]
+    try {
+      val (reply, corpus) = body(view.flatMap(_.held))
+      next = corpus.filter(_ => withinBound)
+      reply
+    } finally viewLock.synchronized {
+      viewGen += 1
+      view = next.map(c => newView(Some(c)))
+    }
   }
 
   private def nonEmptyDir(d: String): Boolean = {
@@ -306,7 +335,11 @@ final class RestServer(spark: SparkSession, dataDir: String,
     else write(upload(req, docsNode))
   }
 
-  private def upload(req: JsonNode, docsNode: JsonNode): (Int, String) = {
+  /** Writes the batch to both stores and returns `held` with the batch
+    * added: the index rows are collected once, so the index and the
+    * corpus get the same rows. */
+  private def upload(req: JsonNode, docsNode: JsonNode)(held: Option[LocalCorpus])
+      : ((Int, String), Option[LocalCorpus]) = {
     val owner = textOr(req, "owner", "")
     val category = textOr(req, "category", "")
     // reference upload.go:121-123: prefix joins the section text before
@@ -315,15 +348,15 @@ final class RestServer(spark: SparkSession, dataDir: String,
       case "" => ""
       case p => p.trim.stripSuffix(".") + ". "
     }
-    val items = docsNode.elements().asScala.toSeq.map { d =>
-      val ext = textOr(d, "external_id", "")
+    val docRows: Seq[Row] = docsNode.elements().asScala.toSeq.map { d =>
       val doc = d.get("document")
-      (nextId.getAndIncrement(), ext,
-        if (doc == null) "null" else mapper.writeValueAsString(doc))
+      new GenericRowWithSchema(Array(nextId.getAndIncrement(), textOr(d, "external_id", ""),
+        owner, category, if (doc == null) "null" else mapper.writeValueAsString(doc)),
+        RestServer.DocSchema)
     }
     import spark.implicits._
-    val df = items.map { case (id, _, js) => (id, js) }.toDF("doc_id", "text")
-    // pin the embedded batch: the index write and (on cold bootstrap)
+    val df = docRows.map(r => (r.getLong(0), r.getString(4))).toDF("doc_id", "text")
+    // pin the embedded batch: the assignment and (on cold bootstrap)
     // IvfIndex.build each run an action over this frame, and re-deriving
     // it would re-invoke the embed provider per action
     val emb = Jobs.step(spark, "upload/embed")(Pins.pin(Streams.chunkEmbed(df, ctxNum, dim,
@@ -342,19 +375,22 @@ final class RestServer(spark: SparkSession, dataDir: String,
         model = Some(m)
         a
     }
-    Jobs.step(spark, "upload/index-write")(assigned
-      .select((col("doc_id") * Streams.ChunkVecIdBase + col("chunk_id"))
-          .cast("long").as("vec_id"),
-        col("qvec"), col("centroid_id").cast("int").as("centroid_id"))
-      .write.format(IvfBinarySource.FORMAT).mode("append").save(indexDir))
+    val batch = assigned.select((col("doc_id") * Streams.ChunkVecIdBase + col("chunk_id"))
+        .cast("long").as("vec_id"),
+      col("qvec"), col("centroid_id").cast("int").as("centroid_id"))
+    val indexRows = Jobs.step(spark, "upload/assign")(batch.collect())
+    Jobs.step(spark, "upload/index-write")(
+      spark.createDataFrame(indexRows.toSeq.asJava, batch.schema)
+        .write.format(IvfBinarySource.FORMAT).mode("append").save(indexDir))
     // the ids are fresh, but an append would add a file per touched
     // bucket per upload: the upsert's bucket rewrite keeps one file per
     // bucket for the search backfill's full-store scan
-    val docRows = items.map { case (id, ext, js) => (id, ext, owner, category, js) }
-      .toDF("document_id", "external_id", "owner", "category", "doc_json")
-    Jobs.step(spark, "upload/doc-store")(docStore.upsertOrCreate(docRows))
-    val ids = items.map(_._1).mkString("[", ",", "]")
-    (200, s"""{"document_ids":$ids}""")
+    Jobs.step(spark, "upload/doc-store")(
+      docStore.upsertOrCreate(spark.createDataFrame(docRows.asJava, RestServer.DocSchema)))
+    val ids = docRows.map(_.getLong(0)).mkString("[", ",", "]")
+    ((200, s"""{"document_ids":$ids}"""), held.map(_.add(docRows, indexRows.toSeq.map(r =>
+      (r.getInt(2), r.getLong(0) / Streams.ChunkVecIdBase,
+        VectorKernels.dequantize(r.getAs[Array[Byte]](1)))))))
   }
 
   // ---------- /api/search (server/search.go) ----------
@@ -362,7 +398,10 @@ final class RestServer(spark: SparkSession, dataDir: String,
   private def handleSearch(req: JsonNode): (Int, String) = {
     val text = textOr(req, "text", null)
     if (text == null) return (400, """{"error":"Invalid request"}""")
-    if (model.isEmpty || !hasIndex) return (200, """{"documents":[]}""")
+    // a held corpus was read from the index, so a search on one lists no
+    // directory
+    if (model.isEmpty || (view.forall(_.held.isEmpty) && !hasIndex))
+      return (200, """{"documents":[]}""")
     val owner = textOr(req, "owner", "")
     val category = textOr(req, "category", "")
     val noDocs = req.has("no_documents") && req.get("no_documents").asBoolean(false)
@@ -456,42 +495,51 @@ final class RestServer(spark: SparkSession, dataDir: String,
 
   // ---------- /api/delete/* (server/delete.go) ----------
 
-  private def deleteIds(ids: Set[Long]): (Int, String) = write {
+  /** The cascade for ids the server holds; a held corpus loses them. */
+  private def deleteIds(ids: Set[Long], held: Option[LocalCorpus])
+      : ((Int, String), Option[LocalCorpus]) = {
     if (ids.nonEmpty)
       SearchService.deleteDocuments(spark, docStore, indexDir, ids)
-    (200, "{}") // delete.go:79 responds `{}`
+    ((200, "{}"), held.map(_.remove(ids))) // delete.go:79 responds `{}`
   }
 
   private def handleDeleteDocument(req: JsonNode): (Int, String) = {
     val id = Option(req.get("document_id")).map(_.asLong())
     id match {
       case None => (400, """{"error":"Invalid request"}""")
-      case Some(i) => deleteIds(Set(i))
+      case Some(i) => write(deleteIds(Set(i), _))
     }
   }
 
-  /** Owner/category cascade: victims stay a DataFrame end-to-end — a
-    * large tenant's id set never collects to the driver (the engine's
-    * answer to delete.go's `DELETE WHERE owner_id=?`). */
-  private def deleteWhere(pred: org.apache.spark.sql.Column): (Int, String) =
-    write {
+  /** Owner/category cascade over the documents whose `field` is `value`.
+    * A held corpus names them from its rows, and they go as a document
+    * delete's ids do. Otherwise the victims stay a DataFrame end-to-end —
+    * a large tenant's id set never collects to the driver (the engine's
+    * answer to delete.go's `DELETE WHERE owner_id=?`) — and the view is
+    * dropped. */
+  private def deleteWhere(field: String, value: String): (Int, String) = write {
+    case Some(corpus) =>
+      deleteIds(corpus.docs.collect {
+        case (id, d) if d.getAs[String](field) == value => id
+      }.toSet, Some(corpus))
+    case None =>
       if (docStore.isInitialized)
         SearchService.deleteDocuments(spark, docStore, indexDir,
-          readView().docs.filter(pred).select("document_id"),
+          readView().docs.filter(col(field) === value).select("document_id"),
           broadcastRowLimit)
-      (200, "{}")
-    }
+      ((200, "{}"), None)
+  }
 
   private def handleDeleteOwner(req: JsonNode): (Int, String) =
     textOr(req, "owner", "") match {
       case "" => (400, """{"error":"Invalid request"}""")
-      case o => deleteWhere(col("owner") === o)
+      case o => deleteWhere("owner", o)
     }
 
   private def handleDeleteCategory(req: JsonNode): (Int, String) =
     textOr(req, "category", "") match {
       case "" => (400, """{"error":"Invalid request"}""")
-      case c => deleteWhere(col("category") === c)
+      case c => deleteWhere("category", c)
     }
 
   // ---------- /api/categories (server/fetch.go) ----------
@@ -518,14 +566,32 @@ final class RestServer(spark: SparkSession, dataDir: String,
 }
 
 object RestServer {
-  /** What every read resolves from storage: the documents frame and the
-    * decoded index frame, plans over one file listing; and `local`, the
-    * corpus on the driver when it is small, collected by the first
-    * search that reads it, so a write that drops the view never pays
-    * for it. */
-  private final class ReadView(val docs: DataFrame, val index: DataFrame,
-      collectLocal: => Option[SearchService.LocalCorpus]) {
-    lazy val local: Option[SearchService.LocalCorpus] = collectLocal
+  // read once by the JDK's server config, so before the class body's
+  // HttpServer.create (the class reads DocSchema first); see the class doc
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  /** What every read resolves from storage: the documents frame, the
+    * index frame as stored (`indexRows`: vec_id, qvec, centroid_id,
+    * document_id) and decoded (`index`), plans over a file listing made
+    * when a frame is first read; and `local`, the corpus on the driver
+    * when it is small. A view holds the corpus a write derived for it,
+    * or collects one with `collect` for the first search that reads it,
+    * so a write that drops the view never pays for it. */
+  private final class ReadView(loadDocs: => DataFrame, loadIndex: => DataFrame,
+      held0: Option[LocalCorpus],
+      collect: ReadView => Option[LocalCorpus]) {
+    lazy val docs: DataFrame = loadDocs
+    lazy val indexRows: DataFrame = loadIndex
+    lazy val index: DataFrame = indexRows.select(col("vec_id"), col("document_id"),
+      gf.dequantize_vec(col("qvec")).as("embedding"), col("centroid_id"))
+    @volatile private var resolved: Option[Option[LocalCorpus]] = held0.map(Some(_))
+    def local: Option[LocalCorpus] = resolved.getOrElse(synchronized {
+      if (resolved.isEmpty) resolved = Some(collect(this))
+      resolved.get
+    })
+    /** The corpus if this view already has it, without collecting it. */
+    def held: Option[LocalCorpus] = resolved.flatten
   }
 
   /** The document store's columns, as the upload writes them. */

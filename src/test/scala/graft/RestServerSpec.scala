@@ -28,6 +28,16 @@ object RestServerSpec {
       inner.embedBatch(texts)
     }
   }
+
+  /** Embeds as the noop provider does, and fails every batch that holds
+    * a text containing "poison". */
+  final case class PoisonProvider(dim: Int) extends graft.functions.EmbedProvider {
+    private val inner = graft.functions.NoopProvider(dim)
+    def embedBatch(texts: Seq[String]): Seq[Array[Byte]] = {
+      require(!texts.exists(_.contains("poison")), "poisoned batch")
+      inner.embedBatch(texts)
+    }
+  }
 }
 
 class RestServerSpec extends AnyFunSuite {
@@ -341,12 +351,23 @@ class RestServerSpec extends AnyFunSuite {
         s"the first search must collect the index and the documents only: $first")
       val warm = jobsOf { call("/api/search", search); call("/api/search", scoped) }
       assert(warm.isEmpty, s"a warm plain or scoped search must run no job: $warm")
-      // a write drops the view; the next search collects it again
-      call("/api/upload", """{"owner":"o","documents":[{"document":"one more doc"}]}""")
-      val rebuilt = jobsOf(call("/api/search", scoped))
-      assert(rebuilt == Seq("view/index", "view/docs"),
-        s"the first search after a write must rebuild the view in two jobs: $rebuilt")
-      assert(jobsOf(call("/api/search", search)).isEmpty)
+      // every write keeps the held corpus current: no search after one
+      // collects it again
+      val added = call("/api/upload", """{"owner":"p","documents":[{"document":"one more doc"}]}""")
+        .get("document_ids").get(0).asLong()
+      val afterUpload = jobsOf(call("/api/search", scoped))
+      assert(afterUpload.isEmpty, s"a search after an upload ran $afterUpload")
+      call("/api/delete/document", s"""{"document_id":$added}""")
+      val afterDelete = jobsOf(call("/api/search", search))
+      assert(afterDelete.isEmpty, s"a search after a delete ran $afterDelete")
+      // a held corpus names an owner's documents: the delete runs a
+      // document delete's steps only
+      call("/api/upload", """{"owner":"p","documents":[{"document":"yet another doc"}]}""")
+      val ownerDelete = jobsOf(call("/api/delete/owner", """{"owner":"p"}"""))
+      assert(ownerDelete.toSet.subsetOf(Set("delete/index", "delete/doc-store")),
+        s"an owner delete over a held corpus ran $ownerDelete")
+      val afterOwner = jobsOf(call("/api/search", scoped))
+      assert(afterOwner.isEmpty, s"a search after an owner delete ran $afterOwner")
     }
     // the same data with the threshold at -1: nothing is collected, and a
     // plain search is the page and the backfill, warm or first
@@ -373,25 +394,114 @@ class RestServerSpec extends AnyFunSuite {
       s"""{$q,"count":10,"owner":"oa","category":"cb","centroids":-1}""",
       s"""{$q,"count":10,"owner":"nobody"}""",
       s"""{$q,"count":10,"no_documents":true}""",
-      s"""{$q,"count":10,"no_documents":false}""")
-    var onDriver = Seq.empty[String]
+      s"""{$q,"count":10,"no_documents":false}""",
+      s"""{$q,"count":10,"owner":"od","centroids":-1}""")
     withRawServer(dir, spark) { call =>
       // the first upload trains a three-list model
       call("/api/upload", s"""{"owner":"oa","category":"ca","documents":${texts("a", 150)}}""")
       call("/api/upload", s"""{"owner":"ob","category":"cb","documents":${texts("b", 30)}}""")
       call("/api/upload", s"""{"owner":"oa","category":"cb","documents":${texts("c", 20)}}""")
-      val jobs = jobsOf { onDriver = reqs.map(call("/api/search", _)) }
-      assert(jobs == Seq("view/index", "view/docs"), s"the driver path ran $jobs")
-    }
-    withRawServer(dir, overBound) { call =>
-      reqs.zip(onDriver).foreach { case (req, driver) =>
-        assert(call("/api/search", req) == driver, s"request $req")
+      // every body on the driver path, then the same requests to a server
+      // over the same directory that never holds its corpus
+      def answers(after: String, jobs: Seq[String]): Seq[String] = {
+        var onDriver = Seq.empty[String]
+        val ran = jobsOf { onDriver = reqs.map(call("/api/search", _)) }
+        assert(ran == jobs, s"after $after the driver path ran $ran")
+        withRawServer(dir, overBound) { over =>
+          reqs.zip(onDriver).foreach { case (req, driver) =>
+            assert(over("/api/search", req) == driver, s"after $after, request $req")
+          }
+        }
+        onDriver
       }
+      val first = answers("the set-up", Seq("view/index", "view/docs"))
+      val counts = first.map(b => mapper.readTree(b).get("documents").size())
+      assert(counts == Seq(10, 10, 10, 20, 10, 10, 10, 0, 10, 10, 0), counts)
+      assert(!mapper.readTree(first(8)).get("documents").get(0).has("document"))
+      assert(mapper.readTree(first(9)).get("documents").get(0).has("document"))
+      // each write keeps the held corpus current, so no search after it
+      // runs a job, and every answer is still the Spark path's
+      call("/api/upload", s"""{"owner":"od","category":"cd","documents":${texts("d", 15)}}""")
+      val uploaded = answers("an upload", Nil)
+      assert(mapper.readTree(uploaded(10)).get("documents").size() == 10)
+      val top = mapper.readTree(uploaded(0)).get("documents").get(0).get("document_id").asLong()
+      call("/api/delete/document", s"""{"document_id":$top}""")
+      assert(!answers("a document delete", Nil).head.contains(s""""document_id":$top,"""))
+      call("/api/delete/owner", """{"owner":"ob"}""")
+      answers("an owner delete", Nil)
+      call("/api/delete/category", """{"category":"cd"}""")
+      assert(mapper.readTree(answers("a category delete", Nil)(10))
+        .get("documents").size() == 0)
     }
-    val counts = onDriver.map(b => mapper.readTree(b).get("documents").size())
-    assert(counts == Seq(10, 10, 10, 20, 10, 10, 10, 0, 10, 10), counts)
-    assert(!mapper.readTree(onDriver(8)).get("documents").get(0).has("document"))
-    assert(mapper.readTree(onDriver(9)).get("documents").get(0).has("document"))
+  }
+
+  test("an upload that crosses the bound hands search to the Spark path") {
+    val dir = java.nio.file.Files.createTempDirectory("rest-cross").toString
+    val session = spark.newSession()
+    val search = """{"text":"bound doc 3","count":5}"""
+    def storeBytes = Seq("index", "documents").map { d =>
+      val p = new org.apache.hadoop.fs.Path(s"$dir/$d")
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
+    }.sum
+    withRawServer(dir, session) { call =>
+      def upload(tag: String, n: Int) = call("/api/upload", (1 to n)
+        .map(i => s"""{"document":"bound doc $tag $i"}""")
+        .mkString("""{"documents":[""", ",", "]}"))
+      // the first upload writes a file per bucket per task, the second
+      // rewrites the buckets it touches as one file each, so later
+      // uploads only grow the stores
+      upload("seed", 30)
+      upload("spread", 60)
+      session.conf.set("spark.sql.autoBroadcastJoinThreshold", (storeBytes + 1).toString)
+      val held = jobsOf(call("/api/search", search))
+      assert(held == Seq("view/index", "view/docs"), s"the stores fit, yet the search ran $held")
+      // a delete shrinks the stores: the corpus stays held
+      call("/api/delete/document", """{"document_id":1}""")
+      val kept = jobsOf(call("/api/search", search))
+      assert(kept.isEmpty, s"a delete within the bound dropped the corpus: $kept")
+      upload("more", 100)
+      val over = jobsOf { call("/api/search", search); call("/api/search", search) }
+      assert(over == Seq("search/page", "search/backfill", "search/page", "search/backfill"),
+        s"over the bound a search must run the page and the backfill only: $over")
+    }
+  }
+
+  test("a failed write drops the held corpus") {
+    val dir = java.nio.file.Files.createTempDirectory("rest-failed").toString
+    val s = new graft.server.RestServer(spark, dir,
+      embedProvider = Some(RestServerSpec.PoisonProvider(64)))
+    s.start()
+    def post2(path: String, body: String) = client.send(
+      HttpRequest.newBuilder(URI.create(s"http://localhost:${s.port}$path"))
+        .POST(HttpRequest.BodyPublishers.ofString(body)).build(),
+      HttpResponse.BodyHandlers.ofString())
+    val search = """{"text":"failed write doc","count":20,"centroids":-1}"""
+    try {
+      val docs = (1 to 30).map(i => s"""{"document":"failed write doc $i"}""")
+      assert(post2("/api/upload", docs.mkString("""{"documents":[""", ",", "]}"))
+        .statusCode() == 200)
+      post2("/api/search", search)
+      // a write that succeeds keeps the corpus held
+      assert(post2("/api/upload", """{"documents":[{"document":"failed write doc 31"}]}""")
+        .statusCode() == 200)
+      var before = ""
+      val held = jobsOf { before = post2("/api/search", search).body() }
+      assert(held.isEmpty, s"a search after a successful upload ran $held")
+      // this upload's batch fails in the embed provider
+      val failed = post2("/api/upload",
+        """{"documents":[{"document":"fine doc"},{"document":"poison doc"}]}""")
+      assert(failed.statusCode() == 500, failed.body())
+      var after = ""
+      val jobs = jobsOf { after = post2("/api/search", search).body() }
+      assert(jobs == Seq("view/index", "view/docs"),
+        s"the search after a failed write must collect the corpus again: $jobs")
+      assert(after == before)
+    } finally s.stop()
+  }
+
+  test("a constructed server has switched Nagle's algorithm off") {
+    assert(server.port > 0)
+    assert(System.getProperty("sun.net.httpserver.nodelay") == "true")
   }
 
   test("every write is visible to the next search, and scopes hold after a rebuild") {
@@ -429,7 +539,7 @@ class RestServerSpec extends AnyFunSuite {
     }
   }
 
-  test("a warm delete runs at most four jobs in its two steps, a warm 10-document upload at most six") {
+  test("a warm delete or upload and the search after it run at most 4 or 7 jobs") {
     val dir = java.nio.file.Files.createTempDirectory("rest-write-jobs").toString
     withServerIn(dir) { call =>
       def upload(tag: String, n: Int) = call("/api/upload", (1 to n)
@@ -437,18 +547,24 @@ class RestServerSpec extends AnyFunSuite {
         .mkString("""{"owner":"o","documents":[""", ",", "]}"))
         .get("document_ids").elements().asScala.map(_.asLong()).toSeq
       val ids = upload("seed", 30)
-      // warm both routes once
+      // warm both routes once, then hold the corpus
       upload("warm", 10)
       call("/api/delete/document", s"""{"document_id":${ids.head}}""")
-      val del = jobsOf(call("/api/delete/document", s"""{"document_id":${ids(1)}}"""))
+      val probe = """{"text":"write job probe","count":20,"centroids":-1,"no_documents":true}"""
+      call("/api/search", probe)
+      // each write and the search after it
+      val del = jobsOf {
+        call("/api/delete/document", s"""{"document_id":${ids(1)}}""")
+        call("/api/search", probe)
+      }
       assert(del.toSet.subsetOf(Set("delete/index", "delete/doc-store")),
-        s"a delete ran jobs outside its two steps: $del")
-      assert(del.size <= 4, s"a warm delete must run at most 4 jobs: $del")
-      val up = jobsOf(upload("measured", 10))
-      assert(up.size <= 6, s"a warm 10-document upload must run at most 6 jobs: $up")
+        s"a delete and a search ran jobs outside the delete's two steps: $del")
+      assert(del.size <= 4, s"a warm delete and a search must run at most 4 jobs: $del")
+      val up = jobsOf { upload("measured", 10); call("/api/search", probe) }
+      assert(up.forall(_.startsWith("upload/")), s"the search after an upload ran jobs: $up")
+      assert(up.size <= 7, s"a warm 10-document upload and a search must run at most 7 jobs: $up")
       // the deletes and the upload are all visible
-      val left = call("/api/search",
-        """{"text":"write job probe","count":20,"centroids":-1,"no_documents":true}""")
+      val left = call("/api/search", probe)
         .get("documents").elements().asScala.map(_.get("document_id").asLong()).toSet
       assert(!left.contains(ids.head) && !left.contains(ids(1)) && left.nonEmpty)
     }
