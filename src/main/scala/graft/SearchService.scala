@@ -339,7 +339,10 @@ object SearchService {
     * store, where only touched buckets rewrite. The ids reach the store as
     * a driver-local frame, so its delete runs two Spark jobs when it knows
     * its schema ([[ParquetStore.deleteKeys]]): four for the whole cascade.
-    * Returns the number of index rows deleted. */
+    * A caller holding both stores on the driver plans the same cascade
+    * from them in one job ([[graft.sources.IvfBinarySource.deleteDocsIn]],
+    * [[ParquetStore.replaceBuckets]]), as the server does with a held
+    * corpus. Returns the number of index rows deleted. */
   def deleteDocuments(spark: SparkSession, docStore: ParquetStore,
       indexPath: String, docIds: Set[Long]): Long = {
     if (docIds.isEmpty) return 0L

@@ -75,13 +75,22 @@ import graft.streaming.Streams
   * a plain search costs two Spark jobs (page, backfill). The server is
   * the document store's only writer and declares its columns
   * ([[RestServer.DocSchema]]), so no read or rewrite merges parquet
-  * footers. The writes run on keys the server minted and holds: a warm
-  * /api/delete/document costs four (a discovery job and a list rewrite
-  * in the index, a pin and a write in the document store) and a warm
-  * /api/upload seven (the embed pin, the collect of the assigned batch,
-  * the index append's two, the doc-store upsert's three). With a held corpus an owner or category delete
-  * takes its ids from the held rows and costs what a document delete
-  * does. Each Spark action a handler runs is named `"<route>/<step>"`
+  * footers. The writes run on keys the server minted and holds. With a
+  * held corpus they are planned on the driver from it, since it is what
+  * the stores hold: an upload appends its index rows through the
+  * index's own task writer and an index delete rewrites the lists the
+  * held lists name, both on the driver, and the document store rewrites
+  * the touched buckets from the held rows. So a warm /api/delete/document
+  * costs one Spark job (the document store's write) and a warm
+  * /api/upload two (the collect of the embedded and assigned batch, the
+  * document store's write), and an owner or category delete takes its
+  * ids from the held rows and costs what a document delete does.
+  * Without one (before the first search, or over the bound) a delete
+  * costs four (a discovery job and a list rewrite in the index, a pin
+  * and a write in the document store) and an upload six (the collect,
+  * the index append's two, the doc-store upsert's three); only the cold
+  * first upload pins its embedded batch, which the model build reads
+  * too. Each Spark action a handler runs is named `"<route>/<step>"`
   * ([[graft.Jobs]]). Tenant scoping is size-gated, not driver-bounded:
   * over the bound, owner/category search filters ride a gateKnown semi
   * join (broadcast only when the scope is small), and owner/category
@@ -116,6 +125,8 @@ final class RestServer(spark: SparkSession, dataDir: String,
   private val writeLock = new Object
 
   @volatile private var view: Option[RestServer.ReadView] = None
+  /** The corpus the current view holds, without collecting one. */
+  private[graft] def heldCorpus: Option[LocalCorpus] = view.flatMap(_.held)
   // bumped by every write, so a view resolved while a write ran is not
   // installed over the write's result; guarded by viewLock
   private var viewGen = 0L
@@ -356,19 +367,21 @@ final class RestServer(spark: SparkSession, dataDir: String,
     }
     import spark.implicits._
     val df = docRows.map(r => (r.getLong(0), r.getString(4))).toDF("doc_id", "text")
-    // pin the embedded batch: the assignment and (on cold bootstrap)
-    // IvfIndex.build each run an action over this frame, and re-deriving
-    // it would re-invoke the embed provider per action
-    val emb = Jobs.step(spark, "upload/embed")(Pins.pin(Streams.chunkEmbed(df, ctxNum, dim,
-      embedProvider, chunkPrefix = "search_document: " + prefix)))
+    val emb = Streams.chunkEmbed(df, ctxNum, dim, embedProvider,
+      chunkPrefix = "search_document: " + prefix)
     val assigned = model match {
+      // the assignment's collect is the batch's only action
       case Some(m) => IvfIndex.assign(emb, "embedding", m)
       case None =>
         // cold bootstrap: the first batch trains the model it is
         // assigned against (the reference boots with RefreshCentroids),
-        // and the model persists so a restart serves the same lists
+        // and the model persists so a restart serves the same lists.
+        // The build and the assignment each run an action over the
+        // batch, so it is pinned: re-deriving it would re-invoke the
+        // embed provider per action
+        val pinned = Jobs.step(spark, "upload/embed")(Pins.pin(emb))
         val (a, m) = Jobs.step(spark, "upload/model-build") {
-          val built = IvfIndex.build(emb, "embedding", indexParams)
+          val built = IvfIndex.build(pinned, "embedding", indexParams)
           IvfIndex.saveModel(spark, built._2, modelDir)
           built
         }
@@ -378,19 +391,29 @@ final class RestServer(spark: SparkSession, dataDir: String,
     val batch = assigned.select((col("doc_id") * Streams.ChunkVecIdBase + col("chunk_id"))
         .cast("long").as("vec_id"),
       col("qvec"), col("centroid_id").cast("int").as("centroid_id"))
-    val indexRows = Jobs.step(spark, "upload/assign")(batch.collect())
-    Jobs.step(spark, "upload/index-write")(
-      spark.createDataFrame(indexRows.toSeq.asJava, batch.schema)
-        .write.format(IvfBinarySource.FORMAT).mode("append").save(indexDir))
-    // the ids are fresh, but an append would add a file per touched
-    // bucket per upload: the upsert's bucket rewrite keeps one file per
-    // bucket for the search backfill's full-store scan
-    Jobs.step(spark, "upload/doc-store")(
-      docStore.upsertOrCreate(spark.createDataFrame(docRows.asJava, RestServer.DocSchema)))
-    val ids = docRows.map(_.getLong(0)).mkString("[", ",", "]")
-    ((200, s"""{"document_ids":$ids}"""), held.map(_.add(docRows, indexRows.toSeq.map(r =>
+    val indexRows = Jobs.step(spark, "upload/assign")(batch.collect()).toSeq
+    val next = held.map(_.add(docRows, indexRows.map(r =>
       (r.getInt(2), r.getLong(0) / Streams.ChunkVecIdBase,
-        VectorKernels.dequantize(r.getAs[Array[Byte]](1)))))))
+        VectorKernels.dequantize(r.getAs[Array[Byte]](1))))))
+    // the ids are fresh, but an append would add a file per touched
+    // bucket per upload: the document store rewrites the buckets it
+    // touches, one file each, for the search backfill's full-store scan.
+    // A held corpus is the whole store, so those buckets' rows come from
+    // it and only the write is a Spark job
+    next match {
+      case Some(corpus) =>
+        Jobs.step(spark, "upload/index-write")(IvfBinarySource.appendLocal(indexDir, indexRows))
+        Jobs.step(spark, "upload/doc-store")(
+          docStore.replaceBuckets(spark, docRows.map(_.get(0)), corpus.docs.values))
+      case None =>
+        Jobs.step(spark, "upload/index-write")(
+          spark.createDataFrame(indexRows.asJava, batch.schema)
+            .write.format(IvfBinarySource.FORMAT).mode("append").save(indexDir))
+        Jobs.step(spark, "upload/doc-store")(
+          docStore.upsertOrCreate(spark.createDataFrame(docRows.asJava, RestServer.DocSchema)))
+    }
+    val ids = docRows.map(_.getLong(0)).mkString("[", ",", "]")
+    ((200, s"""{"document_ids":$ids}"""), next)
   }
 
   // ---------- /api/search (server/search.go) ----------
@@ -495,12 +518,23 @@ final class RestServer(spark: SparkSession, dataDir: String,
 
   // ---------- /api/delete/* (server/delete.go) ----------
 
-  /** The cascade for ids the server holds; a held corpus loses them. */
+  /** The cascade for ids the server holds; a held corpus loses them.
+    * A held corpus also plans it: its lists name the index lists that
+    * hold the ids' chunks, which are rewritten on the driver, and its
+    * rows, without the ids, are the document store's new buckets, so only
+    * the store's write is a Spark job. */
   private def deleteIds(ids: Set[Long], held: Option[LocalCorpus])
       : ((Int, String), Option[LocalCorpus]) = {
-    if (ids.nonEmpty)
-      SearchService.deleteDocuments(spark, docStore, indexDir, ids)
-    ((200, "{}"), held.map(_.remove(ids))) // delete.go:79 responds `{}`
+    val next = held.map(_.remove(ids))
+    if (ids.nonEmpty) (held, next) match {
+      case (Some(corpus), Some(left)) =>
+        Jobs.step(spark, "delete/index")(IvfBinarySource.deleteDocsIn(indexDir,
+          corpus.lists.collect { case (cid, rows) if rows.exists(r => ids(r._1)) => cid }.toSet,
+          ids, Streams.ChunkVecIdBase))
+        Jobs.step(spark, "delete/doc-store")(docStore.replaceBuckets(spark, ids, left.docs.values))
+      case _ => SearchService.deleteDocuments(spark, docStore, indexDir, ids)
+    }
+    ((200, "{}"), next) // delete.go:79 responds `{}`
   }
 
   private def handleDeleteDocument(req: JsonNode): (Int, String) = {

@@ -97,8 +97,11 @@ object IvfBinarySource {
     if (efs.rename(f, named)) named else f
   }
 
-  private[sources] def fs(p: Path): FileSystem =
-    p.getFileSystem(new Configuration())
+  // one per JVM: building a Configuration loads Hadoop's default
+  // resources again, which costs milliseconds per file-system lookup
+  private lazy val hadoopConf = new Configuration()
+
+  private[sources] def fs(p: Path): FileSystem = p.getFileSystem(hadoopConf)
 
   private[sources] def readDim(path: String): Int = {
     val meta = new Path(path, "_dim")
@@ -326,12 +329,78 @@ object IvfBinarySource {
         .foreach { case (cid, (files, doomed)) =>
           rewriteOneList(path, cid, files, doomed.toSet, width)
         }
-      work.foreach { case (cid, _) =>
-        dirCache.remove(new Path(root, s"list=$cid").toString)
-      }
+      forget(rootFs, root, work.map(_._1))
       before - rowsIn(rootFs, root, width.toLong, affected)
     } finally perList.unpersist()
   }
+
+  /** [[deleteDocs]] for a caller that knows which `lists` hold the ids'
+    * rows (a driver-held copy of the index): no discovery job, and each
+    * of those lists is rewritten on the driver by the replayable
+    * [[rewriteOneList]], so the delete runs no Spark job. Returns # rows
+    * deleted. */
+  def deleteDocsIn(path: String, lists: Set[Int], docIds: Set[Long], base: Long): Long = {
+    val root = new Path(path)
+    val rootFs = fs(root)
+    if (lists.isEmpty || docIds.isEmpty || !rootFs.exists(root)) return 0L
+    val width = rowWidth(readDim(path))
+    val before = rowsIn(rootFs, root, width.toLong, lists)
+    listDirs(rootFs, root, Some(lists)).foreach { case (cid, d, _) =>
+      val files = rootFs.listStatus(d).map(_.getPath).filter(_.getName.endsWith(".bin"))
+      rewriteOneList(path, cid, files.map(_.toString).toSeq,
+        vid => docIds.contains(vid / base), width)
+    }
+    forget(rootFs, root, lists)
+    before - rowsIn(rootFs, root, width.toLong, lists)
+  }
+
+  // a driver append's task id: negative, so no Spark task's part name
+  // (`part-<partition>-<task id>`) can match it, and seeded from the clock,
+  // so a restarted server does not reuse one
+  private val driverAppends = new java.util.concurrent.atomic.AtomicLong(
+    -System.currentTimeMillis() * 1000)
+
+  /** Appends `rows` (`vec_id`, `qvec`, `centroid_id`: [[SCHEMA]], vectors
+    * already quantized) to the index at `path` from the driver, with no
+    * Spark job: the same task writer a Spark append runs
+    * ([[IvfDataWriter]]) writes one sealed part file per list, named by a
+    * driver-unique task id, and `_dim` is written as the batch write's
+    * commit writes it. */
+  def appendLocal(path: String, rows: Seq[org.apache.spark.sql.Row]): Unit = {
+    if (rows.isEmpty) return
+    val root = new Path(path)
+    val rootFs = fs(root)
+    rootFs.mkdirs(root)
+    val w = new IvfDataWriter(path, SCHEMA, 0, driverAppends.decrementAndGet())
+    val msg = try {
+      rows.foreach(r => w.write(InternalRow(r.getLong(0), r.getAs[Array[Byte]](1), r.getInt(2))))
+      w.commit()
+    } catch { case e: Throwable => w.abort(); throw e }
+    commitDim(path, Seq(msg))
+    forget(rootFs, root, rows.map(_.getInt(2)).distinct)
+  }
+
+  /** The batch write's commit: records the vector width the writers
+    * reported in `_dim`. */
+  private[sources] def commitDim(path: String, messages: Seq[WriterCommitMessage]): Unit = {
+    val dims = messages.collect { case IvfCommit(d) if d > 0 => d }
+    val root = new Path(path)
+    val rootFs = fs(root)
+    val metaP = new Path(root, "_dim")
+    // an all-empty append batch (streaming idle tick) must not clobber
+    // an existing dim with 0
+    if (dims.isEmpty && rootFs.exists(metaP)) return
+    val dim = if (dims.isEmpty) 0 else dims.max
+    val out = rootFs.create(metaP, true)
+    try out.write(dim.toString.getBytes) finally out.close()
+  }
+
+  /** Drops the planning cache's listings of `lists`, which a rewrite or
+    * an append changed on disk, rather than trusting mtime granularity to
+    * do it. The cache is keyed by the qualified directory that
+    * [[listDirs]] lists. */
+  private def forget(rootFs: FileSystem, root: Path, lists: Iterable[Int]): Unit =
+    lists.foreach(cid => dirCache.remove(rootFs.makeQualified(new Path(root, s"list=$cid")).toString))
 
   /** List-directory enumeration shared by scan planning and maintenance:
     * (centroid_id, dir, mtime) for every `list=` dir surviving `only`. */
@@ -372,11 +441,7 @@ object IvfBinarySource {
       .foreach { case (cid, files) =>
         rewriteOneList(path, cid, files, bc.value, width)
       }
-    // rewritten dirs changed on disk: drop their (driver-side) planning
-    // cache entries rather than trusting mtime granularity to do it
-    work.foreach { case (cid, _) =>
-      dirCache.remove(new Path(root, s"list=$cid").toString)
-    }
+    forget(rootFs, root, work.map(_._1))
     work.size.toLong
   }
 
@@ -510,18 +575,8 @@ private[sources] class IvfWrite(path: String, schema: StructType,
       rootFs.mkdirs(root)
       new IvfWriterFactory(path, schema)
     }
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val dims = messages.collect { case IvfCommit(d) if d > 0 => d }
-      val root = new Path(path)
-      val rootFs = IvfBinarySource.fs(root)
-      val metaP = new Path(root, "_dim")
-      // an all-empty append batch (streaming idle tick) must not clobber
-      // an existing dim with 0
-      if (dims.isEmpty && rootFs.exists(metaP)) return
-      val dim = if (dims.isEmpty) 0 else dims.max
-      val out = rootFs.create(metaP, true)
-      try out.write(dim.toString.getBytes) finally out.close()
-    }
+    override def commit(messages: Array[WriterCommitMessage]): Unit =
+      IvfBinarySource.commitDim(path, messages.toSeq)
     override def abort(messages: Array[WriterCommitMessage]): Unit = ()
   }
 }

@@ -1,10 +1,14 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.operators.Pins
 
@@ -37,6 +41,12 @@ import graft.operators.Pins
   * `Seq(...).toDF` builds) learns its touched buckets from a projection
   * the optimizer folds into that relation, so it runs no job for them;
   * any other frame runs one distinct job.
+  *
+  * A caller that holds the whole store on the driver (the server's
+  * corpus) skips the read: [[replaceBuckets]] writes the touched
+  * buckets' new rows straight from the driver in one Spark job, with no
+  * pin and no scan, placing each row by [[buckets]], the same `bucketOf`
+  * expression evaluated on the driver.
   */
 final case class ParquetStore(path: String, keyCol: String, nBuckets: Int = 64,
     schema: Option[StructType] = None) {
@@ -123,27 +133,74 @@ final case class ParquetStore(path: String, keyCol: String, nBuckets: Int = 64,
     }
   }
 
-  /** The one bucket rewrite behind upsert, delete and compact: `merge`
-    * turns the rows of the `touched` buckets into their new contents,
-    * which are pinned, then written by dynamic partition overwrite. That
-    * write stages its files and swaps a bucket's directory only when the
-    * job commits, so a failed write leaves the store as it was. It
-    * replaces only the buckets present in its output, so a bucket whose
-    * rows were ALL deleted keeps its old files through the commit; those
-    * directories are removed after it (a crash in between leaves the
-    * doomed rows, which the same delete removes on a retry). When the
-    * store ends up empty, one zero-row file carrying the schema keeps it
-    * readable (parquet cannot infer a schema from a bare _SUCCESS
-    * marker). */
+  /** The bucket rewrite behind upsert, delete and compact: `merge` turns
+    * the rows of the `touched` buckets into their new contents, which are
+    * pinned, then written by [[writeBuckets]]. */
   private def rewriteBuckets(spark: SparkSession, touched: Seq[Long])(
       merge: DataFrame => DataFrame): Unit = {
     if (touched.isEmpty) return
-    val snapshot = Pins.pin(merge(stored(spark).filter(col("_bucket").isin(touched: _*))))
+    writeBuckets(spark, touched,
+      Pins.pin(merge(stored(spark).filter(col("_bucket").isin(touched: _*)))))
+  }
+
+  /** The bucket `bucketOf` puts each key in, with no Spark job: the
+    * expression is analyzed once against the declared key column and
+    * evaluated on the driver, so a key lands where a write puts it. */
+  def buckets(spark: SparkSession, keys: Seq[Any]): Seq[Long] = {
+    val key = declared(keyCol)
+    val plan = spark.createDataFrame(java.util.List.of[Row](), StructType(Seq(key)))
+      .select(bucketOf(col(keyCol))).queryExecution.analyzed
+    val bound = BindReferences.bindReference(
+      plan.expressions.head.asInstanceOf[NamedExpression], plan.children.head.output)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(key.dataType)
+    keys.map(k => bound.eval(InternalRow(toCatalyst(k))).asInstanceOf[Long])
+  }
+
+  /** Replaces the buckets that `keys` fall in with the rows of `rows`
+    * that fall in them, from the driver: `rows` is the store's whole new
+    * contents (or at least all of it in those buckets), each row in the
+    * declared `schema`'s column order, so an upsert passes the held rows
+    * plus the new ones and a delete passes them without the doomed keys.
+    * No pin and no scan: the buckets' rows are written as a local
+    * relation, one file per bucket, by [[writeBuckets]], in one Spark job
+    * (a second writes the zero-row file when the store ends up empty).
+    * On a store with no bucket on disk the rows are its creation. Needs
+    * the declared `schema`. */
+  def replaceBuckets(spark: SparkSession, keys: Iterable[Any], rows: Iterable[Row]): Unit = {
+    val (ks, all) = (keys.toSeq, rows.toSeq)
+    if (ks.isEmpty) return
+    val k = declared.fieldIndex(keyCol)
+    val (keyBuckets, rowBuckets) = buckets(spark, ks ++ all.map(_.get(k))).splitAt(ks.size)
+    val touched = keyBuckets.toSet
+    val kept = all.zip(rowBuckets).collect {
+      case (r, b) if touched(b) => Row.fromSeq(r.toSeq :+ b)
+    }
+    val contents = spark.createDataFrame(kept.asJava, declared.add("_bucket", LongType))
+      .coalesce(1)
+    if (isInitialized) writeBuckets(spark, touched.toSeq, contents)
+    else if (kept.nonEmpty) create(contents.drop("_bucket"))
+  }
+
+  private def declared: StructType = schema.getOrElse(
+    throw new IllegalStateException(s"store $path declares no schema"))
+
+  /** The write tail of every bucket rewrite: `contents` (the touched
+    * buckets' new rows with their `_bucket`) go out by dynamic partition
+    * overwrite. That write stages its files and swaps a bucket's
+    * directory only when the job commits, so a failed write leaves the
+    * store as it was. It replaces only the buckets present in its output,
+    * so a bucket whose rows were ALL deleted keeps its old files through
+    * the commit; those directories are removed after it (a crash in
+    * between leaves the doomed rows, which the same delete removes on a
+    * retry). When the store ends up empty, one zero-row file carrying the
+    * schema keeps it readable (parquet cannot infer a schema from a bare
+    * _SUCCESS marker). */
+  private def writeBuckets(spark: SparkSession, touched: Seq[Long], contents: DataFrame): Unit = {
     def files(b: Long): Set[String] =
       Option(new java.io.File(s"$path/_bucket=$b").list()).fold(Set.empty[String])(_.toSet)
     val before = touched.map(b => b -> files(b))
     dynamicOverwrite(spark) {
-      snapshot.write.mode("overwrite").option("compression", "zstd").partitionBy("_bucket").parquet(path)
+      contents.write.mode("overwrite").option("compression", "zstd").partitionBy("_bucket").parquet(path)
     }
     // an overwritten bucket holds only new files: one still holding an
     // old file got no output rows
@@ -155,7 +212,7 @@ final case class ParquetStore(path: String, keyCol: String, nBuckets: Int = 64,
     if (bucketDirs.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.parallelize(Seq.empty[Row], 1),
-        StructType(snapshot.schema.filterNot(_.name == "_bucket")))
+        StructType(contents.schema.filterNot(_.name == "_bucket")))
         .write.mode("append").option("compression", "zstd").parquet(path)
   }
 

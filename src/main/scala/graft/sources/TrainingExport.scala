@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -40,7 +39,7 @@ object TrainingExport {
 
   final case class ShardStat(shard: Int, rows: Long, tokens: Long, digest: Long)
 
-  private def fs(p: Path): FileSystem = p.getFileSystem(new Configuration())
+  private def fs(p: Path): FileSystem = IvfBinarySource.fs(p)
 
   /** Columns the export stamps onto every row. `_ord` is persisted so
     * the trainer reads a shard `ORDER BY _ord` and gets the epoch's

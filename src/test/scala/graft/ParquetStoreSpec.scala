@@ -1,6 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.ParquetStore
 
@@ -190,5 +194,56 @@ class ParquetStoreSpec extends AnyFunSuite {
       assert(new java.io.File(known.path, d).listFiles().count(_.getName.endsWith(".parquet")) == 1, d)
     }
   }
-}
 
+  test("the driver's bucket of a key is the _bucket directory a write puts it in") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(12)
+    val keys = (Seq(0L, 1L, -1L, Long.MinValue, Long.MinValue + 1, Long.MaxValue,
+      Long.MaxValue - 1) ++ (-500L to 500L) ++ Seq.fill(10000)(rnd.nextLong())).distinct
+    assert(keys.size >= 10000)
+    val store = ParquetStore(tmp(), "k", nBuckets = 16,
+      schema = Some(StructType(Seq(StructField("k", LongType)))))
+    store.create(keys.toDF("k"))
+    val onDisk = spark.read.parquet(store.path).collect()
+      .map(r => r.getLong(0) -> r.getAs[Number]("_bucket").longValue).toMap
+    val jobs = SparkSuite.jobsOf(assert(keys.zip(store.buckets(spark, keys)).toMap == onDisk))
+    assert(jobs.isEmpty, s"the driver's buckets ran jobs: $jobs")
+  }
+
+  test("replaceBuckets writes the touched buckets from driver rows in one job") {
+    val schema = StructType(Seq(StructField("k", LongType), StructField("v", StringType)))
+    val store = ParquetStore(tmp(), "k", nBuckets = 8, schema = Some(schema))
+    def rows(kvs: Iterable[(Long, String)]) = kvs.map { case (k, v) => Row(k, v) }
+    var held = (1L to 60L).map(k => k -> s"v$k").toMap
+    // several input partitions: buckets start as several files each
+    store.create(spark.createDataFrame(rows(held).toSeq.asJava, schema).repartition(3))
+    def contents = store.read(spark).collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    def filesIn(d: String) = new java.io.File(store.path, d).listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    val touched = store.buckets(spark, Seq(5L, 61L)).map(b => s"_bucket=$b").toSet
+    val before = filesWithMtime(store.path)
+    // an upsert: one changed row and one new one
+    held = held + (5L -> "five") + (61L -> "new")
+    val up = SparkSuite.jobsOf(store.replaceBuckets(spark, Seq(5L, 61L), rows(held)))
+    assert(up.size == 1, s"a driver-planned upsert runs its write only: $up")
+    assert(contents == held)
+    touched.foreach(d => assert(filesIn(d) == 1, d))
+    before.filter { case (f, _) => !touched.exists(d => f.contains(s"/$d/")) }
+      .foreach { case (f, m) =>
+        assert(new java.io.File(f).lastModified() == m, s"untouched bucket rewritten: $f")
+      }
+    // a delete that empties a bucket removes its directory
+    val (emptied, doomed) = held.keys.groupBy(k => store.buckets(spark, Seq(k)).head).minBy(_._2.size)
+    held = held -- doomed
+    val del = SparkSuite.jobsOf(store.replaceBuckets(spark, doomed, rows(held)))
+    assert(del.size == 1, s"a driver-planned delete runs its write only: $del")
+    assert(contents == held)
+    assert(!store.bucketDirs.contains(s"_bucket=$emptied"))
+    // deleting every row leaves the zero-row file, and the next replace
+    // creates the store again
+    store.replaceBuckets(spark, held.keys, Nil)
+    assert(!store.isInitialized && store.read(spark).count() == 0)
+    store.replaceBuckets(spark, Seq(7L), rows(Seq(7L -> "back")))
+    assert(contents == Map(7L -> "back"))
+  }
+}

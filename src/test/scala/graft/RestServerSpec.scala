@@ -182,8 +182,10 @@ class RestServerSpec extends AnyFunSuite {
       up("""{"documents":[{"document":"first short doc"},{"document":"second short doc"}]}""")
       assert(RestServerSpec.embedCalls.get() == 2L,
         s"cold upload re-embedded: ${RestServerSpec.embedCalls.get()} calls for 2 chunks")
-      // warm path: model exists, assign only
-      up("""{"documents":[{"document":"third short doc"}]}""")
+      // warm path: model exists, and the assignment's collect embeds the
+      // batch with no pin
+      val warm = jobsOf(up("""{"documents":[{"document":"third short doc"}]}"""))
+      assert(!warm.contains("upload/embed"), s"a warm upload pinned its batch: $warm")
       assert(RestServerSpec.embedCalls.get() == 3L,
         s"warm upload re-embedded: ${RestServerSpec.embedCalls.get()} calls for 3 chunks")
     } finally s.stop()
@@ -324,7 +326,12 @@ class RestServerSpec extends AnyFunSuite {
   /** A server on `dir` and `session`, with a POST helper that returns the
     * raw body. */
   private def withRawServer(dir: String, session: org.apache.spark.sql.SparkSession)(
-      body: ((String, String) => String) => Unit): Unit = {
+      body: ((String, String) => String) => Unit): Unit =
+    serve(dir, session)((_, call) => body(call))
+
+  /** [[withRawServer]] that also hands `body` the server. */
+  private def serve(dir: String, session: org.apache.spark.sql.SparkSession)(
+      body: (graft.server.RestServer, (String, String) => String) => Unit): Unit = {
     val s = new graft.server.RestServer(session, dir)
     s.start()
     def call(path: String, req: String) = {
@@ -335,7 +342,7 @@ class RestServerSpec extends AnyFunSuite {
       assert(r.statusCode() == 200, s"$path $req -> ${r.statusCode()}")
       new String(r.body(), UTF_8)
     }
-    try body(call) finally s.stop()
+    try body(s, call) finally s.stop()
   }
 
   test("a warm search runs no job; over the bound, the page and the backfill") {
@@ -396,7 +403,7 @@ class RestServerSpec extends AnyFunSuite {
       s"""{$q,"count":10,"no_documents":true}""",
       s"""{$q,"count":10,"no_documents":false}""",
       s"""{$q,"count":10,"owner":"od","centroids":-1}""")
-    withRawServer(dir, spark) { call =>
+    serve(dir, spark) { (server, call) =>
       // the first upload trains a three-list model
       call("/api/upload", s"""{"owner":"oa","category":"ca","documents":${texts("a", 150)}}""")
       call("/api/upload", s"""{"owner":"ob","category":"cb","documents":${texts("b", 30)}}""")
@@ -414,6 +421,12 @@ class RestServerSpec extends AnyFunSuite {
         }
         onDriver
       }
+      // after each write the stores on disk are the corpus the server
+      // holds: a write plans its rewrite from it
+      def diskIsHeld(after: String): Unit = {
+        val held = server.heldCorpus.getOrElse(fail(s"after $after no corpus is held"))
+        assertDiskIsHeld(dir, held, after)
+      }
       val first = answers("the set-up", Seq("view/index", "view/docs"))
       val counts = first.map(b => mapper.readTree(b).get("documents").size())
       assert(counts == Seq(10, 10, 10, 20, 10, 10, 10, 0, 10, 10, 0), counts)
@@ -422,17 +435,67 @@ class RestServerSpec extends AnyFunSuite {
       // each write keeps the held corpus current, so no search after it
       // runs a job, and every answer is still the Spark path's
       call("/api/upload", s"""{"owner":"od","category":"cd","documents":${texts("d", 15)}}""")
+      diskIsHeld("an upload")
       val uploaded = answers("an upload", Nil)
       assert(mapper.readTree(uploaded(10)).get("documents").size() == 10)
       val top = mapper.readTree(uploaded(0)).get("documents").get(0).get("document_id").asLong()
       call("/api/delete/document", s"""{"document_id":$top}""")
+      diskIsHeld("a document delete")
       assert(!answers("a document delete", Nil).head.contains(s""""document_id":$top,"""))
       call("/api/delete/owner", """{"owner":"ob"}""")
+      diskIsHeld("an owner delete")
       answers("an owner delete", Nil)
       call("/api/delete/category", """{"category":"cd"}""")
+      diskIsHeld("a category delete")
       assert(mapper.readTree(answers("a category delete", Nil)(10))
         .get("documents").size() == 0)
+      // the last owner's delete takes every document: the store keeps its
+      // zero-row file, so it still reads
+      call("/api/delete/owner", """{"owner":"oa"}""")
+      diskIsHeld("a delete of every document")
+      assert(server.heldCorpus.exists(_.docs.isEmpty))
+      assert(new java.io.File(s"$dir/documents").listFiles()
+        .exists(f => f.isFile && f.getName.endsWith(".parquet")), "no zero-row file")
+      assert(answers("a delete of every document", Nil).forall(_ == """{"documents":[]}"""))
     }
+  }
+
+  test("a held delete that empties a document-store bucket removes its directory") {
+    val dir = java.nio.file.Files.createTempDirectory("rest-emptied").toString
+    serve(dir, spark) { (server, call) =>
+      // three documents in sixteen buckets: some document is alone in its
+      // bucket
+      call("/api/upload", (1 to 3).map(i => s"""{"document":"lone bucket doc $i"}""")
+        .mkString("""{"documents":[""", ",", "]}"))
+      call("/api/search", """{"text":"lone bucket doc","count":5}""")
+      val byBucket = spark.read.parquet(s"$dir/documents").collect()
+        .groupBy(_.getAs[Number]("_bucket").longValue)
+      val (bucket, rows) = byBucket.find(_._2.length == 1).getOrElse(fail(s"no lone document: $byBucket"))
+      val jobs = jobsOf(call("/api/delete/document",
+        s"""{"document_id":${rows.head.getAs[Long]("document_id")}}"""))
+      assert(jobs == Seq("delete/doc-store"), s"a held delete ran $jobs")
+      assert(!new java.io.File(s"$dir/documents/_bucket=$bucket").exists())
+      assertDiskIsHeld(dir, server.heldCorpus.getOrElse(fail("no corpus is held")), "the delete")
+    }
+  }
+
+  /** The document store read from disk is the held `docs`, row for row,
+    * and the index on disk is the held `lists`, as multisets of
+    * (centroid_id, document_id, vector). */
+  private def assertDiskIsHeld(dir: String, held: SearchService.LocalCorpus, after: String): Unit = {
+    val docs = spark.read.schema(graft.server.RestServer.DocSchema).parquet(s"$dir/documents")
+      .drop("_bucket").collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    assert(docs == held.docs.values.map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long]),
+      s"after $after the document store is not the held documents")
+    def sorted(rows: Iterable[(Int, Long, Seq[Float])]) =
+      rows.toSeq.sortBy { case (cid, id, v) => (cid, id, v.mkString(",")) }
+    val index = spark.read.format(graft.sources.IvfBinarySource.FORMAT).load(s"$dir/index")
+      .collect().map(r => (r.getAs[Int]("centroid_id"),
+        r.getAs[Long]("vec_id") / graft.streaming.Streams.ChunkVecIdBase,
+        graft.functions.VectorKernels.dequantize(r.getAs[Array[Byte]]("qvec")).toSeq))
+    assert(sorted(index) == sorted(held.lists.toSeq.flatMap { case (cid, rows) =>
+      rows.map { case (id, v) => (cid, id, v.toSeq) } }),
+      s"after $after the index is not the held lists")
   }
 
   test("an upload that crosses the bound hands search to the Spark path") {
@@ -539,7 +602,7 @@ class RestServerSpec extends AnyFunSuite {
     }
   }
 
-  test("a warm delete or upload and the search after it run at most 4 or 7 jobs") {
+  test("a warm delete or upload and the search after it run at most 1 or 2 jobs") {
     val dir = java.nio.file.Files.createTempDirectory("rest-write-jobs").toString
     withServerIn(dir) { call =>
       def upload(tag: String, n: Int) = call("/api/upload", (1 to n)
@@ -552,17 +615,20 @@ class RestServerSpec extends AnyFunSuite {
       call("/api/delete/document", s"""{"document_id":${ids.head}}""")
       val probe = """{"text":"write job probe","count":20,"centroids":-1,"no_documents":true}"""
       call("/api/search", probe)
-      // each write and the search after it
+      // each write and the search after it: the held corpus plans the
+      // writes, so only the document store's write and the upload's
+      // assignment are Spark jobs
       val del = jobsOf {
         call("/api/delete/document", s"""{"document_id":${ids(1)}}""")
         call("/api/search", probe)
       }
-      assert(del.toSet.subsetOf(Set("delete/index", "delete/doc-store")),
-        s"a delete and a search ran jobs outside the delete's two steps: $del")
-      assert(del.size <= 4, s"a warm delete and a search must run at most 4 jobs: $del")
+      assert(del.toSet.subsetOf(Set("delete/doc-store")),
+        s"a delete and a search ran jobs outside the document store's write: $del")
+      assert(del.size <= 1, s"a warm delete and a search must run at most 1 job: $del")
       val up = jobsOf { upload("measured", 10); call("/api/search", probe) }
-      assert(up.forall(_.startsWith("upload/")), s"the search after an upload ran jobs: $up")
-      assert(up.size <= 7, s"a warm 10-document upload and a search must run at most 7 jobs: $up")
+      assert(up.toSet.subsetOf(Set("upload/assign", "upload/doc-store")),
+        s"an upload and a search ran jobs outside the assignment and the store's write: $up")
+      assert(up.size <= 2, s"a warm 10-document upload and a search must run at most 2 jobs: $up")
       // the deletes and the upload are all visible
       val left = call("/api/search", probe)
         .get("documents").elements().asScala.map(_.get("document_id").asLong()).toSet
