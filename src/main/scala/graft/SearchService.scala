@@ -340,9 +340,9 @@ object SearchService {
     * a driver-local frame, so its delete runs two Spark jobs when it knows
     * its schema ([[ParquetStore.deleteKeys]]): four for the whole cascade.
     * A caller holding both stores on the driver plans the same cascade
-    * from them in one job ([[graft.sources.IvfBinarySource.deleteDocsIn]],
-    * [[ParquetStore.replaceBuckets]]), as the server does with a held
-    * corpus. Returns the number of index rows deleted. */
+    * from them in one job ([[graft.sources.IvfBinarySource.deleteDocs]]
+    * given the lists, [[ParquetStore.replaceBuckets]]), as the server
+    * does with a held corpus. Returns the number of index rows deleted. */
   def deleteDocuments(spark: SparkSession, docStore: ParquetStore,
       indexPath: String, docIds: Set[Long]): Long = {
     if (docIds.isEmpty) return 0L

@@ -75,22 +75,22 @@ import graft.streaming.Streams
   * a plain search costs two Spark jobs (page, backfill). The server is
   * the document store's only writer and declares its columns
   * ([[RestServer.DocSchema]]), so no read or rewrite merges parquet
-  * footers. The writes run on keys the server minted and holds. With a
-  * held corpus they are planned on the driver from it, since it is what
-  * the stores hold: an upload appends its index rows through the
-  * index's own task writer and an index delete rewrites the lists the
-  * held lists name, both on the driver, and the document store rewrites
-  * the touched buckets from the held rows. So a warm /api/delete/document
-  * costs one Spark job (the document store's write) and a warm
-  * /api/upload two (the collect of the embedded and assigned batch, the
-  * document store's write), and an owner or category delete takes its
-  * ids from the held rows and costs what a document delete does.
-  * Without one (before the first search, or over the bound) a delete
-  * costs four (a discovery job and a list rewrite in the index, a pin
-  * and a write in the document store) and an upload six (the collect,
-  * the index append's two, the doc-store upsert's three); only the cold
-  * first upload pins its embedded batch, which the model build reads
-  * too. Each Spark action a handler runs is named `"<route>/<step>"`
+  * footers. The writes run on keys the server minted and holds. An
+  * upload collects its embedded and assigned batch once and appends
+  * those rows to the index on the driver, through the index's own task
+  * writer, with no Spark job. With a held corpus the rest is planned on
+  * the driver from it, since it is what the stores hold: an index
+  * delete rewrites, on the driver, the lists the held lists name, and
+  * the document store rewrites the touched buckets from the held rows.
+  * So a warm /api/delete/document costs one Spark job (the document
+  * store's write) and a warm /api/upload two (the collect, the document
+  * store's write), and an owner or category delete takes its ids from
+  * the held rows and costs what a document delete does. Without one
+  * (before the first search, or over the bound) a delete costs four (a
+  * discovery job and a list rewrite in the index, a pin and a write in
+  * the document store) and an upload four (the collect and the doc-store
+  * upsert's three); only the cold first upload pins its embedded batch,
+  * which the model build reads too. Each Spark action a handler runs is named `"<route>/<step>"`
   * ([[graft.Jobs]]). Tenant scoping is size-gated, not driver-bounded:
   * over the bound, owner/category search filters ride a gateKnown semi
   * join (broadcast only when the scope is small), and owner/category
@@ -395,23 +395,20 @@ final class RestServer(spark: SparkSession, dataDir: String,
     val next = held.map(_.add(docRows, indexRows.map(r =>
       (r.getInt(2), r.getLong(0) / Streams.ChunkVecIdBase,
         VectorKernels.dequantize(r.getAs[Array[Byte]](1))))))
+    // the rows are on the driver already, so the index append writes
+    // them there, with no Spark job
+    IvfBinarySource.appendLocal(indexDir, indexRows)
     // the ids are fresh, but an append would add a file per touched
     // bucket per upload: the document store rewrites the buckets it
     // touches, one file each, for the search backfill's full-store scan.
     // A held corpus is the whole store, so those buckets' rows come from
     // it and only the write is a Spark job
-    next match {
+    Jobs.step(spark, "upload/doc-store")(next match {
       case Some(corpus) =>
-        Jobs.step(spark, "upload/index-write")(IvfBinarySource.appendLocal(indexDir, indexRows))
-        Jobs.step(spark, "upload/doc-store")(
-          docStore.replaceBuckets(spark, docRows.map(_.get(0)), corpus.docs.values))
+        docStore.replaceBuckets(spark, docRows.map(_.get(0)), corpus.docs.values)
       case None =>
-        Jobs.step(spark, "upload/index-write")(
-          spark.createDataFrame(indexRows.asJava, batch.schema)
-            .write.format(IvfBinarySource.FORMAT).mode("append").save(indexDir))
-        Jobs.step(spark, "upload/doc-store")(
-          docStore.upsertOrCreate(spark.createDataFrame(docRows.asJava, RestServer.DocSchema)))
-    }
+        docStore.upsertOrCreate(spark.createDataFrame(docRows.asJava, RestServer.DocSchema))
+    })
     val ids = docRows.map(_.getLong(0)).mkString("[", ",", "]")
     ((200, s"""{"document_ids":$ids}"""), next)
   }
@@ -528,9 +525,8 @@ final class RestServer(spark: SparkSession, dataDir: String,
     val next = held.map(_.remove(ids))
     if (ids.nonEmpty) (held, next) match {
       case (Some(corpus), Some(left)) =>
-        Jobs.step(spark, "delete/index")(IvfBinarySource.deleteDocsIn(indexDir,
-          corpus.lists.collect { case (cid, rows) if rows.exists(r => ids(r._1)) => cid }.toSet,
-          ids, Streams.ChunkVecIdBase))
+        IvfBinarySource.deleteDocs(spark, indexDir, ids, Streams.ChunkVecIdBase, Some(
+          corpus.lists.collect { case (cid, rows) if rows.exists(r => ids(r._1)) => cid }.toSet))
         Jobs.step(spark, "delete/doc-store")(docStore.replaceBuckets(spark, ids, left.docs.values))
       case _ => SearchService.deleteDocuments(spark, docStore, indexDir, ids)
     }

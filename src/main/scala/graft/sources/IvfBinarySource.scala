@@ -129,7 +129,7 @@ object IvfBinarySource {
   // against one index; without this every scan re-lists probed dirs.
   private val dimCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Int)]()
-  private[sources] val dirCache =
+  private[graft] val dirCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Array[(String, Long)])]()
 
   private[sources] def listBinFiles(rootFs: FileSystem, dir: Path,
@@ -252,31 +252,38 @@ object IvfBinarySource {
     * task returns the distinct lists its doomed rows sit in — no shuffle,
     * and no vec id reaches the driver. Then one rewrite job streams ONLY
     * those lists, dropping the doomed rows ([[rewriteLists]]); an id the
-    * index does not hold rewrites nothing. Ids too many for the driver
-    * take the DataFrame form below. Returns # rows deleted, the
-    * before/after row-count delta over the touched lists (file sizes ÷
-    * row width), which stays exact under task retries. */
+    * index does not hold rewrites nothing. A caller that already knows
+    * which `lists` hold the ids' rows (a driver-held copy of the index)
+    * passes them: then there is no discovery job, and those lists are
+    * rewritten on the driver by the same replayable [[rewriteOneList]],
+    * so the delete runs no Spark job. Ids too many for the driver take
+    * the DataFrame form below. Returns # rows deleted, the before/after
+    * row-count delta over the touched lists (file sizes ÷ row width),
+    * which stays exact under task retries. */
   def deleteDocs(spark: SparkSession, path: String, docIds: Set[Long],
-      base: Long): Long = {
+      base: Long, lists: Option[Set[Int]] = None): Long = {
     val root = new Path(path)
     val rootFs = fs(root)
     if (docIds.isEmpty || !rootFs.exists(root)) return 0L
     val doomed: Long => Boolean = vid => docIds.contains(vid / base)
-    val bc = spark.sparkContext.broadcast(doomed)
-    val affected = spark.read.format(FORMAT).load(path)
-      .select("vec_id", "centroid_id")
-      .filter(col("vec_id").between(docIds.min * base, docIds.max * base + (base - 1)))
-      .queryExecution.toRdd
-      .mapPartitions { rows =>
-        val cids = scala.collection.mutable.Set[Int]()
-        rows.foreach(r => if (bc.value(r.getLong(0))) cids += r.getInt(1))
-        cids.iterator
-      }
-      .collect().toSet
+    val affected = lists.getOrElse {
+      val bc = spark.sparkContext.broadcast(doomed)
+      spark.read.format(FORMAT).load(path)
+        .select("vec_id", "centroid_id")
+        .filter(col("vec_id").between(docIds.min * base, docIds.max * base + (base - 1)))
+        .queryExecution.toRdd
+        .mapPartitions { rows =>
+          val cids = scala.collection.mutable.Set[Int]()
+          rows.foreach(r => if (bc.value(r.getLong(0))) cids += r.getInt(1))
+          cids.iterator
+        }
+        .collect().toSet
+    }
     if (affected.isEmpty) return 0L
     val width = rowWidth(readDim(path)).toLong
     val before = rowsIn(rootFs, root, width, affected)
-    rewriteLists(spark, path, minFiles = 1, drop = doomed, only = Some(affected))
+    rewriteLists(spark, path, minFiles = 1, drop = doomed, only = Some(affected),
+      onDriver = lists.isDefined)
     before - rowsIn(rootFs, root, width, affected)
   }
 
@@ -334,26 +341,6 @@ object IvfBinarySource {
     } finally perList.unpersist()
   }
 
-  /** [[deleteDocs]] for a caller that knows which `lists` hold the ids'
-    * rows (a driver-held copy of the index): no discovery job, and each
-    * of those lists is rewritten on the driver by the replayable
-    * [[rewriteOneList]], so the delete runs no Spark job. Returns # rows
-    * deleted. */
-  def deleteDocsIn(path: String, lists: Set[Int], docIds: Set[Long], base: Long): Long = {
-    val root = new Path(path)
-    val rootFs = fs(root)
-    if (lists.isEmpty || docIds.isEmpty || !rootFs.exists(root)) return 0L
-    val width = rowWidth(readDim(path))
-    val before = rowsIn(rootFs, root, width.toLong, lists)
-    listDirs(rootFs, root, Some(lists)).foreach { case (cid, d, _) =>
-      val files = rootFs.listStatus(d).map(_.getPath).filter(_.getName.endsWith(".bin"))
-      rewriteOneList(path, cid, files.map(_.toString).toSeq,
-        vid => docIds.contains(vid / base), width)
-    }
-    forget(rootFs, root, lists)
-    before - rowsIn(rootFs, root, width.toLong, lists)
-  }
-
   // a driver append's task id: negative, so no Spark task's part name
   // (`part-<partition>-<task id>`) can match it, and seeded from the clock,
   // so a restarted server does not reuse one
@@ -367,7 +354,6 @@ object IvfBinarySource {
     * driver-unique task id, and `_dim` is written as the batch write's
     * commit writes it. */
   def appendLocal(path: String, rows: Seq[org.apache.spark.sql.Row]): Unit = {
-    if (rows.isEmpty) return
     val root = new Path(path)
     val rootFs = fs(root)
     rootFs.mkdirs(root)
@@ -421,9 +407,10 @@ object IvfBinarySource {
     * either finds it already swapped in (and only finishes deleting
     * leftovers) or loses the rename race and discards its own bytes;
     * input files that a prior attempt already deleted are skipped.
-    * Returns # lists rewritten. */
+    * `onDriver` runs the rewrites in the calling thread instead of a
+    * Spark job. Returns # lists rewritten. */
   private def rewriteLists(spark: SparkSession, path: String, minFiles: Int,
-      drop: Long => Boolean, only: Option[Set[Int]]): Long = {
+      drop: Long => Boolean, only: Option[Set[Int]], onDriver: Boolean = false): Long = {
     val root = new Path(path)
     val rootFs = fs(root)
     if (!rootFs.exists(root)) return 0L
@@ -435,12 +422,16 @@ object IvfBinarySource {
       .filter(_._2.size >= minFiles)
       .toSeq
     if (work.isEmpty) return 0L
-    val bc = spark.sparkContext.broadcast(drop)
-    spark.sparkContext
-      .parallelize(work, math.min(work.size, spark.sparkContext.defaultParallelism))
-      .foreach { case (cid, files) =>
-        rewriteOneList(path, cid, files, bc.value, width)
-      }
+    if (onDriver) work.foreach { case (cid, files) =>
+      rewriteOneList(path, cid, files, drop, width)
+    } else {
+      val bc = spark.sparkContext.broadcast(drop)
+      spark.sparkContext
+        .parallelize(work, math.min(work.size, spark.sparkContext.defaultParallelism))
+        .foreach { case (cid, files) =>
+          rewriteOneList(path, cid, files, bc.value, width)
+        }
+    }
     forget(rootFs, root, work.map(_._1))
     work.size.toLong
   }

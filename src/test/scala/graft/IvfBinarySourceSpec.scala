@@ -610,5 +610,36 @@ class IvfBinarySourceSpec extends AnyFunSuite {
       (Set(1L, 2L, 3L, 5L, 6L).map(_ -> 3).toMap))
     assert(IvfBinarySource.deleteDocs(spark, p, Set.empty, base) == 0L)
   }
-}
 
+  test("driver appends and list rewrites drop exactly their lists' cached listings") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val base = 100000L
+    val p = tmp()
+    def rows(docs: Seq[Long]) = docs.flatMap(d => (0 until 3).map(c =>
+        (d * base + c, Seq.fill(8)((d * 10 + c).toFloat), ((d + c) % 4).toInt)))
+      .toDF("vec_id", "embedding", "centroid_id")
+      .select(col("vec_id"), gf.quantize_vec(col("embedding")).as("qvec"), col("centroid_id"))
+    rows(1L to 6L).write.format(IvfBinarySource.FORMAT).mode("overwrite").save(p)
+    // a scan fills the planning cache under each list's qualified directory
+    def docs() = spark.read.format(IvfBinarySource.FORMAT).load(p)
+      .select("vec_id").collect().map(_.getLong(0) / base).toSet
+    def cached = (0 until 4).filter(cid =>
+      IvfBinarySource.dirCache.keySet.asScala.exists(_.endsWith(s"$p/list=$cid"))).toSet
+    assert(docs() == (1L to 6L).toSet)
+    assert(cached == Set(0, 1, 2, 3))
+    // document 7's chunks land in lists 3, 0 and 1
+    IvfBinarySource.appendLocal(p, rows(Seq(7L)).collect().toSeq)
+    assert(cached == Set(2), "a driver append kept a stale listing")
+    assert(docs() == (1L to 7L).toSet)
+    assert(cached == Set(0, 1, 2, 3))
+    // document 1's chunks sit in lists 1, 2 and 3: the given lists are
+    // rewritten on the driver, the discovered ones by a Spark job
+    assert(IvfBinarySource.deleteDocs(spark, p, Set(1L), base, Some(Set(1, 2, 3))) == 3L)
+    assert(cached == Set(0), "a driver list rewrite kept a stale listing")
+    assert(docs() == (2L to 7L).toSet)
+    assert(IvfBinarySource.deleteDocs(spark, p, Set(4L), base) == 3L)
+    assert(cached == Set(3), "a list rewrite job kept a stale listing")
+    assert(docs() == Set(2L, 3L, 5L, 6L, 7L))
+  }
+}

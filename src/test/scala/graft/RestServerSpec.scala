@@ -610,8 +610,14 @@ class RestServerSpec extends AnyFunSuite {
         .mkString("""{"owner":"o","documents":[""", ",", "]}"))
         .get("document_ids").elements().asScala.map(_.asLong()).toSeq
       val ids = upload("seed", 30)
-      // warm both routes once, then hold the corpus
-      upload("warm", 10)
+      // warm both routes once, then hold the corpus. Before the first
+      // search nothing is held: the upload's index rows are still
+      // appended on the driver, and only the assignment and the document
+      // store's upsert run jobs
+      val cold = jobsOf(upload("warm", 10))
+      assert(cold.toSet.subsetOf(Set("upload/assign", "upload/doc-store")),
+        s"an upload with no held corpus ran jobs outside the assignment and the upsert: $cold")
+      assert(cold.size <= 4, s"an upload with no held corpus must run at most 4 jobs: $cold")
       call("/api/delete/document", s"""{"document_id":${ids.head}}""")
       val probe = """{"text":"write job probe","count":20,"centroids":-1,"no_documents":true}"""
       call("/api/search", probe)
