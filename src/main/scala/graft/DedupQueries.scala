@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.gf
@@ -32,24 +32,16 @@ object DedupQueries {
     * buckets → docs sharing a bucket. At scale this is the standard
     * near-dup sweep: the only shuffle is on band-bucket keys, candidate
     * verification cost is |pairs|, not |docs|². */
-  def q21MinhashLsh(s: SparkSession, dir: String): DataFrame = {
+  def q21MinhashLsh(s: SparkSession, dir: String): DataFrame =
     // r19: one explicit bucket exchange instead of a pin — both
     // self-join sides reuse it (ReuseExchange), so the minhash kernel
     // still runs once, in the exchange's map stage, and the pin's
-    // materialization job is gone. The merge hint keeps the join
-    // sort-merge: the scan-based size estimate (file bytes, blind to
-    // the banding explode) would otherwise broadcast a corpus-derived
-    // side. Partition count rides spark.sql.shuffle.partitions + AQE.
-    val bands = t(s, dir, "documents")
+    // materialization job is gone. Partition count rides
+    // spark.sql.shuffle.partitions + AQE.
+    bucketPairs(t(s, dir, "documents")
       .select(col("doc_id"), gf.minhash(col("text"), N, K).as("sig"))
       .select(col("doc_id"), explode(gf.lsh_bands(col("sig"), BANDS)).as("bucket"))
-      .repartition(col("bucket"))
-    val a = bands.as("a").hint("merge")
-    val b = bands.as("b")
-    a.join(b, col("a.bucket") === col("b.bucket") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("n_shared_bands"))
-  }
+      .repartition(col("bucket")))
 
   /** q21's 100 TB-rate twin — ONE md5 per shingle instead of k=16
     * (Kirsch-Mitzenmacher double hashing, see
@@ -58,15 +50,33 @@ object DedupQueries {
     * digests in the kernel that dominates the 10M pair-gen sweep
     * (BASELINE.md). Different hash family ⇒ different (equally valid)
     * candidate sets, so it carries its own oracle rather than q21's. */
-  def q21bMinhashFast(s: SparkSession, dir: String): DataFrame = {
-    val bands = minhashFastBands(s, dir)
-    // merge hint: same estimate-blind broadcast hazard as q21
-    bands.as("a").hint("merge")
-      .join(bands.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.doc_id") < col("b.doc_id"))
+  def q21bMinhashFast(s: SparkSession, dir: String): DataFrame =
+    bucketPairs(minhashFastBands(s, dir))
+
+  /** The all-pairs LSH candidate list over an exploded (doc_id, bucket)
+    * banding frame: every doc pair sharing a bucket, once (doc_a <
+    * doc_b), with the number of bands it shares. */
+  private def bucketPairs(bands: DataFrame): DataFrame =
+    sharedKeyPairs(bands, bands, Seq("bucket"), col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_shared_bands"))
-  }
+
+  /** The equi-join every band/shingle pair generator runs: sides
+    * aliased `a` and `b`, equal on every column of `keys`, then the
+    * `residual` conjuncts (which name columns as `a.x` / `b.x`).
+    *
+    * The join is hinted sort-merge. Its inputs are explode frames, and
+    * the planner sizes them from the parquet bytes BEFORE the explode,
+    * so it would read a corpus-derived side as broadcastable and pick a
+    * BroadcastHashJoin: the kernel twice, a corpus-scale broadcast, and
+    * no reuse of the key exchange. Sort-merge's clustering requirement
+    * is one both sides already meet (each caller hash-partitions its
+    * frame on `keys`), so the ONE exchange is reused and the kernel runs
+    * once in its map stage. `DedupBandedSpec` pins the strategy. */
+  private def sharedKeyPairs(a: DataFrame, b: DataFrame, keys: Seq[String],
+      residual: Column*): DataFrame =
+    a.as("a").hint("merge").join(b.as("b"),
+      (keys.map(k => col(s"a.$k") === col(s"b.$k")) ++ residual).reduce(_ && _))
 
   /** q21b's banding stage alone: the exploded (doc_id, bucket) frame,
     * hash-partitioned on the bucket key — the ONE exchange every
@@ -139,11 +149,6 @@ object DedupQueries {
   def q133MinhashStar(s: SparkSession, dir: String): DataFrame =
     starPairsFromBands(minhashFastBands(s, dir))
 
-  /** Exact n-gram Jaccard near-dup pairs (j >= 0.8): explode distinct
-    * 3-token shingles, self-join on shingle, count intersections.
-    * Shuffles on shingle keys — at 100 TB this runs AFTER q21's LSH
-    * filter (verify stage); it is exact-by-construction here so the
-    * oracle can replicate it without minhash error. */
   /** doc_id → exploded distinct shingles, each row carrying its
     * document's distinct-shingle count n, so (a) the size-band prune
     * fires AT THE JOIN and (b) the final jaccard needs no separate
@@ -151,8 +156,8 @@ object DedupQueries {
     * row-local projection (r18: the previous doc_id-partitioned count
     * window re-counted exactly the rows the explode emitted, paying a
     * corpus exchange + sort for a number the array already knew).
-    * Checkpointed: feeds both join sides (q22) / both side filters
-    * (q91), and the shingle kernel runs once. */
+    * Feeds both join sides (q22) / both side filters (q91) through one
+    * shingle-key exchange, so the shingle kernel runs once. */
   private def shingleCounts(s: SparkSession, dir: String): DataFrame =
     // NOT pinned (r19): the self-join's two sides are the same subplan,
     // so one explicit shingle-key exchange — partition count from the
@@ -212,9 +217,12 @@ object DedupQueries {
     * groupBy PARTIAL aggregate joined back, with the df cap (when given)
     * applied on the aggregate side so capped-out hot shingles die at the
     * inner join. Never a `count().over(Window.partitionBy("s"))` — see
-    * [[containmentShingles]]. `ex` must be pinned by the caller (two
-    * consumers). Plan-gated by `ShinglePlanSpec`: window-free, and the
-    * aggregate is map-side partial. */
+    * [[containmentShingles]]. `ex` feeds two consumers: given `estRows`
+    * it may be unpinned ([[shingleBase]] passes it so), and both hang off
+    * [[partitionByShingle]]'s one exchange; without `estRows` the caller
+    * must pin it, else the count job runs its kernel again. Plan-gated
+    * by `ShinglePlanSpec`: window-free, and the aggregate is map-side
+    * partial. */
   private[graft] def attachDf(ex: DataFrame, cap: Option[Long],
       estRows: Option[Long] = None): DataFrame =
     attachDfP(partitionByShingle(ex, estRows), ex.columns.toSeq, cap)
@@ -307,10 +315,20 @@ object DedupQueries {
       .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
       .select("doc_id", "s", "n", "df")
 
+  /** Exact n-gram Jaccard near-dup pairs (j >= 0.8): explode distinct
+    * 3-token shingles, self-join on shingle, count intersections.
+    * Shuffles on shingle keys — at 100 TB this runs AFTER q21's LSH
+    * filter (verify stage); it is exact-by-construction here so the
+    * oracle can replicate it without minhash error. */
   def q22JaccardNeardup(s: SparkSession, dir: String): DataFrame =
     jaccardPairsFrom(shingleCounts(s, dir))
 
-  /** q22's pair core over a (doc_id, s, n) shingle frame.
+  /** q22's pair core over a (doc_id, s, n) shingle frame. */
+  private def jaccardPairsFrom(sh: DataFrame): DataFrame =
+    jaccardPairs(sh, sh, "doc_a", "doc_b", col("a.doc_id") < col("b.doc_id"))
+
+  /** Exact-Jaccard pairs (j >= 0.8) between two (doc_id, s, n) shingle
+    * frames, named `docA`/`docB`, under the extra `residual` conjuncts.
     *
     * Self-join (not group+collect_list combinations): measured equal at
     * sf0.1, and the join form lets AQE split a hot-shingle partition
@@ -319,26 +337,17 @@ object DedupQueries {
     * i ≤ min and u ≥ max), i.e. 5·min ≥ 4·max in exact integers —
     * near-miss pairs die at the join instead of flowing through the
     * pair aggregation. */
-  private def jaccardPairsFrom(sh: DataFrame): DataFrame =
-    // merge hint (r19): over the pin-free scan-based shingle frame the
-    // planner's size estimate (file bytes, blind to the explode's
-    // multiplier) reads the whole exploded table as broadcastable and
-    // flips this self-join to a BroadcastHashJoin — kernel twice, a
-    // corpus-derived broadcast, and no reuse of the shingle-key
-    // exchange. The hint restores the pinned shape's sort-merge join,
-    // whose clustering requirement both sides already satisfy, so the
-    // ONE partitionByShingle exchange is reused and the kernel runs
-    // once in its map stage.
-    sh.as("a").hint("merge")
-      .join(sh.as("b"), col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id") &&
-        col("a.n") * 5 >= col("b.n") * 4 && col("b.n") * 5 >= col("a.n") * 4)
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+  private def jaccardPairs(a: DataFrame, b: DataFrame, docA: String,
+      docB: String, residual: Column*): DataFrame =
+    sharedKeyPairs(a, b, Seq("s"), residual ++ Seq(
+      col("a.n") * 5 >= col("b.n") * 4, col("b.n") * 5 >= col("a.n") * 4): _*)
+      .groupBy(col("a.doc_id").as(docA), col("b.doc_id").as(docB))
       .agg(count(lit(1)).as("i"),
         first(col("a.n")).as("na"), first(col("b.n")).as("nb"))
-      .select(col("doc_a"), col("doc_b"),
+      .select(col(docA), col(docB),
         (col("i").cast("double") / (col("na") + col("nb") - col("i"))).as("j"))
       .filter(col("j") >= 0.8)
-      .select(col("doc_a"), col("doc_b"), round(col("j"), 4).as("jaccard"))
+      .select(col(docA), col(docB), round(col("j"), 4).as("jaccard"))
 
   /** Cross-corpus near-dup — the incremental-ingest dedup gate: an
     * incoming batch (odd doc_ids stand in for the new crawl slice) is
@@ -354,19 +363,8 @@ object DedupQueries {
     * streaming stream-static gate (`Streams.corpusDedupStream`). */
   def q91CrossDedup(s: SparkSession, dir: String): DataFrame = {
     val sh = shingleCounts(s, dir)
-    val corpus = sh.filter(col("doc_id") % 2 === 0)
-    val batch = sh.filter(col("doc_id") % 2 === 1)
-    // merge hint: same broadcast-estimate hazard as [[jaccardPairsFrom]]
-    corpus.as("a").hint("merge")
-      .join(batch.as("b"), col("a.s") === col("b.s") &&
-        col("a.n") * 5 >= col("b.n") * 4 && col("b.n") * 5 >= col("a.n") * 4)
-      .groupBy(col("a.doc_id").as("doc_old"), col("b.doc_id").as("doc_new"))
-      .agg(count(lit(1)).as("i"),
-        first(col("a.n")).as("na"), first(col("b.n")).as("nb"))
-      .select(col("doc_old"), col("doc_new"),
-        (col("i").cast("double") / (col("na") + col("nb") - col("i"))).as("j"))
-      .filter(col("j") >= 0.8)
-      .select(col("doc_old"), col("doc_new"), round(col("j"), 4).as("jaccard"))
+    jaccardPairs(sh.filter(col("doc_id") % 2 === 0),
+      sh.filter(col("doc_id") % 2 === 1), "doc_old", "doc_new")
   }
 
   /** Per-document 64-bit SimHash signature (16 hex chars, md5-portable). */
@@ -495,10 +493,8 @@ object DedupQueries {
           .select(col("m.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
             col("m.h1").as("ah1"), col("m.h2").as("ah2"),
             col("b.h1").as("bh1"), col("b.h2").as("bh2"))
-      } else banded.as("a").hint("merge") // estimate-blind broadcast hazard
-        .join(banded.as("b"),
-          col("a.band") === col("b.band") && col("a.bval") === col("b.bval") &&
-            col("a.doc_id") < col("b.doc_id"))
+      } else sharedKeyPairs(banded, banded, Seq("band", "bval"),
+          col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
           col("a.h1").as("ah1"), col("a.h2").as("ah2"),
           col("b.h1").as("bh1"), col("b.h2").as("bh2"))
@@ -868,21 +864,20 @@ object DedupQueries {
       .select(col("doc_a"), col("doc_b"), round(col("j"), 4).as("jaccard"))
   }
 
-  /** The q100 melt shape, shared by the LSH-candidate verify stages:
-    * melt (doc_a, doc_b) pairs to (pair, member) rows so ONE doc_id
-    * equi-join attaches both members' shingle arrays — (doc_a, doc_b,
-    * sha, shb). `sets` must carry (doc_id, sh).
+  /** The q100 melt shape, shared by the LSH-candidate verify stages and
+    * [[containmentVerify]]: melt (doc_a, doc_b) pairs to (pair, member)
+    * rows so ONE doc_id equi-join attaches both members' shingle arrays
+    * — (doc_a, doc_b, sha, shb). `sets` must carry (doc_id, sh).
     *
-    * r18 note: [[containmentVerify]] replaced this shape with a
-    * member-filtered gated-broadcast two-join and the SAME rewrite was
-    * A/B'd here (round 18, interleaved) — at q126's 140k candidates the
-    * broadcast form wins ~1.5 s, but at q106's 13.7k LSH candidates the
-    * melt wins ~0.5 s (the gate's pin+count+broadcast-build latency
-    * outweighs the small pair-key regroup). The LSH pair generators
+    * r18 note: a member-filtered gated-broadcast two-join was A/B'd
+    * against this shape (round 18, interleaved) — at q126's then 140k
+    * candidates the broadcast form won ~1.5 s, but at q106's 13.7k LSH
+    * candidates the melt won ~0.5 s (the gate's pin+count+broadcast-
+    * build latency outweighs the small pair-key regroup). Every caller
+    * now lives in that small-candidate regime: the LSH pair generators
     * bound their candidate volume by construction (band occupancy /
-    * star mode), so the melt keeps the small-candidate regime these
-    * callers live in; the containment tails keep the broadcast form
-    * for their structurally larger lossless candidate sets. */
+    * star mode), and the containment tails by their pigeonhole hit
+    * threshold (r19). */
   private def attachPairArrays(cands: DataFrame, sets: DataFrame): DataFrame =
     cands
       .select(col("doc_a"), col("doc_b"),
@@ -1214,22 +1209,7 @@ object DedupQueries {
   /** The containment family's exact verify tail (shared by q118b and
     * q126): candidate pairs → attach both capped shingle arrays →
     * row-local intersection → C >= 0.9 rows in q118's output schema.
-    *
-    * r18 shape: the per-doc array table is SEMI-FILTERED to candidate
-    * members first (pair-graph-bounded, ≪ corpus) and then size-gated
-    * through [[graft.operators.DedupOps.gateBroadcast]], so the
-    * candidate stream attaches both arrays through two broadcast hash
-    * joins of ONE shared build — where the previous melt shape
-    * re-shuffled 2·|cands| array-bearing rows through a pair-key
-    * regroup (`attachPairArrays`). Measured at sf0.1 (q126's 140k
-    * candidates for 256 true pairs): isolated verify tail 3.6→2.5 s,
-    * interleaved full-query A/B q126 6.7→5.9 s min-of-3 (round 18;
-    * q118b ±noise — its 86k candidate set is smaller). At
-    * scale the gate demotes a pathological (majority-candidate) corpus
-    * to the deterministic sort-merge fallback instead of a corpus-scale
-    * broadcast. Both hinted sides read the same "size-gated" pin —
-    * registered per query in PlanRegressionSpec (pinBoundAllowed /
-    * boundPinSideCounts). */
+    * The arrays attach through [[attachPairArrays]]'s melt. */
   private def containmentVerify(cands: DataFrame, sh: DataFrame): DataFrame = {
     // r19: back to the q100 MELT shape (r17's), because the pigeonhole
     // hit threshold collapsed the candidate volume ~100× (sf0.1:
@@ -1247,20 +1227,10 @@ object DedupQueries {
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
     val sets = sh.join(melted, Seq("doc_id"), "left_semi")
       .groupBy("doc_id").agg(collect_set("s").as("sh"))
-    val attached = cands
-      .select(col("doc_a"), col("doc_b"),
-        explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-      .join(sets, "doc_id")
-      .groupBy("doc_a", "doc_b")
-      .agg(
-        first(when(col("doc_id") === col("doc_a"), col("sh")),
-          ignoreNulls = true).as("sha"),
-        first(when(col("doc_id") === col("doc_b"), col("sh")),
-          ignoreNulls = true).as("shb"))
     val i = size(array_intersect(col("sha"), col("shb")))
     val na = size(col("sha"))
     val nb = size(col("shb"))
-    attached
+    attachPairArrays(cands, sets)
       .select(
         when(na <= nb, col("doc_a")).otherwise(col("doc_b")).as("doc_small"),
         when(na <= nb, col("doc_b")).otherwise(col("doc_a")).as("doc_big"),

@@ -33,8 +33,10 @@ import graft.index.IvfIndex
   *    own QueryExecution, then writes its formatted FINAL adaptive plan
   *    (runtime exchange reuse included) to
   *    `plans/<tag>/<qprefix>_<suffix>.txt` (an absolute `<tag>` is used
-  *    as is); a key is a registry query or `seamcapped`, the containment
-  *    family's pin-free shingle pipeline;
+  *    as is), with the numbers a run assigns (expression ids, exchange
+  *    `plan_id`s, RDD ids) blanked, so two runs' files diff clean; a key
+  *    is a registry query or `seamcapped`, the containment family's
+  *    pin-free shingle pipeline;
   *  - `serve <sfDir> [reps]` — the single-query search path split into
   *    planning, page job and backfill job, plus floors, a fused variant
   *    and end-to-end AQE off/on; one JSON line. Then a write phase: a
@@ -191,11 +193,18 @@ object Probe {
       // final adaptive one (a write or count would plan a fresh one)
       df.queryExecution.toRdd.foreach(_ => ())
       val out = outDir.resolve(s"${key.takeWhile(_ != '_')}_$suffix.txt")
-      Files.write(out, df.queryExecution.explainString(
-        ExplainMode.fromString("formatted")).getBytes("UTF-8"))
+      Files.write(out, runNeutral(df.queryExecution.explainString(
+        ExplainMode.fromString("formatted"))).getBytes("UTF-8"))
       println(s"[plan] $key -> $out")
     }
   }
+
+  /** `plan` with the numbers a run assigns blanked: expression ids
+    * (`doc_id#655L` → `doc_id#L`), exchange `plan_id=`s and the RDD ids
+    * a pinned scan names. */
+  private def runNeutral(plan: String): String =
+    plan.replaceAll("#\\d+", "#").replaceAll("plan_id=\\d+", "plan_id=")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[]")
 
   /** Where the time of one unbatched [[SearchService.search]] goes. The
     * reference serves a query in ~10 ms from one warm process and one

@@ -240,10 +240,10 @@ object IvfBinarySource {
     rewriteLists(spark, path, minFiles = 2, drop = _ => false, only = None)
 
   /** Targeted document deletion — the index half of the reference's
-    * document DELETE cascade (server/delete.go:214-288;
-    * ParquetStore.cascadeDelete owns the relational half), for ids the
-    * driver holds. Drops every row whose `vec_id / base` is in `docIds`,
-    * with `base` the ingest path's vec id encoding (vec_id =
+    * document DELETE cascade (server/delete.go:214-288; the relational
+    * half is [[ParquetStore.deleteKeys]] / [[ParquetStore.replaceBuckets]]),
+    * for ids the driver holds. Drops every row whose `vec_id / base` is
+    * in `docIds`, with `base` the ingest path's vec id encoding (vec_id =
     * doc_id·base + chunk_id, [[graft.streaming.Streams.ChunkVecIdBase]];
     * `base` 1 deletes by vec id). The doc ids map to the contiguous
     * envelope [min·base, max·base + base − 1], so the zone maps skip every

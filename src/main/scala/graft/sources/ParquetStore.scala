@@ -248,18 +248,3 @@ final case class ParquetStore(path: String, keyCol: String, nBuckets: Int = 64,
     Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)
       .filter(_.isDirectory).map(_.getName).toSet
 }
-
-object ParquetStore {
-
-  /** S8 cascading delete across an ownership tree (reference FK cascade,
-    * database/model.go:32,45): delete parents matching `parentPred`, then
-    * delete the children holding their FKs. Parent and child stores
-    * bucketed with the same hash are co-partitioned, so the child pass
-    * touches exactly the buckets of the deleted keys. */
-  def cascadeDelete(spark: SparkSession, parent: ParquetStore,
-      child: ParquetStore, parentPred: Column): Unit = {
-    val doomed = Pins.pin(parent.read(spark).filter(parentPred).select(col(parent.keyCol)))
-    parent.deleteKeys(doomed)
-    child.deleteKeys(doomed.withColumnRenamed(parent.keyCol, child.keyCol))
-  }
-}

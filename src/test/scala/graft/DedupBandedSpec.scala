@@ -85,4 +85,19 @@ class DedupBandedSpec extends AnyFunSuite {
     assert(survBanded.collect().map(_.getLong(0)).sorted.toSeq ==
       surv.collect().map(_.getLong(0)).sorted.toSeq)
   }
+
+  test("the band and shingle pair joins plan sort-merge, never broadcast") {
+    // the planner sizes these explode frames from the parquet bytes
+    // before the explode, so on a small corpus each pair join would plan
+    // as a BroadcastHashJoin without DedupQueries.sharedKeyPairs' hint;
+    // sparkPlan (pre-exchange-insertion) names the strategy
+    val wrong = Seq("q21_minhash_lsh", "q21b_minhash_fast", "q22_jaccard_neardup",
+      "q91_cross_dedup", "q24b_simhash_banded").flatMap { key =>
+      val plan = SparkEntry.queries(key)(spark, SparkSuite.sf0001)
+        .queryExecution.sparkPlan.toString
+      if (plan.contains("SortMergeJoin") && !plan.contains("BroadcastHashJoin")) None
+      else Some(s"$key:\n$plan")
+    }
+    assert(wrong.isEmpty, wrong.mkString("\n"))
+  }
 }

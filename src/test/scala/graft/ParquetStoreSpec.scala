@@ -62,27 +62,6 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(out(2).getDouble(2) == 0.5)
   }
 
-  test("cascading delete removes parent rows and co-partitioned children") {
-    val parentStore = ParquetStore(tmp(), "doc_id", nBuckets = 8)
-    parentStore.create(docs)
-    val emb = Tables.load(spark, SparkSuite.sf0001, "embeddings")
-      .withColumnRenamed("vec_id", "doc_id") // FK = doc id (1:1 in testdata)
-    val childStore = ParquetStore(tmp(), "doc_id", nBuckets = 8)
-    childStore.create(emb)
-
-    val nDoomedDocs = docs.filter(col("source") === "src0").count()
-    assert(nDoomedDocs > 0)
-    ParquetStore.cascadeDelete(spark, parentStore, childStore, col("source") === "src0")
-
-    val pOut = parentStore.read(spark)
-    assert(pOut.count() == docs.count() - nDoomedDocs)
-    assert(pOut.filter(col("source") === "src0").count() == 0)
-    // child rows for deleted parents are gone; survivors match the
-    // oracle-checked q20 anti-join semantics
-    val expected = Queries.q20CascadeDelete(spark, SparkSuite.sf0001).count()
-    assert(childStore.read(spark).count() == expected)
-  }
-
   test("delete clears fully-doomed buckets (dynamic overwrite can't) and survives a full wipe") {
     import spark.implicits._
     // 3 keys in 16 buckets → each key is almost surely alone in its

@@ -57,10 +57,17 @@ class ProbeSpec extends AnyFunSuite {
     val outDir = java.nio.file.Files.createTempDirectory("graft-probe-plan")
     try {
       stdoutOf("plan", dir, outDir.toString, "spec", query, "seamcapped")
-      Seq("q04_spec.txt", "seamcapped_spec.txt").foreach { f =>
-        val p = outDir.resolve(f)
-        assert(java.nio.file.Files.exists(p), f)
-        assert(java.nio.file.Files.readString(p).contains("isFinalPlan=true"), f)
+      stdoutOf("plan", dir, outDir.toString, "again", query, "seamcapped")
+      Seq("q04", "seamcapped").foreach { key =>
+        val Seq(first, second) = Seq("spec", "again").map { suffix =>
+          val p = outDir.resolve(s"${key}_$suffix.txt")
+          assert(java.nio.file.Files.exists(p), p)
+          java.nio.file.Files.readString(p)
+        }
+        assert(first.contains("isFinalPlan=true"), key)
+        // a second run assigns new expression and exchange ids; the file
+        // blanks them, so the two runs diff clean
+        assert(first == second, s"$key:\n$first\n---\n$second")
       }
     } finally org.apache.commons.io.FileUtils.deleteDirectory(outDir.toFile)
   }
